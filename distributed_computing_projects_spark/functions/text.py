@@ -240,28 +240,6 @@ def minhash_sig_onepass(hashes_arr: str) -> str:
     return f"aggregate({hashes_arr}, {init}, (acc, h) -> {step})"
 
 
-def simhash_onepass(hashes_arr: str) -> str:
-    """Spark-only single-pass SimHash: one fold accumulates all
-    SIMHASH_BITS bit-counters (the per-bit form of :func:`simhash`
-    re-evaluates ``hashes_arr`` 32x), then a constant-size fold turns
-    counter signs into the fingerprint. Same integer math as
-    :func:`simhash` — the oracle keeps the per-bit form."""
-    # NB: the `>>` operator does not parse inside Spark SQL lambdas —
-    # shiftright()/shiftleft() function forms only.
-    counts = (
-        f"aggregate({hashes_arr}, array_repeat(CAST(0 AS BIGINT), {SIMHASH_BITS}),"
-        f" (acc, h) -> zip_with(acc, sequence(0, {SIMHASH_BITS - 1}), (a, j) ->"
-        f" a + CASE WHEN shiftright(h, CAST(j AS INT)) & 1 = 1 THEN 1 ELSE -1 END))"
-    )
-    fold_bits = (
-        f"aggregate(zip_with(C, sequence(0, {SIMHASH_BITS - 1}), (c, j) ->"
-        f" CASE WHEN c >= 0 THEN shiftleft(CAST(1 AS BIGINT), CAST(j AS INT))"
-        f" ELSE CAST(0 AS BIGINT) END), CAST(0 AS BIGINT), (a, x) -> a + x)"
-    )
-    # bind the counters array once via a singleton-transform
-    return f"transform(array({counts}), C -> {fold_bits})[0]"
-
-
 def simhash(hashes_arr: str, dialect: str) -> str:
     """Weighted SimHash over 32-bit token hashes: bit j of the output is
     the sign of sum(+1/-1 for bit j of each token hash). All-integer

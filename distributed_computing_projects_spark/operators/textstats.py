@@ -74,15 +74,6 @@ def lang_pred(tokens_arr: str, dialect: str) -> str:
     )
 
 
-def token_count(df: DataFrame, text_col: str) -> DataFrame:
-    toks = T.tokens(text_col, "spark")
-    return df.select(
-        "*",
-        F.expr(f"size({toks})").alias("n_tokens"),
-        F.expr(f"size(array_distinct({toks}))").alias("n_distinct_tokens"),
-    )
-
-
 def quality_scores(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """Length / punctuation / stopword-ratio quality features.
 

@@ -10,6 +10,7 @@ values after sorting columns by name.
 
 from __future__ import annotations
 
+import functools
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
@@ -45,6 +46,7 @@ def query(name: str, oracle: str | None = None, headline: bool = False,
             # session (see _byte_coalesced.py for the sweep and the
             # scale argument); partitioning never changes results,
             # and the caller's base session conf stays untouched
+            @functools.wraps(fn)
             def run(spark, sf_dir, _fn=fn):
                 from distributed_computing_projects_spark.session import (
                     byte_coalesced,

@@ -7,137 +7,158 @@ with `python tools/matrix_rotation.py order` after code changes;
 tests/test_matrix_rotation.py fails until this file is current.
 """
 
-GENERATED_FROM_ROUNDS = [1, 2, 3, 4, 5, 6, 7, 8, 9, 10, 11, 12, 13, 14, 15]
+GENERATED_FROM_ROUNDS = [1, 2, 3, 4, 5, 6, 7, 8, 9, 10, 11, 12, 13, 14, 15, 16, 17]
 
 MATRIX_ORDER = [
-    'delta_column_mapping_scan',  # never green
-    'delta_dv_delete_roundtrip',  # never green
-    'delta_dv_table_scan',  # never green
-    'delta_incremental_scan',  # never green
-    'delta_optimize_roundtrip',  # never green
-    'delta_restore_roundtrip',  # never green
-    'delta_schema_evolution_scan',  # never green
-    'delta_vacuum_roundtrip',  # never green
-    'hudi_clean_roundtrip',  # never green
-    'hudi_mor_compact_roundtrip',  # never green
-    'hudi_mor_snapshot_scan',  # never green
-    'iceberg_expire_roundtrip',  # never green
-    'iceberg_orc_mixed_scan',  # never green
-    'iceberg_pos_delete_roundtrip',  # never green
-    'iceberg_pos_delete_scan',  # never green
-    'iceberg_rename_scan',  # never green
-    'streaming_delta_sink_ingest',  # never green
-    'streaming_iceberg_sink_ingest',  # never green
-    'graph_pagerank_topk',  # changed since green r11
-    'jsonl_xz_scan',  # changed since green r13
-    'jsonl_zst_scan',  # changed since green r13
-    'avro_events_roundtrip',  # changed since green r14
-    'delta_sink_roundtrip',  # changed since green r15
-    'delta_table_scan',  # changed since green r15
-    'delta_time_travel_scan',  # changed since green r15
-    'hudi_table_scan',  # changed since green r15
-    'hudi_time_travel_scan',  # changed since green r15
-    'iceberg_sink_roundtrip',  # changed since green r15
-    'iceberg_snapshot_scan',  # changed since green r15
-    'iceberg_table_scan',  # changed since green r15
-    'jsonl_zst_seekable_scan',  # changed since green r15
-    'pbstream_events_scan',  # changed since green r15
-    'sqlite_events_scan',  # changed since green r15
-    'tfrecord_scan',  # changed since green r15
-    'wat_link_pagerank',  # changed since green r15
-    'lsh_bucket_label_purity',  # green r8
-    'maplejuice_wordcount',  # green r8
-    'order_fulfillment_latency',  # green r8
-    'orders_by_month',  # green r8
-    'pack_documents',  # green r8
-    'q13_order_count_distribution',  # green r8
-    'q14_promo_revenue',  # green r8
-    'q17_small_quantity_revenue',  # green r8
-    'q18_large_volume_orders',  # green r8
-    'streaming_click_purchase_join',  # green r8
-    'streaming_dedup_events',  # green r8
-    'streaming_enriched_category_totals',  # green r8
-    'streaming_events_hourly',  # green r8
-    'bpe_encode_tokens',  # green r9
-    'bpe_train_merges',  # green r9
-    'html_extract_text',  # green r9
+    'html_extract_text',  # changed since green r9
+    'url_dedup_groups',  # changed since green r9
+    'boilerplate_ngrams',  # changed since green r10
+    'corpus_quality_gate',  # changed since green r10
+    'doc_fingerprint',  # changed since green r10
+    'gopher_quality_flags',  # changed since green r10
+    'language_id',  # changed since green r10
+    'pii_redact',  # changed since green r10
+    'repetition_stats',  # changed since green r10
+    'text_quality',  # changed since green r10
+    'cms_token_frequencies',  # changed since green r11
+    'decontaminate_bloom',  # changed since green r11
+    'decontaminate_ngram_hits',  # changed since green r11
+    'doc_winnow_fingerprint',  # changed since green r11
+    'lm_bigram_counts',  # changed since green r11
+    'lm_ccnet_buckets',  # changed since green r11
+    'lm_perplexity_rank',  # changed since green r11
+    'sketch_distinct_tokens',  # changed since green r11
+    'sketch_union_distinct',  # changed since green r11
+    'streaming_bloom_ingest',  # changed since green r11
+    'streaming_kmv_ingest',  # changed since green r11
+    'streaming_lm_scoring',  # changed since green r11
+    'ann_bruteforce_topk',  # changed since green r12
+    'ann_ivf_incremental_topk',  # changed since green r12
+    'ann_ivf_topk',  # changed since green r12
+    'ann_ivf_trained_recall',  # changed since green r12
+    'ann_ivf_trained_topk',  # changed since green r12
+    'ann_ivf_twolevel_recall',  # changed since green r12
+    'ann_ivf_twolevel_topk',  # changed since green r12
+    'ann_ivfpq_store_topk',  # changed since green r12
+    'ann_ivfpq_topk',  # changed since green r12
+    'ann_lsh_incremental_topk',  # changed since green r12
+    'ann_lsh_topk',  # changed since green r12
+    'ann_pq_topk',  # changed since green r12
+    'ann_recall',  # changed since green r12
+    'decontaminate_eval',  # changed since green r12
+    'dedup_clusters',  # changed since green r12
+    'dedup_edit_distance',  # changed since green r12
+    'dedup_embedding_cosine',  # changed since green r12
+    'dedup_embedding_cosine_fine',  # changed since green r12
+    'dedup_exact',  # changed since green r12
+    'dedup_incremental',  # changed since green r12
+    'dedup_incremental_store',  # changed since green r12
+    'dedup_lines_c4',  # changed since green r12
+    'dedup_minhash_lsh',  # changed since green r12
+    'dedup_ngram_jaccard',  # changed since green r12
+    'dedup_semantic',  # changed since green r12
+    'dedup_semantic_twolevel',  # changed since green r12
+    'dedup_simhash',  # changed since green r12
+    'dedup_survivors',  # changed since green r12
+    'knn_join_recall',  # changed since green r12
+    'knn_join_topk',  # changed since green r12
+    'knn_label_accuracy',  # changed since green r12
+    'minhash_signature',  # changed since green r12
+    'quality_classifier_confusion',  # changed since green r12
+    'quality_classifier_weights',  # changed since green r12
+    'simhash_fingerprint',  # changed since green r12
+    'streaming_ann_ingest',  # changed since green r12
+    'streaming_dedup_ingest',  # changed since green r12
+    'streaming_dedup_ingest_epochs',  # changed since green r12
+    'streaming_ivfpq_ingest',  # changed since green r12
+    'training_corpus_summary',  # changed since green r13
+    'training_corpus_v2',  # changed since green r13
+    'wikidump_nowiki_plain_text',  # changed since green r13
+    'wikidump_plain_text',  # changed since green r13
+    'dataset_split_counts',  # changed since green r14
+    'stratified_sample_counts',  # changed since green r14
+    'tfidf_top_terms',  # changed since green r14
+    'token_stats',  # changed since green r14
+    'token_stats_bpe',  # changed since green r14
+    'training_corpus_wire',  # changed since green r14
+    'vocab_coverage',  # changed since green r14
+    'arrow_events_roundtrip',  # changed since green r15
+    'bson_events_scan',  # changed since green r15
+    'cbor_events_scan',  # changed since green r15
+    'doc_length_histogram',  # changed since green r15
+    'jsonl_bgzf_scan',  # changed since green r15
+    'jsonl_xz_blocks_scan',  # changed since green r15
+    'msgpack_events_scan',  # changed since green r15
+    'sketch_hll_tokens',  # changed since green r15
+    'sketch_intersect_distinct',  # changed since green r15
+    'xlsx_events_roundtrip',  # changed since green r15
+    'maplejuice_wordcount',  # pre-snapshot green r17 — conservative re-verify
+    'avro_events_roundtrip',  # pre-snapshot green r17 — conservative re-verify
+    'bpe_encode_tokens',  # pre-snapshot green r17 — conservative re-verify
+    'bpe_train_merges',  # pre-snapshot green r17 — conservative re-verify
+    'delta_column_mapping_scan',  # pre-snapshot green r17 — conservative re-verify
+    'delta_dv_delete_roundtrip',  # pre-snapshot green r17 — conservative re-verify
+    'delta_dv_table_scan',  # pre-snapshot green r17 — conservative re-verify
+    'delta_incremental_scan',  # pre-snapshot green r17 — conservative re-verify
+    'delta_optimize_roundtrip',  # pre-snapshot green r17 — conservative re-verify
+    'delta_restore_roundtrip',  # pre-snapshot green r17 — conservative re-verify
+    'delta_schema_evolution_scan',  # pre-snapshot green r17 — conservative re-verify
+    'delta_sink_roundtrip',  # pre-snapshot green r17 — conservative re-verify
+    'delta_table_scan',  # pre-snapshot green r17 — conservative re-verify
+    'delta_time_travel_scan',  # pre-snapshot green r17 — conservative re-verify
+    'delta_vacuum_roundtrip',  # pre-snapshot green r17 — conservative re-verify
+    'graph_pagerank_topk',  # pre-snapshot green r17 — conservative re-verify
+    'hudi_clean_roundtrip',  # pre-snapshot green r17 — conservative re-verify
+    'hudi_mor_compact_roundtrip',  # pre-snapshot green r17 — conservative re-verify
+    'hudi_mor_snapshot_scan',  # pre-snapshot green r17 — conservative re-verify
+    'hudi_table_scan',  # pre-snapshot green r17 — conservative re-verify
+    'hudi_time_travel_scan',  # pre-snapshot green r17 — conservative re-verify
+    'iceberg_expire_roundtrip',  # pre-snapshot green r17 — conservative re-verify
+    'iceberg_orc_mixed_scan',  # pre-snapshot green r17 — conservative re-verify
+    'iceberg_pos_delete_roundtrip',  # pre-snapshot green r17 — conservative re-verify
+    'iceberg_pos_delete_scan',  # pre-snapshot green r17 — conservative re-verify
+    'iceberg_rename_scan',  # pre-snapshot green r17 — conservative re-verify
+    'iceberg_sink_roundtrip',  # pre-snapshot green r17 — conservative re-verify
+    'iceberg_snapshot_scan',  # pre-snapshot green r17 — conservative re-verify
+    'iceberg_table_scan',  # pre-snapshot green r17 — conservative re-verify
+    'jsonl_xz_scan',  # pre-snapshot green r17 — conservative re-verify
+    'jsonl_zst_scan',  # pre-snapshot green r17 — conservative re-verify
+    'jsonl_zst_seekable_scan',  # pre-snapshot green r17 — conservative re-verify
+    'lsh_bucket_label_purity',  # pre-snapshot green r17 — conservative re-verify
+    'order_fulfillment_latency',  # pre-snapshot green r17 — conservative re-verify
+    'orders_by_month',  # pre-snapshot green r17 — conservative re-verify
+    'pack_documents',  # pre-snapshot green r17 — conservative re-verify
+    'pbstream_events_scan',  # pre-snapshot green r17 — conservative re-verify
+    'q13_order_count_distribution',  # pre-snapshot green r17 — conservative re-verify
+    'q14_promo_revenue',  # pre-snapshot green r17 — conservative re-verify
+    'q17_small_quantity_revenue',  # pre-snapshot green r17 — conservative re-verify
+    'q18_large_volume_orders',  # pre-snapshot green r17 — conservative re-verify
+    'sqlite_events_scan',  # pre-snapshot green r17 — conservative re-verify
+    'streaming_click_purchase_join',  # pre-snapshot green r17 — conservative re-verify
+    'streaming_dedup_events',  # pre-snapshot green r17 — conservative re-verify
+    'streaming_delta_sink_ingest',  # pre-snapshot green r17 — conservative re-verify
+    'streaming_enriched_category_totals',  # pre-snapshot green r17 — conservative re-verify
+    'streaming_events_hourly',  # pre-snapshot green r17 — conservative re-verify
+    'streaming_iceberg_sink_ingest',  # pre-snapshot green r17 — conservative re-verify
+    'tfrecord_scan',  # pre-snapshot green r17 — conservative re-verify
+    'wat_link_pagerank',  # pre-snapshot green r17 — conservative re-verify
     'multimodal_video_decode',  # green r9
     'multimodal_video_frame_sample',  # green r9
     'skewed_join_salted',  # green r9
-    'url_dedup_groups',  # green r9
     'zorder_layout_quality',  # green r9
-    'boilerplate_ngrams',  # green r10
-    'corpus_quality_gate',  # green r10
-    'doc_fingerprint',  # green r10
-    'gopher_quality_flags',  # green r10
-    'language_id',  # green r10
     'multimodal_mp3_vbr',  # green r10
-    'pii_redact',  # green r10
-    'repetition_stats',  # green r10
     'streaming_user_running_totals',  # green r10
-    'text_quality',  # green r10
     'chunk_documents',  # green r11
-    'cms_token_frequencies',  # green r11
     'corpus_shuffle_head',  # green r11
-    'decontaminate_bloom',  # green r11
-    'decontaminate_ngram_hits',  # green r11
-    'doc_winnow_fingerprint',  # green r11
     'grep',  # green r11
     'grep_count',  # green r11
-    'lm_bigram_counts',  # green r11
-    'lm_ccnet_buckets',  # green r11
-    'lm_perplexity_rank',  # green r11
     'multimodal_mp3_stream_stats',  # green r11
-    'sketch_distinct_tokens',  # green r11
-    'sketch_union_distinct',  # green r11
-    'streaming_bloom_ingest',  # green r11
-    'streaming_kmv_ingest',  # green r11
-    'streaming_lm_scoring',  # green r11
     'streaming_sliding_counts',  # green r11
     'streaming_user_sessions',  # green r11
     'text_nfc_normalize',  # green r11
     'user_running_totals_final',  # green r11
-    'ann_bruteforce_topk',  # green r12
-    'ann_ivf_incremental_topk',  # green r12
-    'ann_ivf_topk',  # green r12
-    'ann_ivf_trained_recall',  # green r12
-    'ann_ivf_trained_topk',  # green r12
-    'ann_ivf_twolevel_recall',  # green r12
-    'ann_ivf_twolevel_topk',  # green r12
-    'ann_ivfpq_store_topk',  # green r12
-    'ann_ivfpq_topk',  # green r12
-    'ann_lsh_incremental_topk',  # green r12
-    'ann_lsh_topk',  # green r12
-    'ann_pq_topk',  # green r12
-    'ann_recall',  # green r12
-    'decontaminate_eval',  # green r12
-    'dedup_clusters',  # green r12
-    'dedup_edit_distance',  # green r12
-    'dedup_embedding_cosine',  # green r12
-    'dedup_embedding_cosine_fine',  # green r12
-    'dedup_exact',  # green r12
-    'dedup_incremental',  # green r12
-    'dedup_incremental_store',  # green r12
-    'dedup_lines_c4',  # green r12
-    'dedup_minhash_lsh',  # green r12
-    'dedup_ngram_jaccard',  # green r12
-    'dedup_semantic',  # green r12
-    'dedup_semantic_twolevel',  # green r12
-    'dedup_simhash',  # green r12
-    'dedup_survivors',  # green r12
-    'knn_join_recall',  # green r12
-    'knn_join_topk',  # green r12
-    'knn_label_accuracy',  # green r12
-    'minhash_signature',  # green r12
     'orc_events_roundtrip',  # green r12
     'parquet_zstd_roundtrip',  # green r12
-    'quality_classifier_confusion',  # green r12
-    'quality_classifier_weights',  # green r12
-    'simhash_fingerprint',  # green r12
-    'streaming_ann_ingest',  # green r12
-    'streaming_dedup_ingest',  # green r12
-    'streaming_dedup_ingest_epochs',  # green r12
-    'streaming_ivfpq_ingest',  # green r12
     'wikidump_extract_pages',  # green r12
     'grep_zst_logs',  # green r13
     'multimodal_adpcm_decode',  # green r13
@@ -172,17 +193,12 @@ MATRIX_ORDER = [
     'pdf_tounicode_extract_text',  # green r13
     'streaming_avro_ingest',  # green r13
     'streaming_jsonl_zst_ingest',  # green r13
-    'training_corpus_summary',  # green r13
-    'training_corpus_v2',  # green r13
     'webdataset_scan',  # green r13
-    'wikidump_nowiki_plain_text',  # green r13
-    'wikidump_plain_text',  # green r13
     'asof_last_click_before_purchase',  # green r14
     'condorcet_round1',  # green r14
     'condorcet_winner',  # green r14
     'condorcet_wins',  # green r14
     'customers_without_orders',  # green r14
-    'dataset_split_counts',  # green r14
     'epub_extract_text',  # green r14
     'mbox_extract_emails',  # green r14
     'odt_extract_text',  # green r14
@@ -201,18 +217,12 @@ MATRIX_ORDER = [
     'repeat_customers_setop',  # green r14
     'returnflag_rollup',  # green r14
     'sql_nation_revenue_rank',  # green r14
-    'stratified_sample_counts',  # green r14
     'streaming_arrow_ingest',  # green r14
     'streaming_wet_ingest',  # green r14
     'supplier_part_stats',  # green r14
     'suppliers_with_returns',  # green r14
     'tail_n',  # green r14
-    'tfidf_top_terms',  # green r14
-    'token_stats',  # green r14
-    'token_stats_bpe',  # green r14
     'top3_orders_per_customer',  # green r14
-    'training_corpus_wire',  # green r14
-    'vocab_coverage',  # green r14
     'warc_content_encoded_responses',  # green r14
     'warc_extract_responses',  # green r14
     'warc_gz_extract_responses',  # green r14
@@ -221,18 +231,11 @@ MATRIX_ORDER = [
     'wet_zst_extract_conversions',  # green r14
     'wine_csv_agg',  # green r14
     'zip_archive_scan',  # green r14
-    'arrow_events_roundtrip',  # green r15
-    'bson_events_scan',  # green r15
-    'cbor_events_scan',  # green r15
-    'doc_length_histogram',  # green r15
     'docx_extract_text',  # green r15
     'events_hourly',  # green r15
     'events_props_json',  # green r15
     'grep_logs',  # green r15
-    'jsonl_bgzf_scan',  # green r15
     'jsonl_events_agg',  # green r15
-    'jsonl_xz_blocks_scan',  # green r15
-    'msgpack_events_scan',  # green r15
     'pptx_extract_text',  # green r15
     'q15_top_supplier',  # green r15
     'q16_supplier_part_counts',  # green r15
@@ -245,8 +248,6 @@ MATRIX_ORDER = [
     'range_join_clicks_before_purchase',  # green r15
     'rtf_extract_text',  # green r15
     'seekable_sink_roundtrip',  # green r15
-    'sketch_hll_tokens',  # green r15
-    'sketch_intersect_distinct',  # green r15
     'sketch_value_quantiles',  # green r15
     'streaming_cbor_ingest',  # green r15
     'streaming_jsonl_agg',  # green r15
@@ -257,10 +258,9 @@ MATRIX_ORDER = [
     'wat_extract_links',  # green r15
     'wine_filter_agg',  # green r15
     'wordcount',  # green r15
-    'xlsx_events_roundtrip',  # green r15
 ]
 
 # Urgent queries past the driver's row budget this round: no
 # driver row until next round; oracle-verified in pytest instead
 # (tests/test_matrix_rotation.py::test_overflow_queries_verify).
-MATRIX_OVERFLOW = []
+MATRIX_OVERFLOW = ['knn_join_recall', 'knn_join_topk', 'knn_label_accuracy', 'minhash_signature', 'quality_classifier_confusion', 'quality_classifier_weights', 'simhash_fingerprint', 'streaming_ann_ingest', 'streaming_dedup_ingest', 'streaming_dedup_ingest_epochs', 'streaming_ivfpq_ingest', 'training_corpus_summary', 'training_corpus_v2', 'wikidump_nowiki_plain_text', 'wikidump_plain_text', 'dataset_split_counts', 'stratified_sample_counts', 'tfidf_top_terms', 'token_stats', 'token_stats_bpe', 'training_corpus_wire', 'vocab_coverage', 'arrow_events_roundtrip', 'bson_events_scan', 'cbor_events_scan', 'doc_length_histogram', 'jsonl_bgzf_scan', 'jsonl_xz_blocks_scan', 'msgpack_events_scan', 'sketch_hll_tokens', 'sketch_intersect_distinct', 'xlsx_events_roundtrip']
