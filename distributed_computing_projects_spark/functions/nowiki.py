@@ -7,14 +7,14 @@ backref-free single-pass ``regexp_replace`` chain cannot express
 "leave this span alone" (functions/wikitext.py module doc), so this
 stage brackets the chain instead:
 
-1. :func:`protect` (Arrow ``mapInPandas``): pull every nowiki span
+1. :func:`protect` (Arrow row stage): pull every nowiki span
    out of the text, leaving an indexed private-use-area sentinel
    token (``\\ue000<i>\\ue001`` — PUA characters never occur in a
    text corpus and no stripping rule touches them); span contents
    ride alongside in an ``array<string>`` column.
 2. the unchanged SQL strip chain runs on the protected text — the
    sentinels flow through every rule untouched;
-3. :func:`restore` (Arrow ``mapInPandas``): substitute each span's
+3. :func:`restore` (Arrow row stage): substitute each span's
    literal content back for its sentinel.
 
 Whitespace INSIDE a protected span survives verbatim (MediaWiki
@@ -30,9 +30,7 @@ the span array stays row-local. Reference parity: extension surface
 from __future__ import annotations
 
 import re
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (
     ArrayType,
@@ -40,6 +38,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from distributed_computing_projects_spark.operators.spread import flat_map_rows
 
 _SENT_A = ""
 _SENT_B = ""
@@ -88,36 +88,26 @@ def protect(df: DataFrame, col: str,
         list(df.schema.fields)
         + [StructField(spans_col, ArrayType(StringType()))]
     )
-    names = [f.name for f in df.schema.fields]
+    at = df.columns.index(col)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            pairs = [_protect_one(t) for t in pdf[col]]
-            out = pdf[names].copy()
-            out[col] = [p[0] for p in pairs]
-            out[spans_col] = [p[1] for p in pairs]
-            yield out
+    def run(*row):
+        text, spans = _protect_one(row[at])
+        yield (*row[:at], text, *row[at + 1:], spans)
 
-    return df.mapInPandas(run, schema=schema)
+    return flat_map_rows(df, run, schema)
 
 
 def restore(df: DataFrame, col: str,
             spans_col: str = "nowiki_spans") -> DataFrame:
     """Sentinels in ``col`` replaced by their literal span contents;
     ``spans_col`` dropped."""
-    names = [f.name for f in df.schema.fields if f.name != spans_col]
-    schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}"
-        for f in df.schema.fields if f.name != spans_col
-    )
+    names = [c for c in df.columns if c != spans_col]
+    schema = StructType([df.schema[n] for n in names])
+    at = names.index(col)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = pdf[names].copy()
-            out[col] = [
-                _restore_one(t, list(s) if s is not None else [])
-                for t, s in zip(pdf[col], pdf[spans_col])
-            ]
-            yield out
+    def run(*row):
+        *kept, spans = row
+        kept[at] = _restore_one(kept[at], spans or [])
+        yield kept
 
-    return df.mapInPandas(run, schema=schema)
+    return flat_map_rows(df.select(*names, spans_col), run, schema)

@@ -198,10 +198,11 @@ def train(
     sample = emb.filter(F.col(id_col) % sample_mod == 0).select(
         F.col(id_col).alias("id"), F.col(vec_col).alias("v")
     )
-    if n_iters > 0:
-        probe = sample.limit(MAX_DRIVER_TRAIN_ROWS + 1).collect()
-        if len(probe) <= MAX_DRIVER_TRAIN_ROWS:
-            return _train_local(probe, n_iters)
+    # count before collecting: the distributed path below must not
+    # pull up to MAX_DRIVER_TRAIN_ROWS + 1 sample rows to the driver
+    if n_iters > 0 and (sample.limit(MAX_DRIVER_TRAIN_ROWS + 1).count()
+                        <= MAX_DRIVER_TRAIN_ROWS):
+        return _train_local(sample.collect(), n_iters)
     cents: list[tuple[int, list[float]]] | None = None
     for _ in range(n_iters):
         cell = (

@@ -35,7 +35,7 @@ the decode path differentially, not to compete with libjpeg.
 
 Per-bit Python Huffman decode is the deliberate simple choice: the
 per-image cost at fixture scale is dominated by header parsing, and
-inside ``mapInPandas`` each image stays within one Arrow batch.
+inside the Arrow row stage each image stays within one Arrow batch.
 Reference parity note: the reference has no media decode at all; this
 is BASELINE.json scale-extension surface (SURVEY.md LLM-pipeline
 operators).

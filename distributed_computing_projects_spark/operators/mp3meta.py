@@ -26,13 +26,10 @@ encoder pretense; the scanner is what is under test.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
-from distributed_computing_projects_spark.operators.spread import spread
+from distributed_computing_projects_spark.operators.spread import (
+    flat_map_rows, prefix_payloads)
 
 # bitrate tables in kbps, indexed [1..14] (0 = free format: outside
 # subset; 15 = reserved). Keyed by (version_group, layer) where
@@ -215,38 +212,25 @@ def mp3_payloads(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     an ID3v1 trailer so both skip paths always run. Frame bodies are
     0xAA filler — the scanner never reads them, which is the point."""
 
-    def _encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, payloads = [], []
-            for i, text in zip(pdf["id"], pdf["text"]):
-                raw = text.encode("utf-8")[:MP3_META_BYTES]
-                if len(raw) < MP3_META_BYTES:
-                    continue
-                br_idx = 1 + raw[0] % 14
-                n_frames = 1 + raw[1] % 7
-                sr_idx = raw[2] % 3
-                padding = raw[3] % 2
-                hdr = bytes([
-                    0xFF,
-                    0xE0 | (3 << 3) | (1 << 1) | 1,  # MPEG1, L3, no CRC
-                    (br_idx << 4) | (sr_idx << 2) | (padding << 1),
-                    0x00,
-                ])
-                size, _br, _sr, _per = _frame_at(hdr, 0)
-                frame = hdr + b"\xaa" * (size - 4)
-                payloads.append(
-                    b"ID3\x04\x00\x00" + b"\x00\x00\x00\x0d"
-                    + b"\x00" * 13
-                    + frame * n_frames
-                    + b"TAG" + b"\x00" * 125
-                )
-                ids.append(i)
-            yield pd.DataFrame({"id": ids, "payload": payloads})
+    def build(i, raw):
+        br_idx = 1 + raw[0] % 14
+        n_frames = 1 + raw[1] % 7
+        sr_idx = raw[2] % 3
+        padding = raw[3] % 2
+        hdr = bytes([
+            0xFF,
+            0xE0 | (3 << 3) | (1 << 1) | 1,  # MPEG1, L3, no CRC
+            (br_idx << 4) | (sr_idx << 2) | (padding << 1),
+            0x00,
+        ])
+        size, _br, _sr, _per = _frame_at(hdr, 0)
+        frame = hdr + b"\xaa" * (size - 4)
+        return (b"ID3\x04\x00\x00" + b"\x00\x00\x00\x0d"
+                + b"\x00" * 13
+                + frame * n_frames
+                + b"TAG" + b"\x00" * 125)
 
-    cols = df.select(
-        F.col(id_col).alias("id"), F.col(text_col).alias("text")
-    )
-    return spread(cols).mapInPandas(_encode, schema="id bigint, payload binary")
+    return prefix_payloads(df, id_col, text_col, MP3_META_BYTES, build)
 
 
 MP3_META_SCHEMA = (
@@ -257,28 +241,16 @@ MP3_META_SCHEMA = (
 
 def mp3_stream_stats(payloads: DataFrame) -> DataFrame:
     """Per-payload MP3 stream metadata via :func:`parse_mp3_frames`
-    inside one Arrow ``mapInPandas`` — the decode-free triage stage.
+    inside one Arrow row stage — the decode-free triage stage.
     Undecodable payloads drop the row."""
 
-    def _scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in ("id", "n_frames", "bitrate_kbps",
-                                   "sample_rate", "duration_ms")}
-            for i, payload in zip(pdf["id"], pdf["payload"]):
-                parsed = parse_mp3_frames(bytes(payload))
-                if parsed is None:
-                    continue
-                n, br, sr, ms = parsed
-                out["id"].append(i)
-                out["n_frames"].append(n)
-                out["bitrate_kbps"].append(br)
-                out["sample_rate"].append(sr)
-                out["duration_ms"].append(ms)
-            yield pd.DataFrame(out)
+    def scan(i, payload):
+        parsed = parse_mp3_frames(payload)
+        if parsed is not None:
+            yield (i, *parsed)
 
-    return payloads.select("id", "payload").mapInPandas(
-        _scan, schema=MP3_META_SCHEMA
-    )
+    return flat_map_rows(payloads.select("id", "payload"), scan,
+                         MP3_META_SCHEMA)
 
 
 def mp3_vbr_payloads(df: DataFrame, id_col: str,
@@ -304,41 +276,29 @@ def mp3_vbr_payloads(df: DataFrame, id_col: str,
         pad = b"\xaa" * (size - 4 - len(body))
         return hdr + body + pad
 
-    def _encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, payloads = [], []
-            for i, text in zip(pdf["id"], pdf["text"]):
-                raw = text.encode("utf-8")[:MP3_META_BYTES]
-                if len(raw) < MP3_META_BYTES:
-                    continue
-                n_audio = 1 + raw[1] % 7
-                sr_idx = raw[2] % 3
-                audio = b"".join(
-                    _frame(1 + (raw[0] + f) % 14, sr_idx)
-                    for f in range(n_audio)
-                )
-                tag_hdr_size = _frame_at(
-                    _frame(9, sr_idx)[:4], 0)[0]
-                total = tag_hdr_size + len(audio)
-                if raw[3] % 2 == 0:
-                    body = (b"\x00" * 17 + b"Xing"
-                            + struct.pack(">I", 3)      # FRAMES|BYTES
-                            + struct.pack(">I", n_audio)
-                            + struct.pack(">I", total))
-                else:
-                    body = (b"\x00" * 32 + b"VBRI"
-                            + struct.pack(">HHH", 1, 0, 0)
-                            + struct.pack(">I", total)
-                            + struct.pack(">I", n_audio)
-                            + struct.pack(">HHHH", 0, 1, 2, 1))
-                payloads.append(_frame(9, sr_idx, body) + audio)
-                ids.append(i)
-            yield pd.DataFrame({"id": ids, "payload": payloads})
+    def build(i, raw):
+        n_audio = 1 + raw[1] % 7
+        sr_idx = raw[2] % 3
+        audio = b"".join(
+            _frame(1 + (raw[0] + f) % 14, sr_idx)
+            for f in range(n_audio)
+        )
+        tag_hdr_size = _frame_at(_frame(9, sr_idx)[:4], 0)[0]
+        total = tag_hdr_size + len(audio)
+        if raw[3] % 2 == 0:
+            body = (b"\x00" * 17 + b"Xing"
+                    + struct.pack(">I", 3)      # FRAMES|BYTES
+                    + struct.pack(">I", n_audio)
+                    + struct.pack(">I", total))
+        else:
+            body = (b"\x00" * 32 + b"VBRI"
+                    + struct.pack(">HHH", 1, 0, 0)
+                    + struct.pack(">I", total)
+                    + struct.pack(">I", n_audio)
+                    + struct.pack(">HHHH", 0, 1, 2, 1))
+        return _frame(9, sr_idx, body) + audio
 
-    cols = df.select(
-        F.col(id_col).alias("id"), F.col(text_col).alias("text")
-    )
-    return spread(cols).mapInPandas(_encode, schema="id bigint, payload binary")
+    return prefix_payloads(df, id_col, text_col, MP3_META_BYTES, build)
 
 
 MP3_VBR_SCHEMA = (
@@ -351,34 +311,19 @@ def mp3_vbr_stats(payloads: DataFrame) -> DataFrame:
     """Per-payload VBR metadata: the Xing/VBRI tag parse
     (:func:`parse_vbr_tag` — frame-table duration from ONE frame, the
     at-scale triage read) side by side with the full frame walk
-    (:func:`parse_mp3_frames` — ground truth), in one Arrow
-    ``mapInPandas``. Streams with no VBR tag or no parsable frames
+    (:func:`parse_mp3_frames` — ground truth), in one Arrow row
+    stage. Streams with no VBR tag or no parsable frames
     drop the row."""
 
-    def _scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in (
-                "id", "tag", "vbr_frames", "vbr_bytes",
-                "n_frames_walk", "duration_ms_tag", "duration_ms_walk",
-            )}
-            for i, payload in zip(pdf["id"], pdf["payload"]):
-                b = bytes(payload)
-                tag = parse_vbr_tag(b)
-                walk = parse_mp3_frames(b)
-                if tag is None or walk is None:
-                    continue
-                kind, frames, nbytes, sr, per = tag
-                n_walk, _br, _sr, ms_walk = walk
-                out["id"].append(i)
-                out["tag"].append(kind)
-                out["vbr_frames"].append(frames)
-                out["vbr_bytes"].append(nbytes)
-                out["n_frames_walk"].append(n_walk)
-                out["duration_ms_tag"].append(
-                    None if frames is None else frames * per * 1000 // sr)
-                out["duration_ms_walk"].append(ms_walk)
-            yield pd.DataFrame(out)
+    def scan(i, b):
+        tag = parse_vbr_tag(b)
+        walk = parse_mp3_frames(b)
+        if tag is not None and walk is not None:
+            kind, frames, nbytes, sr, per = tag
+            n_walk, _br, _sr, ms_walk = walk
+            yield (i, kind, frames, nbytes, n_walk,
+                   None if frames is None else frames * per * 1000 // sr,
+                   ms_walk)
 
-    return payloads.select("id", "payload").mapInPandas(
-        _scan, schema=MP3_VBR_SCHEMA
-    )
+    return flat_map_rows(payloads.select("id", "payload"), scan,
+                         MP3_VBR_SCHEMA)

@@ -3,8 +3,9 @@
 Convention (SURVEY.md §1.3 / BASELINE.json): an opaque ``binary``
 payload column plus a typed metadata struct
 (mime/width/height/duration). The decode / feature-extraction step is
-the one place Python enters: an Arrow-batched ``mapInPandas`` whose
-batch shape, schema, and partitioning are real and tested.
+the one place Python enters: the Arrow row stage
+(``spread.flat_map_rows``) whose batch shape, schema, and partitioning
+are real and tested.
 ``decode_features`` computes deterministic byte-level features;
 ``decode_image`` REALLY decodes the formats a library-free container
 can (binary PPM / uncompressed 24-bit BMP with pure numpy; 8-bit
@@ -23,12 +24,10 @@ stage so the Arrow transfer only carries surviving rows.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
-from distributed_computing_projects_spark.operators.spread import spread
+from distributed_computing_projects_spark.operators.spread import (
+    flat_map_rows, prefix_payloads, spread)
 
 PAYLOAD_SCHEMA = (
     "id bigint, payload binary,"
@@ -91,31 +90,18 @@ def decode_features(payloads: DataFrame) -> DataFrame:
     The features are deterministic byte-level stand-ins (length, first
     byte, additive checksum) so the full plumbing — schema in/out,
     Arrow batches, per-partition iteration — is exercised and testable
-    without media libraries. Swap ``_featurize`` for a real decoder
+    without media libraries. Swap ``featurize`` for a real decoder
     (PIL/torchaudio/ffmpeg) keeping the same signature.
     """
 
-    def _featurize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payload = pdf["payload"]
-            yield pd.DataFrame(
-                {
-                    "id": pdf["id"],
-                    "n_bytes": payload.map(len).astype("int32"),
-                    "first_byte": payload.map(
-                        lambda b: b[0] if len(b) else -1
-                    ).astype("int32"),
-                    "byte_checksum": payload.map(
-                        lambda b: sum(b) % 2_147_483_647
-                    ).astype("int64"),
-                    "mime": pdf["mime"],
-                }
-            )
+    def featurize(i, payload, mime):
+        yield (i, len(payload), payload[0] if payload else -1,
+               sum(payload) % 2_147_483_647, mime)
 
     cols = payloads.select(
         "id", "payload", F.col("meta.mime").alias("mime")
     )
-    return spread(cols).mapInPandas(_featurize, schema=FEATURE_SCHEMA)
+    return flat_map_rows(spread(cols), featurize, FEATURE_SCHEMA)
 
 
 IMAGE_SCHEMA = (
@@ -746,23 +732,9 @@ def heif_payloads(
         raise RuntimeError(
             f"heif_payloads needs a libheif {codec} encoder "
             "(functions/heiflib.py)")
-    n_bytes = w * h * 3
-
-    def _encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, payloads = [], []
-            for i, text in zip(pdf["id"], pdf["text"]):
-                raw = text.encode("utf-8")[:n_bytes]
-                if len(raw) < n_bytes:
-                    continue
-                payloads.append(HL.encode_lossless_rgb(raw, w, h, comp))
-                ids.append(i)
-            yield pd.DataFrame({"id": ids, "payload": payloads})
-
-    cols = df.select(
-        F.col(id_col).alias("id"), F.col(text_col).alias("text")
-    )
-    return spread(cols).mapInPandas(_encode, schema="id bigint, payload binary")
+    return prefix_payloads(
+        df, id_col, text_col, w * h * 3,
+        lambda i, raw: HL.encode_lossless_rgb(raw, w, h, comp))
 
 
 def webp_payloads(
@@ -780,30 +752,16 @@ def webp_payloads(
     if not WP.available():
         raise RuntimeError(
             "webp_payloads needs libwebp (functions/webplib.py)")
-    n_bytes = w * h * 3
-
-    def _encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, payloads = [], []
-            for i, text in zip(pdf["id"], pdf["text"]):
-                raw = text.encode("utf-8")[:n_bytes]
-                if len(raw) < n_bytes:
-                    continue
-                payloads.append(WP.encode_lossless_rgb(raw, w, h))
-                ids.append(i)
-            yield pd.DataFrame({"id": ids, "payload": payloads})
-
-    cols = df.select(
-        F.col(id_col).alias("id"), F.col(text_col).alias("text")
-    )
-    return spread(cols).mapInPandas(_encode, schema="id bigint, payload binary")
+    return prefix_payloads(
+        df, id_col, text_col, w * h * 3,
+        lambda i, raw: WP.encode_lossless_rgb(raw, w, h))
 
 
 def decode_image(payloads: DataFrame) -> DataFrame:
     """REAL image decode for the formats a library-free container can
     decode: binary PPM (P6), uncompressed 24-bit BMP, and 8-bit
     truecolor PNG (stdlib zlib inflate + numpy unfiltering), parsed
-    inside an Arrow-batched ``mapInPandas`` (same contract as
+    inside the Arrow row stage (same contract as
     ``decode_features``: binary in, fixed-schema batches out). Emits
     (id, width, height, n_px, per-channel byte SUMS) — integer outputs,
     so a differential oracle can check the decode exactly; means are
@@ -819,31 +777,17 @@ def decode_image(payloads: DataFrame) -> DataFrame:
     """
     import numpy as np
 
-    def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in ("id", "width", "height", "n_px",
-                                   "sum_r", "sum_g", "sum_b")}
-            for i, payload in zip(pdf["id"], pdf["payload"]):
-                b = bytes(payload)
-                decoded = _decode_ppm(b) or _decode_bmp(b) or _decode_png(b) \
-                    or _decode_jpeg(b) or _decode_gif(b) or _decode_tiff(b) \
-                    or _decode_webp(b) or _decode_heif(b)
-                if decoded is None:
-                    continue
-                w, h, px = decoded
-                sums = px.reshape(-1, 3).sum(axis=0, dtype=np.int64)
-                out["id"].append(i)
-                out["width"].append(w)
-                out["height"].append(h)
-                out["n_px"].append(w * h)
-                out["sum_r"].append(int(sums[0]))
-                out["sum_g"].append(int(sums[1]))
-                out["sum_b"].append(int(sums[2]))
-            yield pd.DataFrame(out)
+    def decode(i, b):
+        decoded = _decode_ppm(b) or _decode_bmp(b) or _decode_png(b) \
+            or _decode_jpeg(b) or _decode_gif(b) or _decode_tiff(b) \
+            or _decode_webp(b) or _decode_heif(b)
+        if decoded is not None:
+            w, h, px = decoded
+            sums = px.reshape(-1, 3).sum(axis=0, dtype=np.int64)
+            yield (i, w, h, w * h, *sums.tolist())
 
-    return payloads.select("id", "payload").mapInPandas(
-        _decode, schema=IMAGE_SCHEMA
-    )
+    return flat_map_rows(payloads.select("id", "payload"), decode,
+                         IMAGE_SCHEMA)
 
 
 RESIZED_SCHEMA = (
@@ -869,36 +813,23 @@ def resize_image(payloads: DataFrame, factor: int) -> DataFrame:
     if factor <= 0:
         raise ValueError("factor must be positive")
 
-    def _resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in ("id", "width", "height", "n_px",
-                                   "sum_r", "sum_g", "sum_b")}
-            for i, payload in zip(pdf["id"], pdf["payload"]):
-                b = bytes(payload)
-                decoded = _decode_ppm(b) or _decode_bmp(b) or _decode_png(b) \
-                    or _decode_jpeg(b) or _decode_gif(b)
-                if decoded is None:
-                    continue
-                w, h, px = decoded
-                w2, h2 = w // factor, h // factor
-                if w2 == 0 or h2 == 0:
-                    continue
-                crop = px[: h2 * factor, : w2 * factor].astype(np.int64)
-                blocks = crop.reshape(h2, factor, w2, factor, 3)
-                resized = blocks.sum(axis=(1, 3)) // (factor * factor)
-                sums = resized.reshape(-1, 3).sum(axis=0)
-                out["id"].append(i)
-                out["width"].append(w2)
-                out["height"].append(h2)
-                out["n_px"].append(w2 * h2)
-                out["sum_r"].append(int(sums[0]))
-                out["sum_g"].append(int(sums[1]))
-                out["sum_b"].append(int(sums[2]))
-            yield pd.DataFrame(out)
+    def resize(i, b):
+        decoded = _decode_ppm(b) or _decode_bmp(b) or _decode_png(b) \
+            or _decode_jpeg(b) or _decode_gif(b)
+        if decoded is None:
+            return
+        w, h, px = decoded
+        w2, h2 = w // factor, h // factor
+        if w2 == 0 or h2 == 0:
+            return
+        crop = px[: h2 * factor, : w2 * factor].astype(np.int64)
+        blocks = crop.reshape(h2, factor, w2, factor, 3)
+        resized = blocks.sum(axis=(1, 3)) // (factor * factor)
+        sums = resized.reshape(-1, 3).sum(axis=0)
+        yield (i, w2, h2, w2 * h2, *sums.tolist())
 
-    return payloads.select("id", "payload").mapInPandas(
-        _resize, schema=RESIZED_SCHEMA
-    )
+    return flat_map_rows(payloads.select("id", "payload"), resize,
+                         RESIZED_SCHEMA)
 
 
 def png_payloads(
@@ -910,34 +841,19 @@ def png_payloads(
     cycle ``(id + row) % 5`` so all five PNG filters (None/Sub/Up/
     Average/Paeth) are exercised across the corpus, and every other id
     encodes as RGBA (alpha=255) so both truecolor color types decode.
-    Runs in the same Arrow ``mapInPandas`` contract as the decoders —
+    Runs in the same Arrow row-stage contract as the decoders —
     this is the fixture-building stage that lets the PNG decode be
     differentially checked end-to-end through REAL zlib DEFLATE.
     Callers pre-filter to rows with enough text bytes."""
     import numpy as np
 
-    n_bytes = w * h * 3
+    def build(i, raw):
+        rgb = np.frombuffer(raw, dtype=np.uint8).reshape(h, w, 3)
+        filters = [(i + r) % 5 for r in range(h)]
+        return encode_png(rgb, filters, alpha=bool(i % 2),
+                          interlace=interlace)
 
-    def _encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, payloads = [], []
-            for i, text in zip(pdf["id"], pdf["text"]):
-                raw = text.encode("utf-8")[:n_bytes]
-                if len(raw) < n_bytes:
-                    continue
-                rgb = np.frombuffer(raw, dtype=np.uint8).reshape(h, w, 3)
-                filters = [(int(i) + r) % 5 for r in range(h)]
-                payloads.append(
-                    encode_png(rgb, filters, alpha=bool(int(i) % 2),
-                               interlace=interlace)
-                )
-                ids.append(i)
-            yield pd.DataFrame({"id": ids, "payload": payloads})
-
-    cols = df.select(
-        F.col(id_col).alias("id"), F.col(text_col).alias("text")
-    )
-    return spread(cols).mapInPandas(_encode, schema="id bigint, payload binary")
+    return prefix_payloads(df, id_col, text_col, w * h * 3, build)
 
 
 PNG_PALETTE_DEPTHS = (1, 2, 4, 8)
@@ -955,33 +871,19 @@ def png_palette_payloads(
     Callers pre-filter to rows with at least ``w*h`` text bytes."""
     import numpy as np
 
-    n_px = w * h
+    def build(i, raw):
+        depth = PNG_PALETTE_DEPTHS[i % 4]
+        n = 1 << depth
+        j = np.arange(n)
+        pal = np.stack(
+            [(j * 7) % 256, (j * 13) % 256, (j * 29) % 256],
+            axis=1,
+        ).astype(np.uint8)
+        idx = (np.frombuffer(raw, dtype=np.uint8) % n).reshape(h, w)
+        filters = [(i + r) % 5 for r in range(h)]
+        return encode_png_indexed(idx, pal, depth, filters)
 
-    def _encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, payloads = [], []
-            for i, text in zip(pdf["id"], pdf["text"]):
-                raw = text.encode("utf-8")[:n_px]
-                if len(raw) < n_px:
-                    continue
-                depth = PNG_PALETTE_DEPTHS[int(i) % 4]
-                n = 1 << depth
-                j = np.arange(n)
-                pal = np.stack(
-                    [(j * 7) % 256, (j * 13) % 256, (j * 29) % 256],
-                    axis=1,
-                ).astype(np.uint8)
-                idx = (np.frombuffer(raw, dtype=np.uint8) % n).reshape(h, w)
-                filters = [(int(i) + r) % 5 for r in range(h)]
-                payloads.append(
-                    encode_png_indexed(idx, pal, depth, filters))
-                ids.append(i)
-            yield pd.DataFrame({"id": ids, "payload": payloads})
-
-    cols = df.select(
-        F.col(id_col).alias("id"), F.col(text_col).alias("text")
-    )
-    return spread(cols).mapInPandas(_encode, schema="id bigint, payload binary")
+    return prefix_payloads(df, id_col, text_col, w * h, build)
 
 
 def _decode_jpeg(b: bytes):
@@ -1025,40 +927,30 @@ def jpeg_payloads(
     character codes. ``restart_interval=2`` puts real RSTn markers in
     every payload, so the driver-graded path exercises restart sync
     too. Callers pre-filter to rows with enough text bytes."""
-    import numpy as np
-
     from distributed_computing_projects_spark.operators import jpeg as J
 
     if w % 8 or h % 8:
         raise ValueError("flat-tile fixtures need multiple-of-8 dims")
-    bx, by = w // 8, h // 8
-    n_bytes = bx * by * 3
     qtable = [8] + [16] * 63
+    return prefix_payloads(
+        df, id_col, text_col, (w // 8) * (h // 8) * 3,
+        lambda i, raw: J.encode_baseline(
+            flat_tile_comps(raw, w, h), w, h, qtable, restart_interval=2))
 
-    def _encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, payloads = [], []
-            for i, text in zip(pdf["id"], pdf["text"]):
-                raw = text.encode("utf-8")[:n_bytes]
-                if len(raw) < n_bytes:
-                    continue
-                comps = []
-                for ci in range(3):
-                    c = np.zeros((by, bx, 64), dtype=np.int64)
-                    for t in range(by * bx):
-                        c[t // bx, t % bx, 0] = raw[3 * t + ci] - 128
-                    comps.append(c)
-                payloads.append(
-                    J.encode_baseline(comps, w, h, qtable,
-                                      restart_interval=2)
-                )
-                ids.append(i)
-            yield pd.DataFrame({"id": ids, "payload": payloads})
 
-    cols = df.select(
-        F.col(id_col).alias("id"), F.col(text_col).alias("text")
-    )
-    return spread(cols).mapInPandas(_encode, schema="id bigint, payload binary")
+def flat_tile_comps(raw: bytes, w: int, h: int) -> list:
+    """The flat-tile color fixture's quantized components: tile t's
+    (Y, Cb, Cr) DC = text bytes (3t, 3t+1, 3t+2) - 128, no ACs."""
+    import numpy as np
+
+    bx, by = w // 8, h // 8
+    comps = []
+    for ci in range(3):
+        c = np.zeros((by, bx, 64), dtype=np.int64)
+        for t in range(by * bx):
+            c[t // bx, t % bx, 0] = raw[3 * t + ci] - 128
+        comps.append(c)
+    return comps
 
 
 def jpeg420_payloads(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -1075,40 +967,21 @@ def jpeg420_payloads(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
 
     from distributed_computing_projects_spark.operators import jpeg as J
 
-    n_bytes = 6
     qtable = [8] + [16] * 63
     sampling = [(2, 2), (1, 1), (1, 1)]
 
-    def _encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, payloads = [], []
-            for i, text in zip(pdf["id"], pdf["text"]):
-                raw = text.encode("utf-8")[:n_bytes]
-                if len(raw) < n_bytes:
-                    continue
-                y = np.zeros((2, 2, 64), dtype=np.int64)
-                for q in range(4):
-                    y[q // 2, q % 2, 0] = raw[q] - 128
-                cb = np.zeros((1, 1, 64), dtype=np.int64)
-                cb[0, 0, 0] = raw[4] - 128
-                cr = np.zeros((1, 1, 64), dtype=np.int64)
-                cr[0, 0, 0] = raw[5] - 128
-                payloads.append(
-                    J.encode_baseline([y, cb, cr], 16, 16, qtable,
-                                      sampling=sampling)
-                )
-                ids.append(i)
-            yield pd.DataFrame({"id": ids, "payload": payloads})
+    def build(i, raw):
+        y = np.zeros((2, 2, 64), dtype=np.int64)
+        for q in range(4):
+            y[q // 2, q % 2, 0] = raw[q] - 128
+        cb = np.zeros((1, 1, 64), dtype=np.int64)
+        cb[0, 0, 0] = raw[4] - 128
+        cr = np.zeros((1, 1, 64), dtype=np.int64)
+        cr[0, 0, 0] = raw[5] - 128
+        return J.encode_baseline([y, cb, cr], 16, 16, qtable,
+                                 sampling=sampling)
 
-    cols = df.select(
-        F.col(id_col).alias("id"), F.col(text_col).alias("text")
-    )
-    return spread(cols).mapInPandas(_encode, schema="id bigint, payload binary")
-
-
-# coefficient-fixture constants, shared with the SQL oracle in
-# queries/ext_multimodal.py: zigzag positions and quant steps of the
-# three AC coefficients each block carries
+    return prefix_payloads(df, id_col, text_col, 6, build)
 JPEG_COEF_BLOCKS = 4
 _JC_Q0, _JC_Q1, _JC_Q7, _JC_Q30 = 8, 2, 3, 5
 
@@ -1129,6 +1002,26 @@ def _jc_acs(b0: int, b1: int, b2: int) -> tuple[int, int, int]:
     return a1, a2, a3
 
 
+_JC_QTABLE = [16] * 64
+_JC_QTABLE[0], _JC_QTABLE[1], _JC_QTABLE[7], _JC_QTABLE[30] = (
+    _JC_Q0, _JC_Q1, _JC_Q7, _JC_Q30
+)
+
+
+def _jc_blocks(raw: bytes):
+    """The coefficient fixture's one component: block t carries
+    DC = byte(3t) - 128 and the :func:`_jc_acs` ACs at zigzag
+    positions 1, 7 and 30."""
+    import numpy as np
+
+    c = np.zeros((1, JPEG_COEF_BLOCKS, 64), dtype=np.int64)
+    for t in range(JPEG_COEF_BLOCKS):
+        b0, b1, b2 = raw[3 * t], raw[3 * t + 1], raw[3 * t + 2]
+        c[0, t, 0] = b0 - 128
+        c[0, t, 1], c[0, t, 7], c[0, t, 30] = _jc_acs(b0, b1, b2)
+    return c
+
+
 def jpeg_coeff_payloads(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """(id, payload): a grayscale baseline JPEG whose QUANTIZED
     coefficients are a deterministic function of the text bytes —
@@ -1138,40 +1031,13 @@ def jpeg_coeff_payloads(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     decoder's run-length, ZRL, EOB and negative-magnitude paths are
     all exercised under the oracle. Layout: 1 block row x
     ``JPEG_COEF_BLOCKS`` columns (w = 8*blocks, h = 8)."""
-    import numpy as np
-
     from distributed_computing_projects_spark.operators import jpeg as J
 
     nb = JPEG_COEF_BLOCKS
-    n_bytes = nb * 3
-    qtable = [16] * 64
-    qtable[0], qtable[1], qtable[7], qtable[30] = (
-        _JC_Q0, _JC_Q1, _JC_Q7, _JC_Q30
-    )
-
-    def _encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, payloads = [], []
-            for i, text in zip(pdf["id"], pdf["text"]):
-                raw = text.encode("utf-8")[:n_bytes]
-                if len(raw) < n_bytes:
-                    continue
-                c = np.zeros((1, nb, 64), dtype=np.int64)
-                for t in range(nb):
-                    b0, b1, b2 = raw[3 * t], raw[3 * t + 1], raw[3 * t + 2]
-                    a1, a2, a3 = _jc_acs(b0, b1, b2)
-                    c[0, t, 0] = b0 - 128
-                    c[0, t, 1] = a1
-                    c[0, t, 7] = a2
-                    c[0, t, 30] = a3
-                payloads.append(J.encode_baseline([c], nb * 8, 8, qtable))
-                ids.append(i)
-            yield pd.DataFrame({"id": ids, "payload": payloads})
-
-    cols = df.select(
-        F.col(id_col).alias("id"), F.col(text_col).alias("text")
-    )
-    return spread(cols).mapInPandas(_encode, schema="id bigint, payload binary")
+    return prefix_payloads(
+        df, id_col, text_col, nb * 3,
+        lambda i, raw: J.encode_baseline(
+            [_jc_blocks(raw)], nb * 8, 8, _JC_QTABLE))
 
 
 def jpeg_progressive_payloads(
@@ -1188,43 +1054,14 @@ def jpeg_progressive_payloads(
     ``multimodal_jpeg_coeffs`` oracle SQL applies VERBATIM — the
     differential check proves Annex-G scan reassembly equals the
     single-scan baseline bit-for-bit."""
-    import numpy as np
-
     from distributed_computing_projects_spark.operators import jpeg as J
 
     nb = JPEG_COEF_BLOCKS
-    n_bytes = nb * 3
-    qtable = [16] * 64
-    qtable[0], qtable[1], qtable[7], qtable[30] = (
-        _JC_Q0, _JC_Q1, _JC_Q7, _JC_Q30
-    )
-
-    def _encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, payloads = [], []
-            for i, text in zip(pdf["id"], pdf["text"]):
-                raw = text.encode("utf-8")[:n_bytes]
-                if len(raw) < n_bytes:
-                    continue
-                c = np.zeros((1, nb, 64), dtype=np.int64)
-                for t in range(nb):
-                    b0, b1, b2 = raw[3 * t], raw[3 * t + 1], raw[3 * t + 2]
-                    a1, a2, a3 = _jc_acs(b0, b1, b2)
-                    c[0, t, 0] = b0 - 128
-                    c[0, t, 1] = a1
-                    c[0, t, 7] = a2
-                    c[0, t, 30] = a3
-                payloads.append(J.encode_progressive(
-                    [c], nb * 8, 8, qtable, dc_al=2,
-                    ac_bands=((1, 7, 1), (8, 63, 0)),
-                ))
-                ids.append(i)
-            yield pd.DataFrame({"id": ids, "payload": payloads})
-
-    cols = df.select(
-        F.col(id_col).alias("id"), F.col(text_col).alias("text")
-    )
-    return spread(cols).mapInPandas(_encode, schema="id bigint, payload binary")
+    return prefix_payloads(
+        df, id_col, text_col, nb * 3,
+        lambda i, raw: J.encode_progressive(
+            [_jc_blocks(raw)], nb * 8, 8, _JC_QTABLE, dc_al=2,
+            ac_bands=((1, 7, 1), (8, 63, 0))))
 
 
 def jpeg_progressive_pixel_payloads(
@@ -1236,44 +1073,15 @@ def jpeg_progressive_pixel_payloads(
     DC delivered by successive approximation 2 bits deep). Flat tiles
     keep the pixel pipeline bit-exact, so the ``multimodal_jpeg_decode``
     oracle SQL applies VERBATIM to the decoded output."""
-    import numpy as np
-
     from distributed_computing_projects_spark.operators import jpeg as J
 
     if w % 8 or h % 8:
         raise ValueError("flat-tile fixtures need multiple-of-8 dims")
-    bx, by = w // 8, h // 8
-    n_bytes = bx * by * 3
     qtable = [8] + [16] * 63
-
-    def _encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, payloads = [], []
-            for i, text in zip(pdf["id"], pdf["text"]):
-                raw = text.encode("utf-8")[:n_bytes]
-                if len(raw) < n_bytes:
-                    continue
-                comps = []
-                for ci in range(3):
-                    c = np.zeros((by, bx, 64), dtype=np.int64)
-                    for t in range(by * bx):
-                        c[t // bx, t % bx, 0] = raw[3 * t + ci] - 128
-                    comps.append(c)
-                payloads.append(
-                    J.encode_progressive(comps, w, h, qtable, dc_al=2)
-                )
-                ids.append(i)
-            yield pd.DataFrame({"id": ids, "payload": payloads})
-
-    cols = df.select(
-        F.col(id_col).alias("id"), F.col(text_col).alias("text")
-    )
-    return spread(cols).mapInPandas(_encode, schema="id bigint, payload binary")
-
-
-# GIF fixture constants, mirrored literally in the
-# multimodal_gif_decode oracle SQL (queries/ext_multimodal.py): a
-# 64-color palette whose channels are affine functions of the index
+    return prefix_payloads(
+        df, id_col, text_col, (w // 8) * (h // 8) * 3,
+        lambda i, raw: J.encode_progressive(
+            flat_tile_comps(raw, w, h), w, h, qtable, dc_al=2))
 GIF_W, GIF_H, GIF_NPAL = 6, 4, 64
 
 
@@ -1294,31 +1102,17 @@ def gif_payloads(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     pixel sums from character codes, with no flat-tile restriction."""
     from distributed_computing_projects_spark.operators import gif as G
 
-    n_bytes = GIF_W * GIF_H
     pal = _gif_palette()
 
-    def _encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, payloads = [], []
-            for i, text in zip(pdf["id"], pdf["text"]):
-                raw = text.encode("utf-8")[:n_bytes]
-                if len(raw) < n_bytes:
-                    continue
-                idx = [
-                    [raw[y * GIF_W + x] % GIF_NPAL for x in range(GIF_W)]
-                    for y in range(GIF_H)
-                ]
-                payloads.append(G.encode_gif(
-                    idx, GIF_W, GIF_H, pal,
-                    interlace=(int(i) % 2 == 0), animated_tail=1,
-                ))
-                ids.append(i)
-            yield pd.DataFrame({"id": ids, "payload": payloads})
+    def build(i, raw):
+        idx = [
+            [raw[y * GIF_W + x] % GIF_NPAL for x in range(GIF_W)]
+            for y in range(GIF_H)
+        ]
+        return G.encode_gif(idx, GIF_W, GIF_H, pal,
+                            interlace=(i % 2 == 0), animated_tail=1)
 
-    cols = df.select(
-        F.col(id_col).alias("id"), F.col(text_col).alias("text")
-    )
-    return spread(cols).mapInPandas(_encode, schema="id bigint, payload binary")
+    return prefix_payloads(df, id_col, text_col, GIF_W * GIF_H, build)
 
 
 GIF_ANIM_FRAMES = 3
@@ -1334,33 +1128,17 @@ def gif_anim_payloads(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     from distributed_computing_projects_spark.operators import gif as G
 
     n_px = GIF_W * GIF_H
-    n_bytes = GIF_ANIM_FRAMES * n_px
     pal = _gif_palette()
 
-    def _encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, payloads = [], []
-            for i, text in zip(pdf["id"], pdf["text"]):
-                raw = text.encode("utf-8")[:n_bytes]
-                if len(raw) < n_bytes:
-                    continue
-                frames = [
-                    [raw[f * n_px + t] % GIF_NPAL for t in range(n_px)]
-                    for f in range(GIF_ANIM_FRAMES)
-                ]
-                payloads.append(
-                    G.encode_gif_anim(frames, GIF_W, GIF_H, pal))
-                ids.append(i)
-            yield pd.DataFrame({"id": ids, "payload": payloads})
+    def build(i, raw):
+        frames = [
+            [raw[f * n_px + t] % GIF_NPAL for t in range(n_px)]
+            for f in range(GIF_ANIM_FRAMES)
+        ]
+        return G.encode_gif_anim(frames, GIF_W, GIF_H, pal)
 
-    cols = df.select(
-        F.col(id_col).alias("id"), F.col(text_col).alias("text")
-    )
-    return spread(cols).mapInPandas(_encode, schema="id bigint, payload binary")
-
-
-# the GIF frame rows share the video-family contract BY IMPORT, so
-# a schema change cannot silently drift between the two families
+    return prefix_payloads(df, id_col, text_col, GIF_ANIM_FRAMES * n_px,
+                           build)
 from distributed_computing_projects_spark.operators.video import (  # noqa: E402,E501
     FRAME_SCHEMA as GIF_FRAMES_SCHEMA,
 )
@@ -1369,7 +1147,7 @@ from distributed_computing_projects_spark.operators.video import (  # noqa: E402
 def gif_frames(payloads: DataFrame) -> DataFrame:
     """Animated-GIF frame extraction: every frame of each payload
     decoded library-free (gif.decode_gif_frames) inside one Arrow
-    ``mapInPandas``; a row per frame with per-channel pixel sums —
+    row stage; a row per frame with per-channel pixel sums —
     the video-family contract (operators/video.py:FRAME_SCHEMA) for
     the animation format documents actually embed. Non-GIF payloads
     drop the row; a stream torn past complete frames keeps those
@@ -1378,29 +1156,14 @@ def gif_frames(payloads: DataFrame) -> DataFrame:
 
     from distributed_computing_projects_spark.operators import gif as G
 
-    def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in ("id", "frame_idx", "width", "height",
-                                   "sum_r", "sum_g", "sum_b")}
-            for i, payload in zip(pdf["id"], pdf["payload"]):
-                frames = G.decode_gif_frames(bytes(payload))
-                if frames is None:
-                    continue
-                for idx, (w, h, rows) in enumerate(frames):
-                    px = np.array(rows, dtype=np.int64).reshape(-1, 3)
-                    sums = px.sum(axis=0)
-                    out["id"].append(i)
-                    out["frame_idx"].append(idx)
-                    out["width"].append(w)
-                    out["height"].append(h)
-                    out["sum_r"].append(int(sums[0]))
-                    out["sum_g"].append(int(sums[1]))
-                    out["sum_b"].append(int(sums[2]))
-            yield pd.DataFrame(out)
+    def decode(i, payload):
+        for idx, (w, h, rows) in enumerate(
+                G.decode_gif_frames(payload) or ()):
+            sums = np.array(rows, dtype=np.int64).reshape(-1, 3).sum(axis=0)
+            yield (i, idx, w, h, *sums.tolist())
 
-    return payloads.select("id", "payload").mapInPandas(
-        _decode, schema=GIF_FRAMES_SCHEMA
-    )
+    return flat_map_rows(payloads.select("id", "payload"), decode,
+                         GIF_FRAMES_SCHEMA)
 
 
 JPEG_COEFFS_SCHEMA = (
@@ -1414,35 +1177,22 @@ def decode_jpeg_coeffs(payloads: DataFrame) -> DataFrame:
     run-length + DEQUANT, stopping before the IDCT — the integer
     bit-exact layer (jpeg.decode_coeffs), summed per image. Emits
     (id, width, height, n_blocks, sum_dc, sum_ac, n_nonzero_ac);
-    undecodable payloads drop. Same Arrow mapInPandas contract as
+    undecodable payloads drop. Same Arrow row-stage contract as
     :func:`decode_image`."""
     from distributed_computing_projects_spark.operators import jpeg as J
 
-    def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in ("id", "width", "height", "n_blocks",
-                                   "sum_dc", "sum_ac", "n_nonzero_ac")}
-            for i, payload in zip(pdf["id"], pdf["payload"]):
-                decoded = J.decode_coeffs(bytes(payload))
-                if decoded is None:
-                    continue
-                w, h, comps, _sampling = decoded
-                sum_dc = sum(int(c[..., 0].sum()) for c in comps)
-                sum_ac = sum(int(c[..., 1:].sum()) for c in comps)
-                nnz = sum(int((c[..., 1:] != 0).sum()) for c in comps)
-                n_blocks = sum(c.shape[0] * c.shape[1] for c in comps)
-                out["id"].append(i)
-                out["width"].append(w)
-                out["height"].append(h)
-                out["n_blocks"].append(n_blocks)
-                out["sum_dc"].append(sum_dc)
-                out["sum_ac"].append(sum_ac)
-                out["n_nonzero_ac"].append(nnz)
-            yield pd.DataFrame(out)
+    def decode(i, payload):
+        decoded = J.decode_coeffs(payload)
+        if decoded is not None:
+            w, h, comps, _sampling = decoded
+            yield (i, w, h,
+                   sum(c.shape[0] * c.shape[1] for c in comps),
+                   sum(int(c[..., 0].sum()) for c in comps),
+                   sum(int(c[..., 1:].sum()) for c in comps),
+                   sum(int((c[..., 1:] != 0).sum()) for c in comps))
 
-    return payloads.select("id", "payload").mapInPandas(
-        _decode, schema=JPEG_COEFFS_SCHEMA
-    )
+    return flat_map_rows(payloads.select("id", "payload"), decode,
+                         JPEG_COEFFS_SCHEMA)
 
 
 FRAME_BYTES = 16
@@ -1460,7 +1210,7 @@ def frame_sample(
 
     Payload layout is the demo convention (contiguous fixed-size
     frames); a real container format would first demux via a
-    decode_features-style mapInPandas and keep this sampling shape.
+    decode_features-style row stage and keep this sampling shape.
     Partial trailing frames are dropped (a real sampler's behavior).
     """
     if frame_bytes <= 0 or stride <= 0:
@@ -1665,21 +1415,9 @@ def flac_payloads(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     enough text bytes (JVM-side, before this Python stage)."""
     from distributed_computing_projects_spark.operators import flac as FL
 
-    def _encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, payloads = [], []
-            for i, text in zip(pdf["id"], pdf["text"]):
-                raw = text.encode("utf-8")[:FLAC_SAMPLES]
-                if len(raw) < FLAC_SAMPLES:
-                    continue
-                payloads.append(FL.encode_flac(list(raw), order=1))
-                ids.append(i)
-            yield pd.DataFrame({"id": ids, "payload": payloads})
-
-    cols = df.select(
-        F.col(id_col).alias("id"), F.col(text_col).alias("text")
-    )
-    return spread(cols).mapInPandas(_encode, schema="id bigint, payload binary")
+    return prefix_payloads(
+        df, id_col, text_col, FLAC_SAMPLES,
+        lambda i, raw: FL.encode_flac(list(raw), order=1))
 
 
 def _decode_flac(b: bytes):
@@ -1716,33 +1454,19 @@ def audio_features(payloads: DataFrame) -> DataFrame:
     math is exactly recomputable by a SQL oracle (spectral features
     would need an FFT no SQL engine reproduces bit-for-bit — the
     integer time-domain features are the honest differential
-    surface). Same Arrow ``mapInPandas`` contract and drop-malformed
+    surface). Same Arrow row-stage contract and drop-malformed
     policy as :func:`decode_audio`."""
     import numpy as np
 
-    def _features(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in ("id", "n_samples", "n_zero_crossings",
-                                   "sum_abs_amplitude", "peak_amplitude")}
-            for i, payload in zip(pdf["id"], pdf["payload"]):
-                raw = bytes(payload)
-                decoded = _decode_wav(raw) or _decode_flac(raw)
-                if decoded is None:
-                    continue
-                _rate, _channels, samples = decoded
-                s = samples.astype(np.int32)
-                out["id"].append(i)
-                out["n_samples"].append(len(s))
-                out["n_zero_crossings"].append(
-                    int(np.count_nonzero(s[:-1] * s[1:] < 0))
-                )
-                out["sum_abs_amplitude"].append(int(np.abs(s).sum()))
-                out["peak_amplitude"].append(int(np.abs(s).max()))
-            yield pd.DataFrame(out)
+    def features(i, raw):
+        decoded = _decode_wav(raw) or _decode_flac(raw)
+        if decoded is not None:
+            s = decoded[2].astype(np.int32)
+            yield (i, len(s), int(np.count_nonzero(s[:-1] * s[1:] < 0)),
+                   int(np.abs(s).sum()), int(np.abs(s).max()))
 
-    return payloads.select("id", "payload").mapInPandas(
-        _features, schema=AUDIO_FEATURES_SCHEMA
-    )
+    return flat_map_rows(payloads.select("id", "payload"), features,
+                         AUDIO_FEATURES_SCHEMA)
 
 
 def decode_audio(payloads: DataFrame) -> DataFrame:
@@ -1750,7 +1474,7 @@ def decode_audio(payloads: DataFrame) -> DataFrame:
     decode: uncompressed 16-bit PCM WAV, G.711 A-law/mu-law (fmt tags
     6/7), mono IMA-ADPCM (fmt tag 17), and native FLAC (lossless —
     pure-stdlib Rice/predictor codec, operators/flac.py), parsed
-    inside the same Arrow ``mapInPandas`` contract as
+    inside the same Arrow row-stage contract as
     :func:`decode_image`. Emits integer aggregates (sample count,
     amplitude sum, peak |amp|) so the decode is differentially
     checkable; undecodable payloads (other codecs, truncated,
@@ -1758,29 +1482,13 @@ def decode_audio(payloads: DataFrame) -> DataFrame:
     the documented integration point."""
     import numpy as np
 
-    def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in ("id", "sample_rate", "channels",
-                                   "n_samples", "sum_amplitude",
-                                   "peak_amplitude")}
-            for i, payload in zip(pdf["id"], pdf["payload"]):
-                raw = bytes(payload)
-                decoded = _decode_wav(raw) or _decode_flac(raw)
-                if decoded is None:
-                    continue
-                rate, channels, samples = decoded
-                out["id"].append(i)
-                out["sample_rate"].append(rate)
-                out["channels"].append(channels)
-                out["n_samples"].append(len(samples))
-                out["sum_amplitude"].append(
-                    int(samples.sum(dtype=np.int64))
-                )
-                out["peak_amplitude"].append(
-                    int(np.abs(samples.astype(np.int32)).max())
-                )
-            yield pd.DataFrame(out)
+    def decode(i, raw):
+        decoded = _decode_wav(raw) or _decode_flac(raw)
+        if decoded is not None:
+            rate, channels, samples = decoded
+            yield (i, rate, channels, len(samples),
+                   int(samples.sum(dtype=np.int64)),
+                   int(np.abs(samples.astype(np.int32)).max()))
 
-    return payloads.select("id", "payload").mapInPandas(
-        _decode, schema=AUDIO_SCHEMA
-    )
+    return flat_map_rows(payloads.select("id", "payload"), decode,
+                         AUDIO_SCHEMA)

@@ -1,6 +1,7 @@
 """Pre-Python / pre-expression parallelism guard, shared by every
 CPU-heavy stage (dedup signature hashing, ANN bucketing, media
-encode/decode ``mapInPandas``).
+encode/decode), and :func:`flat_map_rows` — the one Arrow row stage
+every Python-worker decode and encode runs through.
 
 A small single-file parquet arrives as ONE input split, serializing
 the work no matter how many cores exist (measured 5 s -> 0.3 s on 32
@@ -29,8 +30,14 @@ from __future__ import annotations
 
 import os
 import re
+from typing import Callable, Iterable
 
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
+
+# Output rows per Arrow batch a row stage sends back to the JVM.
+BATCH_ROWS = 8192
 
 
 def spread(df: DataFrame) -> DataFrame:
@@ -70,3 +77,103 @@ def spread(df: DataFrame) -> DataFrame:
     if est_splits < target:
         return df.repartition(target)
     return df
+
+
+def flat_map_rows(df: DataFrame,
+                  fn: Callable[..., Iterable[tuple]],
+                  ddl: str | StructType) -> DataFrame:
+    """The one Python row stage: ``fn(*row)`` per input row of ``df``
+    on plain Python values (``bytes`` for binary, ``int`` for bigint,
+    ``None`` for null — never numpy or pandas objects), yielding zero
+    or more output tuples in ``ddl`` column order. Zero drops the row,
+    many fan it out. Runs inside ``mapInArrow``: each output column is
+    built with ``pa.array`` at the schema's Arrow type and flushed as
+    one ``RecordBatch`` every :data:`BATCH_ROWS` output rows, so one
+    input row may yield any number of rows across flushes."""
+    import pyarrow as pa
+
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(ddl, str):
+        ddl = StructType.fromDDL(ddl)
+    schema = to_arrow_schema(ddl)
+
+    def flush(cols):
+        return pa.RecordBatch.from_arrays(
+            [pa.array(c, type=f.type) for c, f in zip(cols, schema)],
+            schema=schema)
+
+    def run(batches):
+        cols = [[] for _ in schema]
+        for batch in batches:
+            for row in zip(*(c.to_pylist() for c in batch.columns)):
+                for out in fn(*row):
+                    for col, v in zip(cols, out):
+                        col.append(v)
+                    if len(cols[0]) == BATCH_ROWS:
+                        yield flush(cols)
+                        cols = [[] for _ in schema]
+        if cols[0]:
+            yield flush(cols)
+
+    return df.mapInArrow(run, ddl)
+
+
+def extract_values(df: DataFrame, fn: Callable, ddl: str) -> DataFrame:
+    """``(key, fn(value))`` per two-column ``(key, value)`` row of
+    ``df``, the row dropped where ``fn`` returns ``None`` — the shape
+    every one-value-per-payload extractor shares."""
+
+    def row(key, value):
+        out = fn(value)
+        return () if out is None else ((key, out),)
+
+    return flat_map_rows(df, row, ddl)
+
+
+def decode_records(bin_df: DataFrame, ddl: str,
+                   walk: Callable[[bytes], Iterable],
+                   adapter: Callable[[str], Callable]) -> DataFrame:
+    """The record sources' decode stage: ``walk(content)`` yields one
+    name-addressable record per decodable record of each binaryFile
+    ``content`` cell (malformed records are the walk's to drop), and
+    each DDL column takes ``adapter(type.simpleString())(rec.get(name))``
+    — resolution by NAME, reader-only columns null."""
+    cells = [(f.name, adapter(f.dataType.simpleString()))
+             for f in StructType.fromDDL(ddl).fields]
+
+    def decode(content):
+        for rec in walk(content):
+            yield tuple(adapt(rec.get(n)) for n, adapt in cells)
+
+    return flat_map_rows(bin_df.select("content"), decode, ddl)
+
+
+def encode_payloads(df: DataFrame, encode: Callable[..., bytes | None],
+                    id_col: str, *cols: str) -> DataFrame:
+    """``(id, payload)`` per row of ``df``: ``encode(id, *values)`` over
+    the ``spread`` projection of ``id_col`` and ``cols`` returns the
+    payload bytes, or ``None`` to drop the row — the shape every
+    fixture container builder shares."""
+    picked = spread(df.select(
+        F.col(id_col).alias("id"),
+        *(F.col(c).alias(f"c{k}") for k, c in enumerate(cols))))
+
+    def row(i, *values):
+        payload = encode(i, *values)
+        return () if payload is None else ((i, payload),)
+
+    return flat_map_rows(picked, row, "id bigint, payload binary")
+
+
+def prefix_payloads(df: DataFrame, id_col: str, text_col: str,
+                    n_bytes: int, build) -> DataFrame:
+    """(id, payload) rows: ``build(id, raw)`` over each row's first
+    ``n_bytes`` UTF-8 text bytes; rows with fewer bytes drop (callers
+    usually pre-filter JVM-side)."""
+
+    def encode(i, text):
+        raw = text.encode("utf-8")[:n_bytes]
+        return build(i, raw) if len(raw) == n_bytes else None
+
+    return encode_payloads(df, encode, id_col, text_col)

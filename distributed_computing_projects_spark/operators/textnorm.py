@@ -5,7 +5,7 @@ same visible string can arrive precomposed (U+00E9) or decomposed
 wrong, and hash wrong.
 
 Spark has no built-in Unicode normalizer, so this is a legitimate
-Python stage — Arrow-batched ``mapInPandas`` over CPython's
+Python stage — the Arrow row stage (``spread.flat_map_rows``) over CPython's
 ``unicodedata`` (the same batch contract as the media decoders; never
 a row-at-a-time UDF). The differential story is unusually strong: the
 oracle normalizes with DuckDB's ``nfc_normalize`` (utf8proc), a fully
@@ -20,12 +20,10 @@ state; the Python cost is one table-driven pass per string.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
-from distributed_computing_projects_spark.operators.spread import spread
+from distributed_computing_projects_spark.operators.spread import (
+    flat_map_rows, spread)
 
 NORM_SCHEMA = (
     "id bigint, normalized string, n_chars_before int, n_chars_after int"
@@ -39,21 +37,11 @@ def nfc_normalize(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     UTF-16 code units — agrees with code points)."""
     import unicodedata
 
-    def _norm(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            normed = [
-                unicodedata.normalize("NFC", t) for t in pdf["text"]
-            ]
-            yield pd.DataFrame(
-                {
-                    "id": pdf["id"],
-                    "normalized": normed,
-                    "n_chars_before": [len(t) for t in pdf["text"]],
-                    "n_chars_after": [len(t) for t in normed],
-                }
-            )
+    def norm(i, text):
+        normed = unicodedata.normalize("NFC", text)
+        yield i, normed, len(text), len(normed)
 
     cols = spread(df).select(
         F.col(id_col).alias("id"), F.col(text_col).alias("text")
     )
-    return cols.mapInPandas(_norm, schema=NORM_SCHEMA)
+    return flat_map_rows(cols, norm, NORM_SCHEMA)

@@ -35,13 +35,11 @@ real container structure, but takes pre-encoded JPEG frames.
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
-from distributed_computing_projects_spark.operators.spread import spread
+from distributed_computing_projects_spark.operators.spread import (
+    flat_map_rows, prefix_payloads)
 
 _U32 = struct.Struct("<I")
 
@@ -164,37 +162,22 @@ def avi_payloads(df: DataFrame, id_col: str, text_col: str,
     pipeline reconstructs the byte exactly per the jpeg.py determinism
     contract. Callers pre-filter to rows with >= ``3 * n_frames`` text
     bytes (JVM-side, before this Python stage)."""
-    import numpy as np
-
     from distributed_computing_projects_spark.operators import jpeg as J
+    from distributed_computing_projects_spark.operators.multimodal import (
+        flat_tile_comps,
+    )
 
     qtable = [8] + [16] * 63
 
-    def _encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, payloads = [], []
-            for i, text in zip(pdf["id"], pdf["text"]):
-                raw = text.encode("utf-8")[:3 * n_frames]
-                if len(raw) < 3 * n_frames:
-                    continue
-                frames = []
-                for f in range(n_frames):
-                    comps = [
-                        np.full((1, 1, 64), 0, dtype=np.int64)
-                        for _ in range(3)
-                    ]
-                    for ci in range(3):
-                        comps[ci][0, 0, 0] = raw[3 * f + ci] - 128
-                    frames.append(
-                        J.encode_baseline(comps, VID_W, VID_H, qtable))
-                payloads.append(mux_avi_mjpeg(frames, VID_W, VID_H))
-                ids.append(i)
-            yield pd.DataFrame({"id": ids, "payload": payloads})
+    def build(i, raw):
+        # frame f is the flat-tile fixture over text bytes 3f..3f+2
+        frames = [flat_tile_comps(raw[3 * f:3 * f + 3], VID_W, VID_H)
+                  for f in range(n_frames)]
+        return mux_avi_mjpeg(
+            [J.encode_baseline(c, VID_W, VID_H, qtable) for c in frames],
+            VID_W, VID_H)
 
-    cols = df.select(
-        F.col(id_col).alias("id"), F.col(text_col).alias("text")
-    )
-    return spread(cols).mapInPandas(_encode, schema="id bigint, payload binary")
+    return prefix_payloads(df, id_col, text_col, 3 * n_frames, build)
 
 
 FRAME_SCHEMA = (
@@ -204,8 +187,8 @@ FRAME_SCHEMA = (
 
 
 def decode_video(payloads: DataFrame, every_k: int = 1) -> DataFrame:
-    """Demux + per-frame JPEG decode inside one Arrow-batched
-    ``mapInPandas``; emits a row per DECODED frame: (id, frame_idx,
+    """Demux + per-frame JPEG decode inside one Arrow row stage;
+    emits a row per DECODED frame: (id, frame_idx,
     width, height, per-channel pixel SUMS) — integer outputs, means
     are the caller's divide (same contract as multimodal.decode_image,
     plus the time axis).
@@ -223,30 +206,15 @@ def decode_video(payloads: DataFrame, every_k: int = 1) -> DataFrame:
 
     from distributed_computing_projects_spark.operators import jpeg as J
 
-    def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in ("id", "frame_idx", "width", "height",
-                                   "sum_r", "sum_g", "sum_b")}
-            for i, payload in zip(pdf["id"], pdf["payload"]):
-                demuxed = demux_avi(bytes(payload))
-                if demuxed is None:
-                    continue
-                _, _, frames = demuxed
-                for idx in range(0, len(frames), every_k):
-                    decoded = J.decode_pixels(frames[idx])
-                    if decoded is None:
-                        continue
-                    w, h, px = decoded
-                    sums = px.reshape(-1, 3).sum(axis=0, dtype=np.int64)
-                    out["id"].append(i)
-                    out["frame_idx"].append(idx)
-                    out["width"].append(w)
-                    out["height"].append(h)
-                    out["sum_r"].append(int(sums[0]))
-                    out["sum_g"].append(int(sums[1]))
-                    out["sum_b"].append(int(sums[2]))
-            yield pd.DataFrame(out)
+    def decode(i, payload):
+        demuxed = demux_avi(payload)
+        frames = demuxed[2] if demuxed is not None else []
+        for idx in range(0, len(frames), every_k):
+            decoded = J.decode_pixels(frames[idx])
+            if decoded is not None:
+                w, h, px = decoded
+                sums = px.reshape(-1, 3).sum(axis=0, dtype=np.int64)
+                yield (i, idx, w, h, *sums.tolist())
 
-    return payloads.select("id", "payload").mapInPandas(
-        _decode, schema=FRAME_SCHEMA
-    )
+    return flat_map_rows(payloads.select("id", "payload"), decode,
+                         FRAME_SCHEMA)

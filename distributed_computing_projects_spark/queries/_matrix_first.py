@@ -11,12 +11,15 @@ GENERATED_FROM_ROUNDS = [1, 2, 3, 4, 5, 6, 7, 8, 9, 10, 11, 12, 13, 14, 15, 16, 
 
 MATRIX_ORDER = [
     'html_extract_text',  # changed since green r9
+    'multimodal_video_decode',  # changed since green r9
+    'multimodal_video_frame_sample',  # changed since green r9
     'url_dedup_groups',  # changed since green r9
     'boilerplate_ngrams',  # changed since green r10
     'corpus_quality_gate',  # changed since green r10
     'doc_fingerprint',  # changed since green r10
     'gopher_quality_flags',  # changed since green r10
     'language_id',  # changed since green r10
+    'multimodal_mp3_vbr',  # changed since green r10
     'pii_redact',  # changed since green r10
     'repetition_stats',  # changed since green r10
     'text_quality',  # changed since green r10
@@ -27,11 +30,13 @@ MATRIX_ORDER = [
     'lm_bigram_counts',  # changed since green r11
     'lm_ccnet_buckets',  # changed since green r11
     'lm_perplexity_rank',  # changed since green r11
+    'multimodal_mp3_stream_stats',  # changed since green r11
     'sketch_distinct_tokens',  # changed since green r11
     'sketch_union_distinct',  # changed since green r11
     'streaming_bloom_ingest',  # changed since green r11
     'streaming_kmv_ingest',  # changed since green r11
     'streaming_lm_scoring',  # changed since green r11
+    'text_nfc_normalize',  # changed since green r11
     'ann_bruteforce_topk',  # changed since green r12
     'ann_ivf_incremental_topk',  # changed since green r12
     'ann_ivf_topk',  # changed since green r12
@@ -71,26 +76,73 @@ MATRIX_ORDER = [
     'streaming_dedup_ingest',  # changed since green r12
     'streaming_dedup_ingest_epochs',  # changed since green r12
     'streaming_ivfpq_ingest',  # changed since green r12
+    'wikidump_extract_pages',  # changed since green r12
+    'multimodal_adpcm_decode',  # changed since green r13
+    'multimodal_audio_decode',  # changed since green r13
+    'multimodal_audio_features',  # changed since green r13
+    'multimodal_avif_decode',  # changed since green r13
+    'multimodal_features',  # changed since green r13
+    'multimodal_flac_decode',  # changed since green r13
+    'multimodal_frame_sample',  # changed since green r13
+    'multimodal_g711_decode',  # changed since green r13
+    'multimodal_gif_decode',  # changed since green r13
+    'multimodal_gif_frames',  # changed since green r13
+    'multimodal_heic_decode',  # changed since green r13
+    'multimodal_image_decode',  # changed since green r13
+    'multimodal_jpeg420_decode',  # changed since green r13
+    'multimodal_jpeg_coeffs',  # changed since green r13
+    'multimodal_jpeg_decode',  # changed since green r13
+    'multimodal_jpeg_progressive',  # changed since green r13
+    'multimodal_jpeg_progressive_decode',  # changed since green r13
+    'multimodal_payload_stats',  # changed since green r13
+    'multimodal_png_decode',  # changed since green r13
+    'multimodal_png_interlaced',  # changed since green r13
+    'multimodal_png_palette',  # changed since green r13
+    'multimodal_resize',  # changed since green r13
+    'multimodal_tiff_decode',  # changed since green r13
+    'multimodal_webp_decode',  # changed since green r13
+    'pdf_extract_text',  # changed since green r13
+    'pdf_filters_extract_text',  # changed since green r13
+    'pdf_objstm_extract_strings',  # changed since green r13
+    'pdf_objstm_extract_text',  # changed since green r13
+    'pdf_tounicode_extract_text',  # changed since green r13
     'training_corpus_summary',  # changed since green r13
     'training_corpus_v2',  # changed since green r13
+    'webdataset_scan',  # changed since green r13
     'wikidump_nowiki_plain_text',  # changed since green r13
     'wikidump_plain_text',  # changed since green r13
     'dataset_split_counts',  # changed since green r14
+    'epub_extract_text',  # changed since green r14
+    'mbox_extract_emails',  # changed since green r14
+    'odt_extract_text',  # changed since green r14
     'stratified_sample_counts',  # changed since green r14
+    'streaming_wet_ingest',  # changed since green r14
     'tfidf_top_terms',  # changed since green r14
     'token_stats',  # changed since green r14
     'token_stats_bpe',  # changed since green r14
     'training_corpus_wire',  # changed since green r14
     'vocab_coverage',  # changed since green r14
+    'warc_content_encoded_responses',  # changed since green r14
+    'warc_extract_responses',  # changed since green r14
+    'warc_gz_extract_responses',  # changed since green r14
+    'warc_zst_extract_responses',  # changed since green r14
+    'wet_extract_conversions',  # changed since green r14
+    'wet_zst_extract_conversions',  # changed since green r14
+    'zip_archive_scan',  # changed since green r14
     'arrow_events_roundtrip',  # changed since green r15
     'bson_events_scan',  # changed since green r15
     'cbor_events_scan',  # changed since green r15
     'doc_length_histogram',  # changed since green r15
+    'docx_extract_text',  # changed since green r15
     'jsonl_bgzf_scan',  # changed since green r15
     'jsonl_xz_blocks_scan',  # changed since green r15
     'msgpack_events_scan',  # changed since green r15
+    'pptx_extract_text',  # changed since green r15
+    'rtf_extract_text',  # changed since green r15
+    'seekable_sink_roundtrip',  # changed since green r15
     'sketch_hll_tokens',  # changed since green r15
     'sketch_intersect_distinct',  # changed since green r15
+    'wat_extract_links',  # changed since green r15
     'xlsx_events_roundtrip',  # changed since green r15
     'maplejuice_wordcount',  # pre-snapshot green r17 — conservative re-verify
     'avro_events_roundtrip',  # pre-snapshot green r17 — conservative re-verify
@@ -142,66 +194,27 @@ MATRIX_ORDER = [
     'streaming_iceberg_sink_ingest',  # pre-snapshot green r17 — conservative re-verify
     'tfrecord_scan',  # pre-snapshot green r17 — conservative re-verify
     'wat_link_pagerank',  # pre-snapshot green r17 — conservative re-verify
-    'multimodal_video_decode',  # green r9
-    'multimodal_video_frame_sample',  # green r9
     'skewed_join_salted',  # green r9
     'zorder_layout_quality',  # green r9
-    'multimodal_mp3_vbr',  # green r10
     'streaming_user_running_totals',  # green r10
     'chunk_documents',  # green r11
     'corpus_shuffle_head',  # green r11
     'grep',  # green r11
     'grep_count',  # green r11
-    'multimodal_mp3_stream_stats',  # green r11
     'streaming_sliding_counts',  # green r11
     'streaming_user_sessions',  # green r11
-    'text_nfc_normalize',  # green r11
     'user_running_totals_final',  # green r11
     'orc_events_roundtrip',  # green r12
     'parquet_zstd_roundtrip',  # green r12
-    'wikidump_extract_pages',  # green r12
     'grep_zst_logs',  # green r13
-    'multimodal_adpcm_decode',  # green r13
-    'multimodal_audio_decode',  # green r13
-    'multimodal_audio_features',  # green r13
-    'multimodal_avif_decode',  # green r13
-    'multimodal_features',  # green r13
-    'multimodal_flac_decode',  # green r13
-    'multimodal_frame_sample',  # green r13
-    'multimodal_g711_decode',  # green r13
-    'multimodal_gif_decode',  # green r13
-    'multimodal_gif_frames',  # green r13
-    'multimodal_heic_decode',  # green r13
-    'multimodal_image_decode',  # green r13
-    'multimodal_jpeg420_decode',  # green r13
-    'multimodal_jpeg_coeffs',  # green r13
-    'multimodal_jpeg_decode',  # green r13
-    'multimodal_jpeg_progressive',  # green r13
-    'multimodal_jpeg_progressive_decode',  # green r13
-    'multimodal_payload_stats',  # green r13
-    'multimodal_png_decode',  # green r13
-    'multimodal_png_interlaced',  # green r13
-    'multimodal_png_palette',  # green r13
-    'multimodal_resize',  # green r13
-    'multimodal_tiff_decode',  # green r13
-    'multimodal_webp_decode',  # green r13
     'orders_cube',  # green r13
-    'pdf_extract_text',  # green r13
-    'pdf_filters_extract_text',  # green r13
-    'pdf_objstm_extract_strings',  # green r13
-    'pdf_objstm_extract_text',  # green r13
-    'pdf_tounicode_extract_text',  # green r13
     'streaming_avro_ingest',  # green r13
     'streaming_jsonl_zst_ingest',  # green r13
-    'webdataset_scan',  # green r13
     'asof_last_click_before_purchase',  # green r14
     'condorcet_round1',  # green r14
     'condorcet_winner',  # green r14
     'condorcet_wins',  # green r14
     'customers_without_orders',  # green r14
-    'epub_extract_text',  # green r14
-    'mbox_extract_emails',  # green r14
-    'odt_extract_text',  # green r14
     'pack_stats',  # green r14
     'q10_returned_item_customers',  # green r14
     'q11_important_stock',  # green r14
@@ -218,25 +231,15 @@ MATRIX_ORDER = [
     'returnflag_rollup',  # green r14
     'sql_nation_revenue_rank',  # green r14
     'streaming_arrow_ingest',  # green r14
-    'streaming_wet_ingest',  # green r14
     'supplier_part_stats',  # green r14
     'suppliers_with_returns',  # green r14
     'tail_n',  # green r14
     'top3_orders_per_customer',  # green r14
-    'warc_content_encoded_responses',  # green r14
-    'warc_extract_responses',  # green r14
-    'warc_gz_extract_responses',  # green r14
-    'warc_zst_extract_responses',  # green r14
-    'wet_extract_conversions',  # green r14
-    'wet_zst_extract_conversions',  # green r14
     'wine_csv_agg',  # green r14
-    'zip_archive_scan',  # green r14
-    'docx_extract_text',  # green r15
     'events_hourly',  # green r15
     'events_props_json',  # green r15
     'grep_logs',  # green r15
     'jsonl_events_agg',  # green r15
-    'pptx_extract_text',  # green r15
     'q15_top_supplier',  # green r15
     'q16_supplier_part_counts',  # green r15
     'q20_part_promotion_suppliers',  # green r15
@@ -246,8 +249,6 @@ MATRIX_ORDER = [
     'q8_market_share',  # green r15
     'q9_product_profit',  # green r15
     'range_join_clicks_before_purchase',  # green r15
-    'rtf_extract_text',  # green r15
-    'seekable_sink_roundtrip',  # green r15
     'sketch_value_quantiles',  # green r15
     'streaming_cbor_ingest',  # green r15
     'streaming_jsonl_agg',  # green r15
@@ -255,7 +256,6 @@ MATRIX_ORDER = [
     'streaming_sqlite_ingest',  # green r15
     'streaming_tfrecord_ingest',  # green r15
     'user_sessions',  # green r15
-    'wat_extract_links',  # green r15
     'wine_filter_agg',  # green r15
     'wordcount',  # green r15
 ]
@@ -263,4 +263,4 @@ MATRIX_ORDER = [
 # Urgent queries past the driver's row budget this round: no
 # driver row until next round; oracle-verified in pytest instead
 # (tests/test_matrix_rotation.py::test_overflow_queries_verify).
-MATRIX_OVERFLOW = ['knn_join_recall', 'knn_join_topk', 'knn_label_accuracy', 'minhash_signature', 'quality_classifier_confusion', 'quality_classifier_weights', 'simhash_fingerprint', 'streaming_ann_ingest', 'streaming_dedup_ingest', 'streaming_dedup_ingest_epochs', 'streaming_ivfpq_ingest', 'training_corpus_summary', 'training_corpus_v2', 'wikidump_nowiki_plain_text', 'wikidump_plain_text', 'dataset_split_counts', 'stratified_sample_counts', 'tfidf_top_terms', 'token_stats', 'token_stats_bpe', 'training_corpus_wire', 'vocab_coverage', 'arrow_events_roundtrip', 'bson_events_scan', 'cbor_events_scan', 'doc_length_histogram', 'jsonl_bgzf_scan', 'jsonl_xz_blocks_scan', 'msgpack_events_scan', 'sketch_hll_tokens', 'sketch_intersect_distinct', 'xlsx_events_roundtrip']
+MATRIX_OVERFLOW = ['dedup_ngram_jaccard', 'dedup_semantic', 'dedup_semantic_twolevel', 'dedup_simhash', 'dedup_survivors', 'knn_join_recall', 'knn_join_topk', 'knn_label_accuracy', 'minhash_signature', 'quality_classifier_confusion', 'quality_classifier_weights', 'simhash_fingerprint', 'streaming_ann_ingest', 'streaming_dedup_ingest', 'streaming_dedup_ingest_epochs', 'streaming_ivfpq_ingest', 'wikidump_extract_pages', 'multimodal_adpcm_decode', 'multimodal_audio_decode', 'multimodal_audio_features', 'multimodal_avif_decode', 'multimodal_features', 'multimodal_flac_decode', 'multimodal_frame_sample', 'multimodal_g711_decode', 'multimodal_gif_decode', 'multimodal_gif_frames', 'multimodal_heic_decode', 'multimodal_image_decode', 'multimodal_jpeg420_decode', 'multimodal_jpeg_coeffs', 'multimodal_jpeg_decode', 'multimodal_jpeg_progressive', 'multimodal_jpeg_progressive_decode', 'multimodal_payload_stats', 'multimodal_png_decode', 'multimodal_png_interlaced', 'multimodal_png_palette', 'multimodal_resize', 'multimodal_tiff_decode', 'multimodal_webp_decode', 'pdf_extract_text', 'pdf_filters_extract_text', 'pdf_objstm_extract_strings', 'pdf_objstm_extract_text', 'pdf_tounicode_extract_text', 'training_corpus_summary', 'training_corpus_v2', 'webdataset_scan', 'wikidump_nowiki_plain_text', 'wikidump_plain_text', 'dataset_split_counts', 'epub_extract_text', 'mbox_extract_emails', 'odt_extract_text', 'stratified_sample_counts', 'streaming_wet_ingest', 'tfidf_top_terms', 'token_stats', 'token_stats_bpe', 'training_corpus_wire', 'vocab_coverage', 'warc_content_encoded_responses', 'warc_extract_responses', 'warc_gz_extract_responses', 'warc_zst_extract_responses', 'wet_extract_conversions', 'wet_zst_extract_conversions', 'zip_archive_scan', 'arrow_events_roundtrip', 'bson_events_scan', 'cbor_events_scan', 'doc_length_histogram', 'docx_extract_text', 'jsonl_bgzf_scan', 'jsonl_xz_blocks_scan', 'msgpack_events_scan', 'pptx_extract_text', 'rtf_extract_text', 'seekable_sink_roundtrip', 'sketch_hll_tokens', 'sketch_intersect_distinct', 'wat_extract_links', 'xlsx_events_roundtrip']

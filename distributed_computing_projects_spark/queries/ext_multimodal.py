@@ -81,7 +81,7 @@ def q_multimodal_payload_stats(spark, sf_dir):
 
 @query(
     "multimodal_features",
-    # The EXECUTION is genuinely non-SQL (Arrow mapInPandas over binary
+    # The EXECUTION is genuinely non-SQL (Arrow row stage over binary
     # payloads — the real-decoder integration point), but the stub
     # features are byte arithmetic, so the oracle can still pin exact
     # VALUES: per-byte decode of DuckDB's hex(blob) via a list
@@ -108,7 +108,7 @@ def q_multimodal_payload_stats(spark, sf_dir):
            'text/plain' AS mime
     FROM h
     """,
-    doc="Arrow-batched mapInPandas feature extraction over binary "
+    doc="Arrow row-stage feature extraction over binary "
         "payloads (decode stubbed with deterministic byte features; "
         "value-level oracle via per-byte hex decode in SQL).",
 )
@@ -183,7 +183,7 @@ _PPM_HEADER = f"P6\n{IMG_W} {IMG_H}\n255\n".encode()
     doc="REAL image decode end-to-end: a binary PPM (P6) payload is "
         "built in-plan per doc (header + the doc's first 36 text "
         "bytes as 4x3 RGB pixels — the corpus is ASCII, pytest-"
-        "pinned), then numpy-decoded inside the Arrow mapInPandas "
+        "pinned), then numpy-decoded inside the Arrow row stage "
         "(operators/multimodal.py:decode_image — no imaging library "
         "involved, which is exactly why this container CAN run it; "
         "PNG and baseline JPEG have their own queries in this family). "
@@ -394,7 +394,7 @@ _RW, _RH = IMG_W // RESIZE_F, IMG_H // RESIZE_F  # resized dims (2 x 1)
     """,
     doc=f"Image RESIZE end-to-end: the per-doc PPM payload (same "
         "construction as multimodal_image_decode) is decoded and "
-        f"box-downsampled by {RESIZE_F} inside the Arrow mapInPandas "
+        f"box-downsampled by {RESIZE_F} inside the Arrow row stage "
         "(multimodal.resize_image) — each output pixel is an integer "
         "block-sum floor-divide, so the resample is exactly "
         "recomputable by the oracle from character codes (float "
@@ -731,7 +731,7 @@ def _wav_header() -> bytes:
     doc="REAL audio decode end-to-end: a 16-bit PCM WAV payload is "
         "built in-plan per doc (44-byte RIFF header + the doc's first "
         "36 text bytes as 18 little-endian mono samples), then "
-        "numpy-decoded inside the Arrow mapInPandas "
+        "numpy-decoded inside the Arrow row stage "
         "(operators/multimodal.py:decode_audio — library-free, like "
         "the PPM/BMP image path; MP3/AAC stay the documented codec "
         "integration point). Integer aggregates (sample sum, peak "
@@ -864,7 +864,7 @@ _VID_PX = """
         "with hdrl/movi/idx1, each frame a flat 8x8 baseline JPEG "
         "whose Y/Cb/Cr are text bytes 3f..3f+2), then the pure-stdlib "
         "demuxer walks the chunk tree and the pure-numpy JPEG codec "
-        "decodes every frame inside one Arrow mapInPandas "
+        "decodes every frame inside one Arrow row stage "
         "(video.decode_video), aggregated JVM-side to per-doc frame "
         "count + pixel sums. Flat tiles keep the whole pipeline "
         "bit-exact, so the oracle recomputes each frame's 16.16 "
@@ -955,7 +955,7 @@ def q_multimodal_video_frame_sample(spark, sf_dir):
         "Rice-coded frames), then the pure-stdlib FLAC codec "
         "(operators/flac.py — Rice/unary entropy decode, fixed+LPC "
         "predictors, CRC-8/16 verification, channel decorrelation) "
-        "decodes it inside the Arrow mapInPandas. FLAC is LOSSLESS, "
+        "decodes it inside the Arrow row stage. FLAC is LOSSLESS, "
         "so unlike lossy codecs the decode is bit-exact by "
         "construction and the oracle recomputes the sample aggregates "
         "directly from character codes — the honest differential "
@@ -2191,7 +2191,7 @@ def _g711_expr(byte: str, law: str) -> str:
         "payloads are built in-plan (mu-law under id*2, A-law under "
         "id*2+1, code bytes = the doc's first text bytes), then "
         "expanded to linear PCM16 through the closed-form ITU tables "
-        "inside the same Arrow mapInPandas as the PCM/FLAC path "
+        "inside the same Arrow row stage as the PCM/FLAC path "
         "(decode_audio dispatches on the fmt tag). The oracle applies "
         "the IDENTICAL expansion arithmetic per code byte in SQL — a "
         "true two-engine differential of the codec math itself, exact "
@@ -2310,7 +2310,7 @@ def _adpcm_oracle() -> str:
         "the next sample, so unlike PCM/G.711 no per-sample closed "
         "form exists. Per doc one mono block is built in-plan (fixed "
         "header state, nibbles = the doc's first text bytes, low "
-        "nibble first) and decoded in the Arrow mapInPandas "
+        "nibble first) and decoded in the Arrow row stage "
         "(_ima_decode_block). The oracle REPLAYS the decoder's state "
         "machine as a recursive CTE — one recursion step per sample, "
         "step/index tables inlined as list literals — making the "

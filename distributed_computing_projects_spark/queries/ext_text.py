@@ -1059,7 +1059,7 @@ assert _ud.normalize("NFC", _NFC_SUFFIX) != _NFC_SUFFIX, (
         "mixing decomposed (e+COMBINING ACUTE, A+COMBINING RING, "
         "o+DIAERESIS, n+TILDE) and precomposed (U+00E9) forms, Spark "
         "normalizes through CPython's unicodedata in an Arrow "
-        "mapInPandas, and the oracle normalizes through DuckDB's "
+        "row stage, and the oracle normalizes through DuckDB's "
         "utf8proc nfc_normalize — two INDEPENDENT Unicode "
         "implementations whose canonical-composition tables must "
         "agree character for character, with the normalized STRING "

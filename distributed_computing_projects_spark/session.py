@@ -21,6 +21,7 @@ Spark's scheduler. Every knob here is chosen for the 100 TB target:
 from __future__ import annotations
 
 import os
+import weakref
 
 from pyspark.sql import SparkSession
 
@@ -71,23 +72,28 @@ def hadoop_conf_from_env(env=None) -> dict[str, str]:
 # the returned lazy DataFrame — a plain spark.conf.set inside a query
 # function would be reset long before the bench's count() runs.
 # Sessions are memoized per (base session, conf) so bench reps reuse
-# one sibling instead of leaking SessionStates.
+# one sibling instead of leaking SessionStates. The memo holds the base
+# session weakly: an ``id()`` key could be reused by a new base after
+# the old one was stopped and collected, handing out a sibling bound to
+# a stopped SparkContext.
 
-_DERIVED_SESSIONS: dict[tuple[int, tuple[tuple[str, str], ...]],
-                        SparkSession] = {}
+_DERIVED_SESSIONS: weakref.WeakKeyDictionary[
+    SparkSession, dict[tuple[tuple[str, str], ...], SparkSession]
+] = weakref.WeakKeyDictionary()
 
 
 def derived_session(spark: SparkSession,
                     confs: dict[str, str]) -> SparkSession:
     """A sibling session of ``spark`` with ``confs`` applied to its
     (separate) runtime SQLConf. The base session's conf is untouched."""
-    key = (id(spark._jsparkSession), tuple(sorted(confs.items())))
-    s = _DERIVED_SESSIONS.get(key)
+    siblings = _DERIVED_SESSIONS.setdefault(spark, {})
+    key = tuple(sorted(confs.items()))
+    s = siblings.get(key)
     if s is None:
         s = spark.newSession()
         for k, v in confs.items():
             s.conf.set(k, v)
-        _DERIVED_SESSIONS[key] = s
+        siblings[key] = s
     return s
 
 

@@ -5,7 +5,8 @@ dumps), and a format THIS Spark cannot read natively (no `arrow`
 datasource; verified). Unlike the avro/zip walks there is no need for
 a from-scratch parser: ``pyarrow`` — the format's reference
 implementation — is baked into the workers, so the idiomatic reader
-is pyarrow inside Arrow ``mapInPandas``; this module adds the
+is pyarrow inside ``mapInArrow``, decoded batches handed straight
+back; this module adds the
 engine's seam discipline around it:
 
 - BOTH framings route through one walker: the FILE format
@@ -36,9 +37,8 @@ text/CSV only, mp3/src/maple/mapler.go:41-43).
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+import datetime as dt
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 MAGIC = b"ARROW1"
@@ -113,68 +113,81 @@ def batches_from_binary(bin_df: DataFrame, ddl: str) -> DataFrame:
     batch scan and the streaming landing-zone twin
     (``readStream.format('binaryFile')``), so batch and stream agree
     record-for-record (the avro ``records_from_binary`` pattern)."""
+    import pyarrow as pa
+
+    from pyspark.sql.pandas.types import to_arrow_schema
     from pyspark.sql.types import StructType
 
     # a real DDL parse, not a comma split: nested types
     # (map<string,int>, decimal(10,2)) carry commas of their own
-    fields = StructType.fromDDL(ddl).fields
-    names = [f.name for f in fields]
-    kinds = {f.name: f.dataType.simpleString() for f in fields}
+    spark_schema = StructType.fromDDL(ddl)
+    schema = to_arrow_schema(spark_schema)
+    kinds = [f.dataType.simpleString() for f in spark_schema.fields]
 
-    def coerce(kind: str, s: pd.Series) -> pd.Series:
-        # one scan spans shard generations: a shard whose column type
-        # drifted (string vs double, tz-aware vs ntz timestamp) must
-        # null / convert per-CELL like the avro and xlsx adapters, not
-        # kill the task in Spark's Arrow serializer
+    def column(batch, field, kind):
+        i = batch.schema.get_field_index(field.name)
+        if i < 0:
+            return pa.nulls(batch.num_rows, field.type)
+        col = batch.column(i)
+        if col.type == field.type and not kind.startswith("map<"):
+            return col
+        if pa.types.is_timestamp(col.type) \
+                and pa.types.is_timestamp(field.type):
+            # tz drift: naive reads as UTC, aware keeps its instant
+            return col.cast(field.type, safe=False)
+        return pa.array([_cell(kind, v) for v in col.to_pylist()],
+                        type=field.type)
+
+    def gen(batches):
+        for inp in batches:
+            for content in inp.column(0).to_pylist():
+                for batch in iter_batches(content):
+                    yield pa.RecordBatch.from_arrays(
+                        [column(batch, f, k)
+                         for f, k in zip(schema, kinds)], schema=schema)
+
+    return bin_df.select("content").mapInArrow(gen, ddl)
+
+
+def _cell(kind: str, v):
+    """One drifted cell coerced to the reader type, or null. One scan
+    spans shard generations: a shard whose column type drifted
+    (string vs double, numeric-as-string) must null / convert per
+    CELL like the avro and xlsx adapters, not kill the task in
+    Spark's Arrow serializer."""
+    if v is None:
+        return None
+    try:
         if kind in ("bigint", "int", "smallint", "tinyint"):
-            return pd.to_numeric(s, errors="coerce").round() \
-                .astype("Int64")
+            return int(v) if isinstance(v, int) else round(float(v))
         if kind in ("double", "float"):
-            return pd.to_numeric(s, errors="coerce").astype("float64")
-        if kind == "boolean":
-            return pd.Series(
-                [bool(v) if isinstance(v, (bool,)) or
-                 (isinstance(v, (int,)) and v in (0, 1)) else None
-                 for v in s], dtype="object")
-        if kind in ("timestamp", "timestamp_ntz"):
-            out = pd.to_datetime(pd.Series(list(s), dtype="object"),
-                                 errors="coerce", utc=True)
-            # INSTANT must be tz-aware UTC (Arrow localizes naive
-            # values to the session tz — the avro lesson); ntz naive
-            return out if kind == "timestamp" \
-                else out.dt.tz_localize(None)
-        if kind == "string":
-            return pd.Series(
-                [v if isinstance(v, str)
-                 else (None if v is None or v != v else str(v))
-                 for v in s], dtype="object")
-        if kind == "binary":
-            return pd.Series(
-                [bytes(v) if isinstance(v, (bytes, bytearray,
-                                            memoryview)) else None
-                 for v in s], dtype="object")
-        # nested types (array/map/struct): pass through — drift here
-        # stays task-fatal by design (no lossless per-cell coercion)
-        return s
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for content in pdf["content"]:
-                for batch in iter_batches(bytes(content)):
-                    # maps_as_pydicts: Spark's Arrow serializer wants
-                    # map cells as dicts; to_pandas defaults to
-                    # key-value tuple lists ("lossy" = last duplicate
-                    # key wins, the Spark map semantic, instead of
-                    # failing the batch)
-                    cols = batch.to_pandas(maps_as_pydicts="lossy")
-                    out = {}
-                    for n in names:
-                        out[n] = (coerce(kinds[n], cols[n])
-                                  if n in cols.columns
-                                  else [None] * batch.num_rows)
-                    yield pd.DataFrame(out)
-
-    return bin_df.select("content").mapInPandas(gen, ddl)
+            return float(v)
+    except (TypeError, ValueError, OverflowError):
+        return None
+    if kind == "boolean":
+        return v if isinstance(v, bool) else (
+            bool(v) if isinstance(v, int) and v in (0, 1) else None)
+    if kind in ("timestamp", "timestamp_ntz"):
+        if isinstance(v, str):
+            try:
+                v = dt.datetime.fromisoformat(v)
+            except ValueError:
+                return None
+        if not isinstance(v, dt.datetime):
+            return None
+        if kind == "timestamp_ntz" and v.tzinfo is not None:
+            v = v.astimezone(dt.timezone.utc).replace(tzinfo=None)
+        return v  # a naive INSTANT reads as UTC
+    if kind == "string":
+        return v if isinstance(v, str) else (None if v != v else str(v))
+    if kind == "binary":
+        return bytes(v) if isinstance(v, (bytes, bytearray,
+                                          memoryview)) else None
+    if kind.startswith("map<"):
+        return dict(v)  # duplicate keys: last wins, the Spark semantic
+    # other nested types (array/struct): pass through — drift here
+    # stays task-fatal by design (no lossless per-cell coercion)
+    return v
 
 
 def infer_ipc_ddl(path: str) -> str:

@@ -60,6 +60,8 @@ from typing import Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 
+from distributed_computing_projects_spark.operators.spread import flat_map_rows
+
 MAGIC = b"Obj\x01"
 MAX_BLOCK_BYTES = 1 << 28  # 256 MiB decompressed, the codec-walk bound
 MAX_BLOCK_RECORDS = 1 << 22  # count bomb guard: zero-byte records
@@ -344,7 +346,7 @@ def _avro_field_ddl(schema) -> str:
 
 
 def avro_spark_ddl(schema) -> str:
-    """Top-level record schema -> Spark mapInPandas DDL string."""
+    """Top-level record schema -> Spark row-stage DDL string."""
     if not (isinstance(schema, dict) and schema.get("type") == "record"):
         raise ValueError("top-level avro schema must be a record")
     return ", ".join(f"{f['name']} {_avro_field_ddl(f['type'])}"
@@ -353,7 +355,7 @@ def avro_spark_ddl(schema) -> str:
 
 def _logical_fields(schema) -> dict[str, str]:
     """field name -> logicalType for top-level timestamp/date fields
-    (decoded as raw longs/ints; the pandas stage converts)."""
+    (decoded as raw longs/ints; the field adapter rescales)."""
     out = {}
     for f in schema["fields"]:
         t = f["type"]
@@ -421,6 +423,17 @@ def _base_type(t) -> str:
     return t
 
 
+# logicalType -> factor from the decoded long/int to the Arrow cell
+# (microseconds for both timestamp kinds, days for date). Whether the
+# instant is UTC-aware (``timestamp``) or a zone-less wall clock
+# (``timestamp_ntz``) is the DDL's Arrow type, from _avro_field_ddl.
+_LOGICAL_SCALE = {
+    "timestamp-micros": 1, "timestamp-millis": 1000,
+    "local-timestamp-micros": 1, "local-timestamp-millis": 1000,
+    "date": 1,
+}
+
+
 def _field_adapters(avro_schema) -> dict:
     """name -> (default, adapt) for top-level reader fields — the
     spec's Schema Resolution rules that matter across file
@@ -431,12 +444,14 @@ def _field_adapters(avro_schema) -> dict:
     value is TYPE-CHECKED against the reader type and nulled on
     mismatch — an unresolvable generation difference must degrade to
     a null field, never reach Arrow as a mis-typed cell that kills
-    the whole task (adversarial-review finding)."""
+    the whole task (adversarial-review finding). Timestamp and date
+    logical types rescale to their Arrow cell (``_LOGICAL_SCALE``)."""
+    logical = _logical_fields(avro_schema)
     out = {}
     for f in avro_schema["fields"]:
         base = _base_type(f["type"])
 
-        def make_adapt(base):
+        def make_adapt(base, scale):
             ok = _TYPE_OK.get(base)
 
             def adapt(v):
@@ -452,10 +467,11 @@ def _field_adapters(avro_schema) -> dict:
                     return None
                 if ok == (int,) and isinstance(v, bool):
                     return None  # bool is not an avro int/long
-                return v
+                return v * scale if scale else v
             return adapt
 
-        out[f["name"]] = (f.get("default"), make_adapt(base))
+        out[f["name"]] = (f.get("default"), make_adapt(
+            base, _LOGICAL_SCALE.get(logical.get(f["name"]))))
     return out
 
 
@@ -486,8 +502,8 @@ def encode_datum(avro_schema, value) -> bytes:
 
 def read_avro(spark: SparkSession, path: str, avro_schema) -> DataFrame:
     """DataFrame over ``.avro`` OCF files: binaryFile scan (per-file
-    parallelism), stdlib block walk + binary decode inside Arrow
-    ``mapInPandas``, block-granular malformed drops.
+    parallelism), stdlib block walk + binary decode inside the Arrow
+    row stage, block-granular malformed drops.
 
     ``avro_schema`` (dict form or JSON string) is the READER schema:
     each file decodes against its own embedded writer schema, then
@@ -508,63 +524,22 @@ def records_from_binary(bin_df: DataFrame, avro_schema) -> DataFrame:
     batch scan and the streaming landing-zone source
     (``readStream.format('binaryFile')``), so batch and stream agree
     record-for-record."""
-    import pandas as pd
-
     if isinstance(avro_schema, str):
         avro_schema = json.loads(avro_schema)
-    ddl = avro_spark_ddl(avro_schema)
-    names = [f["name"] for f in avro_schema["fields"]]
-    logical = _logical_fields(avro_schema)
     adapters = _field_adapters(avro_schema)
+    cells = [(f["name"], *adapters[f["name"]])
+             for f in avro_schema["fields"]]
 
-    def gen(batches):
-        for pdf in batches:
-            for content in pdf["content"]:
-                rows = {n: [] for n in names}
-                n_rows = 0
-                for rec in iter_records(bytes(content)):
-                    for n in names:
-                        default, adapt = adapters[n]
-                        v = rec.get(n, default)
-                        if v is not None:
-                            v = adapt(v)
-                        rows[n].append(v)
-                    n_rows += 1
-                    if n_rows >= 8192:
-                        yield _to_pdf(pd, rows, logical)
-                        rows = {n: [] for n in names}
-                        n_rows = 0
-                if n_rows:
-                    yield _to_pdf(pd, rows, logical)
+    def decode(content):
+        for rec in iter_records(content):
+            row = []
+            for n, default, adapt in cells:
+                v = rec.get(n, default)
+                row.append(None if v is None else adapt(v))
+            yield row
 
-    return bin_df.select("content").mapInPandas(gen, ddl)
-
-
-def _to_pdf(pd, rows: dict, logical: dict):
-    out = {}
-    for n, vals in rows.items():
-        lt = logical.get(n)
-        if lt in ("timestamp-micros", "timestamp-millis"):
-            # spec: UTC instants. The series must be tz-AWARE UTC:
-            # Arrow localizes naive values to the session timezone, so
-            # a naive series is only correct when the session happens
-            # to pin UTC — a user-supplied session in another zone
-            # would shift every instant (adversarial-review finding).
-            out[n] = pd.to_datetime(pd.Series(vals, dtype="Int64"),
-                                    unit="us" if "micros" in lt
-                                    else "ms", utc=True)
-        elif lt in ("local-timestamp-micros", "local-timestamp-millis"):
-            # zone-less wall-clock (Spark timestamp_ntz): naive is the
-            # correct representation here
-            out[n] = pd.to_datetime(pd.Series(vals, dtype="Int64"),
-                                    unit="us" if "micros" in lt
-                                    else "ms")
-        elif lt == "date":
-            out[n] = pd.to_datetime(pd.Series(vals, dtype="Int64"),
-                                    unit="D").dt.date
-        else:
-            out[n] = vals
-    return pd.DataFrame(out)
+    return flat_map_rows(bin_df.select("content"), decode,
+                         avro_spark_ddl(avro_schema))
 
 
 # ----------------------------------------------------- fixture writer

@@ -145,12 +145,6 @@ def bgzf_lines(spark: SparkSession, path: str,
     parallelism — the gzip twin of ``zstdseek.seekable_lines``, same
     adaptive split sizing, same drop policies, same ownership
     protocol (via the shared ``split_lines``)."""
-    import pandas as pd
-
-    from distributed_computing_projects_spark.sources.compressed import (
-        iter_lines,
-    )
-
     files = _resolve(path)
     plans = {p: walk_members(p) for p in files}
     if target_bytes is None:
@@ -162,47 +156,8 @@ def bgzf_lines(spark: SparkSession, path: str,
     splits = []
     for p in files:
         splits.extend(plan_splits([p], target_bytes))
-    if not splits:
-        return spark.createDataFrame([], "value string")
-    rows = [(s["path"], s["c_off"], s["c_len"], s["d_off"],
-             s["d_len"], s["cont_end"], s["streaming"])
-            for s in splits]
-    sdf = spark.createDataFrame(
-        rows,
-        "path string, c_off bigint, c_len bigint, d_off bigint, "
-        "d_len bigint, cont_end bigint, streaming boolean",
-    ).repartition(len(rows))
-
-    def gen(batches):
-        for pdf in batches:
-            for row in pdf.itertuples(index=False):
-                sp = dict(path=row.path, c_off=int(row.c_off),
-                          c_len=int(row.c_len), d_off=int(row.d_off),
-                          d_len=int(row.d_len),
-                          cont_end=int(row.cont_end))
-                out: list[str] = []
-                with open(row.path, "rb") as f:
-                    if row.streaming:
-                        f.seek(sp["c_off"])
-                        data = f.read(sp["c_len"])
-                        it = iter_lines(data, _gzip_decompressor)
-                    else:
-                        it = ZS.split_lines(f, sp, _gzip_decompressor)
-                    for ln in it:
-                        if ln.endswith(b"\r"):
-                            ln = ln[:-1]
-                        try:
-                            s = ln.decode("utf-8")
-                        except UnicodeDecodeError:
-                            continue
-                        out.append(s)
-                        if len(out) >= 8192:
-                            yield pd.DataFrame({"value": out})
-                            out = []
-                if out:
-                    yield pd.DataFrame({"value": out})
-
-    return sdf.mapInPandas(gen, "value string")
+    return ZS.lines_from_splits(
+        spark, splits, lambda sp: (_gzip_decompressor, _gzip_decompressor))
 
 
 def _resolve(path: str):

@@ -49,6 +49,8 @@ from typing import Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 
+from distributed_computing_projects_spark.operators.spread import decode_records
+
 MAX_DOC_BYTES = 1 << 28  # document bomb bound
 _MAX_DEPTH = 64          # nesting bound (hostile-document guard)
 
@@ -157,6 +159,13 @@ def parse_document(doc: bytes, depth: int = 0):
 # ----------------------------------------------------- Spark stages
 
 
+def _iter_docs(data: bytes):
+    for raw in iter_bson_docs(data):
+        doc = parse_document(raw)
+        if doc is not None:  # malformed elements: record drop
+            yield doc
+
+
 def _adapter(sql_type: str):
     def scalar(t, v, want):
         if v is None:
@@ -185,6 +194,10 @@ def _adapter(sql_type: str):
         if tv is None:
             return None
         t, v = tv
+        if sql_type == "timestamp":
+            # 0x09 is ms since epoch; emitted as Arrow microseconds
+            # (UTC, the avro instant lesson)
+            return v * 1000 if t == 0x09 else None
         if sql_type.startswith("array<"):
             if t != 0x04 or v is None:
                 return None
@@ -198,8 +211,8 @@ def _adapter(sql_type: str):
 
 def read_bson(spark: SparkSession, path: str, ddl: str) -> DataFrame:
     """DataFrame over ``.bson`` dump files: binaryFile scan
-    (per-file parallelism), the stdlib document walk inside Arrow
-    ``mapInPandas``, record-granular malformed drops, DDL-by-name
+    (per-file parallelism), the stdlib document walk inside the Arrow
+    row stage, record-granular malformed drops, DDL-by-name
     resolution with per-cell nulling adapters."""
     return docs_from_binary(
         spark.read.format("binaryFile").load(path), ddl)
@@ -209,57 +222,7 @@ def docs_from_binary(bin_df: DataFrame, ddl: str) -> DataFrame:
     """The decode stage of :func:`read_bson` over any
     binaryFile-shaped DataFrame — shared by batch and the streaming
     landing-zone pattern (the avro/tfrecord twin)."""
-    import pandas as pd
-
-    from pyspark.sql.types import StructType
-
-    fields = StructType.fromDDL(ddl).fields
-    names = [f.name for f in fields]
-    has_ts = [f.name for f in fields
-              if f.dataType.simpleString() == "timestamp"]
-    adapters = {}
-    for f in fields:
-        kind = f.dataType.simpleString()
-        if kind == "timestamp":
-            # 0x09 is ms since epoch; emitted as Int64 then converted
-            # tz-aware (the avro instant lesson) in the frame stage
-            adapters[f.name] = (
-                lambda tv: tv[1] if tv is not None
-                and tv[0] == 0x09 else None)
-        else:
-            adapters[f.name] = _adapter(kind)
-
-    def to_pdf(rows):
-        out = {}
-        for n in names:
-            if n in has_ts:
-                out[n] = pd.to_datetime(
-                    pd.Series(rows[n], dtype="Int64"), unit="ms",
-                    utc=True)
-            else:
-                out[n] = rows[n]
-        return pd.DataFrame(out)
-
-    def gen(batches):
-        for pdf in batches:
-            for content in pdf["content"]:
-                rows = {n: [] for n in names}
-                n_rows = 0
-                for raw in iter_bson_docs(bytes(content)):
-                    doc = parse_document(raw)
-                    if doc is None:
-                        continue  # malformed elements: record drop
-                    for n in names:
-                        rows[n].append(adapters[n](doc.get(n)))
-                    n_rows += 1
-                    if n_rows >= 8192:
-                        yield to_pdf(rows)
-                        rows = {n: [] for n in names}
-                        n_rows = 0
-                if n_rows:
-                    yield to_pdf(rows)
-
-    return bin_df.select("content").mapInPandas(gen, ddl)
+    return decode_records(bin_df, ddl, _iter_docs, _adapter)
 
 
 # ----------------------------------------------------- fixture twin

@@ -48,6 +48,8 @@ from typing import Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 
+from distributed_computing_projects_spark.operators.spread import decode_records
+
 MAX_VALUE_BYTES = 1 << 28
 MAX_CONTAINER = 1 << 24
 _MAX_DEPTH = 64
@@ -242,7 +244,16 @@ def iter_cbor_values(data: bytes) -> Iterator:
 # ----------------------------------------------------- Spark stages
 
 
-def _adapter(sql_type: str):
+def _iter_rows(data: bytes):
+    for v in iter_cbor_values(data):
+        if isinstance(v, dict) and all(isinstance(k, str) for k in v):
+            yield v  # anything else, incl. _Invalid: row drop
+
+
+def cell_adapter(sql_type: str):
+    """Per-cell nulling adapter from one DDL type to decoded
+    self-describing values — shared with the MessagePack twin. A value
+    of the wrong kind, or an integer outside bigint, nulls the cell."""
     def scalar(v, want):
         if v is None:
             return None
@@ -266,6 +277,10 @@ def _adapter(sql_type: str):
         return None
 
     def adapt(v):
+        if sql_type == "timestamp":
+            # tag-1 epoch seconds, emitted as Arrow microseconds (UTC)
+            return (v.sec * 1_000_000 if isinstance(v, _Timestamp)
+                    and isinstance(v.sec, int) else None)
         if sql_type.startswith("array<"):
             if not isinstance(v, list):
                 return None
@@ -277,7 +292,7 @@ def _adapter(sql_type: str):
 
 def read_cbor(spark: SparkSession, path: str, ddl: str) -> DataFrame:
     """DataFrame over ``.cbor`` sequence files: binaryFile scan, the
-    stdlib item walk inside Arrow ``mapInPandas``, row/stream drops,
+    stdlib item walk inside the Arrow row stage, row/stream drops,
     DDL-by-name resolution with per-cell nulling adapters."""
     return values_from_binary(
         spark.read.format("binaryFile").load(path), ddl)
@@ -286,55 +301,7 @@ def read_cbor(spark: SparkSession, path: str, ddl: str) -> DataFrame:
 def values_from_binary(bin_df: DataFrame, ddl: str) -> DataFrame:
     """The decode stage of :func:`read_cbor` over any
     binaryFile-shaped DataFrame (the msgpack twin)."""
-    import pandas as pd
-
-    from pyspark.sql.types import StructType
-
-    fields = StructType.fromDDL(ddl).fields
-    names = [f.name for f in fields]
-    has_ts = [f.name for f in fields
-              if f.dataType.simpleString() == "timestamp"]
-    adapters = {}
-    for f in fields:
-        kind = f.dataType.simpleString()
-        if kind == "timestamp":
-            adapters[f.name] = (
-                lambda v: v.sec if isinstance(v, _Timestamp)
-                and isinstance(v.sec, int) else None)
-        else:
-            adapters[f.name] = _adapter(kind)
-
-    def to_pdf(rows):
-        out = {}
-        for n in names:
-            if n in has_ts:
-                out[n] = pd.to_datetime(
-                    pd.Series(rows[n], dtype="Int64"), unit="s",
-                    utc=True)
-            else:
-                out[n] = rows[n]
-        return pd.DataFrame(out)
-
-    def gen(batches):
-        for pdf in batches:
-            for content in pdf["content"]:
-                rows = {n: [] for n in names}
-                n_rows = 0
-                for v in iter_cbor_values(bytes(content)):
-                    if not isinstance(v, dict) or not all(
-                            isinstance(k, str) for k in v):
-                        continue  # incl. _Invalid: row drop
-                    for n in names:
-                        rows[n].append(adapters[n](v.get(n)))
-                    n_rows += 1
-                    if n_rows >= 8192:
-                        yield to_pdf(rows)
-                        rows = {n: [] for n in names}
-                        n_rows = 0
-                if n_rows:
-                    yield to_pdf(rows)
-
-    return bin_df.select("content").mapInPandas(gen, ddl)
+    return decode_records(bin_df, ddl, _iter_rows, cell_adapter)
 
 
 # ----------------------------------------------------- fixture twin

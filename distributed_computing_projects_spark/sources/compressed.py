@@ -20,7 +20,7 @@ Design (the 100 TB shape):
   For the one layout where that fails — a single over-large shard —
   the zstd SEEKABLE format's embedded seek table lets one file split
   across tasks: ``sources/zstdseek.py``.
-- Incremental decode inside Arrow ``mapInPandas``: the decompressor's
+- Incremental decode inside the Arrow row stage: the decompressor's
   bz2-style ``decompress(data, max_length)`` contract yields output
   in bounded slices, lines are split and emitted in bounded batches,
   so a high-compression-ratio shard never materializes its plain
@@ -57,9 +57,10 @@ import lzma
 
 from pyspark.sql import DataFrame, SparkSession
 
+from distributed_computing_projects_spark.operators.spread import flat_map_rows
+
 MAX_LINE_BYTES = 1 << 26  # 64 MiB: generous for real JSONL records
 _OUT_CHUNK = 1 << 20      # decode granularity per decompress() call
-_BATCH_LINES = 8192       # Arrow batch size emitted to the JVM
 _DEGRADED_CAP = 1 << 28   # post-hoc bound for no-max_length backends
 
 
@@ -206,29 +207,20 @@ def lines_from_binary(bin_df: DataFrame) -> DataFrame:
     same Arrow stage serves the batch scan and the streaming
     landing-zone source (``readStream.format('binaryFile')``), so
     batch and stream agree line-for-line."""
-    import pandas as pd
+    def lines(path, content):
+        nd = decompressor_factory(path)
+        if nd is not None:
+            yield from line_rows(iter_lines(content, nd))
 
-    bin_df = bin_df.select("path", "content")
+    return flat_map_rows(bin_df.select("path", "content"), lines,
+                         "value string")
 
-    def gen(batches):
-        for pdf in batches:
-            for p, content in zip(pdf["path"], pdf["content"]):
-                nd = decompressor_factory(str(p))
-                if nd is None:
-                    continue
-                out: list[str] = []
-                for ln in iter_lines(bytes(content), nd):
-                    if ln.endswith(b"\r"):
-                        ln = ln[:-1]
-                    try:
-                        s = ln.decode("utf-8")
-                    except UnicodeDecodeError:
-                        continue
-                    out.append(s)
-                    if len(out) >= _BATCH_LINES:
-                        yield pd.DataFrame({"value": out})
-                        out = []
-                if out:
-                    yield pd.DataFrame({"value": out})
 
-    return bin_df.mapInPandas(gen, "value string")
+def line_rows(raw_lines):
+    """``(value,)`` rows from raw byte lines: a trailing CR strips,
+    a line that is not valid UTF-8 drops."""
+    for ln in raw_lines:
+        try:
+            yield (ln.removesuffix(b"\r").decode("utf-8"),)
+        except UnicodeDecodeError:
+            continue

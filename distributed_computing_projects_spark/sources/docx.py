@@ -26,8 +26,8 @@ Extraction semantics (what a text pipeline needs, not a renderer):
   drops the ROW (``None``); a zip torn AFTER document.xml still
   extracts via the ziparchive local-header fallback.
 
-Scale shape: the walk + parse run per-document inside Arrow
-``mapInPandas`` — file-parallel, bounded by the ziparchive member
+Scale shape: the walk + parse run per-document inside the Arrow row
+stage — file-parallel, bounded by the ziparchive member
 guards (encrypted/bomb/oversize members never materialize).
 
 Reference parity note: the reference reads plain text/CSV only
@@ -37,14 +37,12 @@ Reference parity note: the reference reads plain text/CSV only
 
 from __future__ import annotations
 
-from collections.abc import Iterator
 from xml.sax.saxutils import escape
 
-import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
-from distributed_computing_projects_spark.operators.spread import spread
+from distributed_computing_projects_spark.operators.spread import (
+    encode_payloads, extract_values)
 from distributed_computing_projects_spark.sources.ziparchive import (
     build_zip,
     iter_zip_members,
@@ -222,59 +220,25 @@ def docx_payloads(df: DataFrame, id_col: str, text_col: str,
     characters — multi-paragraph, multi-run (RUN_CHARS), alternating
     bold, with a styles.xml decoy part in every archive."""
 
-    def _encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, payloads = [], []
-            for i, text in zip(pdf["id"], pdf["text"]):
-                chunks = [text[k:k + para_chars]
-                          for k in range(0, len(text), para_chars)]
-                payloads.append(build_docx(chunks))
-                ids.append(i)
-            yield pd.DataFrame({"id": ids, "payload": payloads})
+    def encode(i, text):
+        return build_docx([text[k:k + para_chars]
+                           for k in range(0, len(text), para_chars)])
 
-    cols = df.select(F.col(id_col).alias("id"),
-                     F.col(text_col).alias("text"))
-    return spread(cols).mapInPandas(_encode,
-                                    schema="id bigint, payload binary")
+    return encode_payloads(df, encode, id_col, text_col)
 
 
 def read_docx(spark, path: str) -> DataFrame:
     """(path, extracted) over ``.docx`` files on disk: binaryFile
     scan (per-file parallelism), the extraction walk in Arrow
     batches, rows without extractable text dropped."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            paths, texts = [], []
-            for p, content in zip(pdf["path"], pdf["content"]):
-                text = extract_docx_text(bytes(content))
-                if text is None:
-                    continue
-                paths.append(p)
-                texts.append(text)
-            yield pd.DataFrame({"path": paths, "extracted": texts})
-
-    return (
+    return extract_values(
         spark.read.format("binaryFile").load(path)
-        .select("path", "content")
-        .mapInPandas(gen, "path string, extracted string")
-    )
+        .select("path", "content"),
+        extract_docx_text, "path string, extracted string")
 
 
 def extract_docx(payloads: DataFrame) -> DataFrame:
     """(id, extracted) over an (id, payload) DataFrame; rows whose
     payload yields no text drop (the record-granular policy)."""
-
-    def _extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, texts = [], []
-            for i, payload in zip(pdf["id"], pdf["payload"]):
-                text = extract_docx_text(bytes(payload))
-                if text is None:
-                    continue
-                ids.append(i)
-                texts.append(text)
-            yield pd.DataFrame({"id": ids, "extracted": texts})
-
-    return payloads.mapInPandas(_extract,
-                                schema="id bigint, extracted string")
+    return extract_values(payloads.select("id", "payload"),
+                          extract_docx_text, "id bigint, extracted string")

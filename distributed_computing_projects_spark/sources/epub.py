@@ -33,14 +33,12 @@ text/CSV only, mp3/src/maple/mapler.go:41-43).
 from __future__ import annotations
 
 import posixpath
-from collections.abc import Iterator
 from xml.sax.saxutils import escape
 
-import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
-from distributed_computing_projects_spark.operators.spread import spread
+from distributed_computing_projects_spark.operators.spread import (
+    encode_payloads, extract_values)
 from distributed_computing_projects_spark.sources.ziparchive import (
     build_zip,
     iter_zip_members,
@@ -291,63 +289,29 @@ def epub_payloads(df: DataFrame, id_col: str, text_col: str,
     ``chapter_chars``-sized chunks of the doc text, each split into
     ``para_chars``-sized paragraphs, members reversed vs the spine."""
 
-    def _encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, payloads = [], []
-            for i, text in zip(pdf["id"], pdf["text"]):
-                chapters = [
-                    [text[k:k + para_chars]
-                     for k in range(c, min(c + chapter_chars, len(text)),
-                                    para_chars)]
-                    for c in range(0, len(text), chapter_chars)
-                ]
-                payloads.append(build_epub(chapters))
-                ids.append(i)
-            yield pd.DataFrame({"id": ids, "payload": payloads})
+    def encode(i, text):
+        return build_epub([
+            [text[k:k + para_chars]
+             for k in range(c, min(c + chapter_chars, len(text)),
+                            para_chars)]
+            for c in range(0, len(text), chapter_chars)
+        ])
 
-    cols = df.select(F.col(id_col).alias("id"),
-                     F.col(text_col).alias("text"))
-    return spread(cols).mapInPandas(_encode,
-                                    schema="id bigint, payload binary")
+    return encode_payloads(df, encode, id_col, text_col)
 
 
 def read_epub(spark, path: str) -> DataFrame:
     """(path, extracted) over ``.epub`` files on disk: binaryFile
     scan (per-file parallelism), the package-chain walk in Arrow
     batches, rows without extractable text dropped."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            paths, texts = [], []
-            for p, content in zip(pdf["path"], pdf["content"]):
-                text = extract_epub_text(bytes(content))
-                if text is None:
-                    continue
-                paths.append(p)
-                texts.append(text)
-            yield pd.DataFrame({"path": paths, "extracted": texts})
-
-    return (
+    return extract_values(
         spark.read.format("binaryFile").load(path)
-        .select("path", "content")
-        .mapInPandas(gen, "path string, extracted string")
-    )
+        .select("path", "content"),
+        extract_epub_text, "path string, extracted string")
 
 
 def extract_epub(payloads: DataFrame) -> DataFrame:
     """(id, extracted) over an (id, payload) DataFrame; rows whose
     payload yields no text drop (the record-granular policy)."""
-
-    def _extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, texts = [], []
-            for i, payload in zip(pdf["id"], pdf["payload"]):
-                text = extract_epub_text(bytes(payload))
-                if text is None:
-                    continue
-                ids.append(i)
-                texts.append(text)
-            yield pd.DataFrame({"id": ids, "extracted": texts})
-
-    return payloads.mapInPandas(_extract,
-                                schema="id bigint, extracted string")
+    return extract_values(payloads.select("id", "payload"),
+                          extract_epub_text, "id bigint, extracted string")

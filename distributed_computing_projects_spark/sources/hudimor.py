@@ -54,8 +54,8 @@ Reader policy (the codec-seam discipline):
   the feature, and SURVEY §7 records the probe.)
 
 Merge shape (the 100 TB properties): base files read in ONE native
-parquet FileScan; log files decode in EXECUTORS (Arrow
-``mapInPandas`` over the distributed path list — per-log-file
+parquet FileScan; log files decode in EXECUTORS (the Arrow row
+stage over the distributed path list — per-log-file
 parallelism, the avro/tfrecord walk shape, never driver-side; the
 paths ride a tiny DataFrame because Hadoop's listing filter hides
 Hudi's dot-prefixed log names from ``binaryFile``, verified — each
@@ -80,6 +80,7 @@ import struct
 
 from pyspark.sql import DataFrame, SparkSession
 
+from distributed_computing_projects_spark.operators.spread import flat_map_rows
 from distributed_computing_projects_spark.sources import avro as AV
 from distributed_computing_projects_spark.sources.hudi import (
     _read_properties,
@@ -400,34 +401,18 @@ def _log_records_df(spark, log_files: list[str],
                + ", `_mor_instant` string, `_mor_seq` bigint, "
                  "`_mor_del` boolean")
 
-    def gen(batches):
-        import pandas as pd2
-
-        for pdf in batches:
-            for path in pdf["path"]:
-                # open-by-path inside the Arrow worker: Hudi log
-                # files are DOT-PREFIXED and Hadoop's listing
-                # filter hides them from binaryFile (verified),
-                # so the path list rides a tiny DataFrame and
-                # each task reads its own files — same per-file
-                # parallelism, decode still executor-side
-                with open(path, "rb") as f:
-                    data = f.read()
-                recs = blocks_to_records(data, completed, as_of)
-                if not recs:
-                    continue
-                rows = {n: [] for n in names}
-                rows["_mor_instant"] = []
-                rows["_mor_seq"] = []
-                rows["_mor_del"] = []
-                for seq, (instant, rec) in enumerate(recs):
-                    for n in names:
-                        rows[n].append(rec.get(n))
-                    rows["_mor_instant"].append(instant)
-                    rows["_mor_seq"].append(seq)
-                    rows["_mor_del"].append(
-                        bool(rec.get(DELETED_FIELD, False)))
-                yield pd2.DataFrame(rows)
+    def decode(path):
+        # open-by-path inside the Arrow worker: Hudi log files are
+        # DOT-PREFIXED and Hadoop's listing filter hides them from
+        # binaryFile (verified), so the path list rides a tiny
+        # DataFrame and each task reads its own files — same per-file
+        # parallelism, decode still executor-side
+        with open(path, "rb") as f:
+            data = f.read()
+        for seq, (instant, rec) in enumerate(
+                blocks_to_records(data, completed, as_of) or ()):
+            yield (*(rec.get(n) for n in names), instant, seq,
+                   bool(rec.get(DELETED_FIELD, False)))
 
     # dedup (several deltacommits reference the same log file — a
     # double read would double-apply its records), then slice the
@@ -440,7 +425,7 @@ def _log_records_df(spark, log_files: list[str],
         spark.sparkContext.parallelize([(p,) for p in uniq],
                                        n_slices),
         "`path` string")
-    return paths_df.mapInPandas(gen, out_ddl)
+    return flat_map_rows(paths_df, decode, out_ddl)
 
 
 def _merge(spark, schema, base_files: list[str],

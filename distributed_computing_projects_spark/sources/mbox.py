@@ -32,13 +32,11 @@ text/CSV only, mp3/src/maple/mapler.go:41-43).
 from __future__ import annotations
 
 import re
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
-from distributed_computing_projects_spark.operators.spread import spread
+from distributed_computing_projects_spark.operators.spread import (
+    encode_payloads, flat_map_rows)
 
 MAX_BODY_BYTES = 1 << 28  # decoded text/plain bound per message
 
@@ -152,35 +150,24 @@ def mbox_payloads(df: DataFrame, id_col: str, text_col: str,
     subject forcing RFC 2047) plus an html-ONLY notification message
     that extraction must drop message-granularly."""
 
-    def _encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, payloads = [], []
-            for i, text, source in zip(pdf["id"], pdf["text"],
-                                       pdf["source"]):
-                i = int(i)
-                doc_msg = build_email(
-                    f"<{i}@corpus.example.com>",
-                    f"Doc {i} – report",
-                    f"corpus-{source}@example.com",
-                    text,
-                    cte=_CTES[i % 2],
-                    html="DECOY html body that must not be extracted",
-                    boundary=f"----=fixture-{i}",
-                )
-                dud = (b"From: noreply@example.com\r\n"
-                       b"Message-ID: <dud-" + str(i).encode() +
-                       b"@example.com>\r\n"
-                       b"Content-Type: text/html\r\n\r\n"
-                       b"<p>html-only notification</p>\r\n")
-                payloads.append(build_mbox([doc_msg, dud]))
-                ids.append(i)
-            yield pd.DataFrame({"id": ids, "payload": payloads})
+    def encode(i, text, source):
+        doc_msg = build_email(
+            f"<{i}@corpus.example.com>",
+            f"Doc {i} – report",
+            f"corpus-{source}@example.com",
+            text,
+            cte=_CTES[i % 2],
+            html="DECOY html body that must not be extracted",
+            boundary=f"----=fixture-{i}",
+        )
+        dud = (b"From: noreply@example.com\r\n"
+               b"Message-ID: <dud-" + str(i).encode() +
+               b"@example.com>\r\n"
+               b"Content-Type: text/html\r\n\r\n"
+               b"<p>html-only notification</p>\r\n")
+        return build_mbox([doc_msg, dud])
 
-    cols = df.select(F.col(id_col).alias("id"),
-                     F.col(text_col).alias("text"),
-                     F.col(source_col).alias("source"))
-    return spread(cols).mapInPandas(_encode,
-                                    schema="id bigint, payload binary")
+    return encode_payloads(df, encode, id_col, text_col, source_col)
 
 
 def extract_emails(payloads: DataFrame) -> DataFrame:
@@ -189,35 +176,24 @@ def extract_emails(payloads: DataFrame) -> DataFrame:
     Message-ID (the local-part digits), message-granular drops for
     html-only/id-less messages."""
 
-    def _extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, subjects, senders, texts = [], [], [], []
-            for payload in pdf["payload"]:
-                msgs = iter_mbox_messages(bytes(payload))
-                if msgs is None:
-                    continue  # not mbox-framed: row drop
-                for m in msgs:
-                    rec = extract_message(m)
-                    if rec is None:
-                        continue
-                    mid = re.fullmatch(r"<(\d+)@[^>]+>", rec["msg_id"])
-                    if not mid:
-                        continue  # foreign Message-ID shape: drop
-                    ids.append(int(mid.group(1)))
-                    subjects.append(rec["subject"])
-                    senders.append(rec["sender"])
-                    texts.append(rec["text"])
-            yield pd.DataFrame({"id": ids, "subject": subjects,
-                                "sender": senders, "extracted": texts})
+    def extract(payload):
+        # not mbox-framed (None): row drop
+        for m in iter_mbox_messages(payload) or ():
+            rec = extract_message(m)
+            if rec is None:
+                continue
+            mid = re.fullmatch(r"<(\d+)@[^>]+>", rec["msg_id"])
+            if mid:  # a foreign Message-ID shape drops
+                yield (int(mid.group(1)), rec["subject"], rec["sender"],
+                       rec["text"])
 
-    return payloads.select("payload").mapInPandas(
-        _extract,
-        schema="id bigint, subject string, sender string, "
-               "extracted string")
+    return flat_map_rows(
+        payloads.select("payload"), extract,
+        "id bigint, subject string, sender string, extracted string")
 
 
 def read_mbox(spark, path: str) -> DataFrame:
     """:func:`extract_emails` over ``.mbox`` files on disk."""
     return extract_emails(
         spark.read.format("binaryFile").load(path)
-        .select(F.col("content").alias("payload")))
+        .withColumnRenamed("content", "payload"))

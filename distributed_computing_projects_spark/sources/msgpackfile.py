@@ -46,6 +46,9 @@ from typing import Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 
+from distributed_computing_projects_spark.operators.spread import decode_records
+from distributed_computing_projects_spark.sources.cborfile import cell_adapter
+
 MAX_VALUE_BYTES = 1 << 28   # single length declaration bound
 MAX_CONTAINER = 1 << 24     # elements per container bound
 _MAX_DEPTH = 64
@@ -221,43 +224,25 @@ def iter_msgpack_values(data: bytes) -> Iterator:
 # ----------------------------------------------------- Spark stages
 
 
-def _adapter(sql_type: str):
-    def scalar(v, want):
-        if v is None:
-            return None
-        if want == "bigint":
-            return (v if isinstance(v, int)
-                    and not isinstance(v, bool) else None)
-        if want == "double":
-            if isinstance(v, float):
-                return v
-            if isinstance(v, int) and not isinstance(v, bool):
-                return float(v)
-            return None
-        if want == "string":
-            return v if isinstance(v, str) else None
-        if want == "binary":
-            return bytes(v) if isinstance(v, (bytes, bytearray)) \
-                else None
-        if want == "boolean":
-            return v if isinstance(v, bool) else None
-        return None
+def _iter_rows(data: bytes):
+    for v in iter_msgpack_values(data):
+        if isinstance(v, dict) and all(isinstance(k, str) for k in v):
+            yield v  # anything else is not a name-addressable row: drop
 
-    def adapt(v):
-        if sql_type.startswith("array<"):
-            if not isinstance(v, list):
-                return None
-            inner = sql_type[6:-1]
-            return [scalar(e, inner) for e in v]
-        return scalar(v, sql_type)
-    return adapt
+
+def _adapter(sql_type: str):
+    if sql_type == "timestamp":
+        # Arrow microseconds (UTC), sub-microsecond nsec floored
+        return lambda v: (v.sec * 1_000_000 + v.nsec // 1000
+                          if isinstance(v, _Timestamp) else None)
+    return cell_adapter(sql_type)
 
 
 def read_msgpack(spark: SparkSession, path: str,
                  ddl: str) -> DataFrame:
     """DataFrame over ``.msgpack`` dump files: binaryFile scan
-    (per-file parallelism), the stdlib value walk inside Arrow
-    ``mapInPandas``, row/stream-granular drops, DDL-by-name
+    (per-file parallelism), the stdlib value walk inside the Arrow
+    row stage, row/stream-granular drops, DDL-by-name
     resolution with per-cell nulling adapters."""
     return values_from_binary(
         spark.read.format("binaryFile").load(path), ddl)
@@ -267,55 +252,7 @@ def values_from_binary(bin_df: DataFrame, ddl: str) -> DataFrame:
     """The decode stage of :func:`read_msgpack` over any
     binaryFile-shaped DataFrame — shared by batch and the streaming
     landing-zone pattern (the bson/sqlite twin)."""
-    import pandas as pd
-
-    from pyspark.sql.types import StructType
-
-    fields = StructType.fromDDL(ddl).fields
-    names = [f.name for f in fields]
-    has_ts = [f.name for f in fields
-              if f.dataType.simpleString() == "timestamp"]
-    adapters = {}
-    for f in fields:
-        kind = f.dataType.simpleString()
-        if kind == "timestamp":
-            adapters[f.name] = (
-                lambda v: v.sec * 1_000_000_000 + v.nsec
-                if isinstance(v, _Timestamp) else None)
-        else:
-            adapters[f.name] = _adapter(kind)
-
-    def to_pdf(rows):
-        out = {}
-        for n in names:
-            if n in has_ts:
-                out[n] = pd.to_datetime(
-                    pd.Series(rows[n], dtype="Int64"), unit="ns",
-                    utc=True)
-            else:
-                out[n] = rows[n]
-        return pd.DataFrame(out)
-
-    def gen(batches):
-        for pdf in batches:
-            for content in pdf["content"]:
-                rows = {n: [] for n in names}
-                n_rows = 0
-                for v in iter_msgpack_values(bytes(content)):
-                    if not isinstance(v, dict) or not all(
-                            isinstance(k, str) for k in v):
-                        continue  # not a name-addressable row: drop
-                    for n in names:
-                        rows[n].append(adapters[n](v.get(n)))
-                    n_rows += 1
-                    if n_rows >= 8192:
-                        yield to_pdf(rows)
-                        rows = {n: [] for n in names}
-                        n_rows = 0
-                if n_rows:
-                    yield to_pdf(rows)
-
-    return bin_df.select("content").mapInPandas(gen, ddl)
+    return decode_records(bin_df, ddl, _iter_rows, _adapter)
 
 
 # ----------------------------------------------------- fixture twin

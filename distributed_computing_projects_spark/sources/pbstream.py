@@ -45,6 +45,8 @@ from typing import Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 
+from distributed_computing_projects_spark.operators.spread import flat_map_rows
+
 MAX_MESSAGE_BYTES = 1 << 28
 
 
@@ -206,45 +208,23 @@ def messages_from_binary(bin_df: DataFrame, ddl: str,
                          fields: dict) -> DataFrame:
     """The decode stage of :func:`read_pbstream` over any
     binaryFile-shaped DataFrame (the bson/msgpack/cbor twin)."""
-    import pandas as pd
-
     from pyspark.sql.types import StructType
 
-    sfields = StructType.fromDDL(ddl).fields
-    names = [f.name for f in sfields]
-    spec = {}
-    for f in sfields:
+    spec = []
+    for f in StructType.fromDDL(ddl).fields:
         raw = fields.get(f.name)
         if raw is None:
             raise ValueError(f"no field number for column {f.name!r}")
-        if isinstance(raw, tuple):
-            fno, enc = raw
-        else:
-            fno, enc = raw, "int"
-        spec[f.name] = (int(fno),
-                        _adapter(f.dataType.simpleString(), enc))
+        fno, enc = raw if isinstance(raw, tuple) else (raw, "int")
+        spec.append((int(fno), _adapter(f.dataType.simpleString(), enc)))
 
-    def gen(batches):
-        for pdf in batches:
-            for content in pdf["content"]:
-                rows = {n: [] for n in names}
-                n_rows = 0
-                for raw in iter_delimited(bytes(content)):
-                    msg = walk_message(raw)
-                    if msg is None:
-                        continue  # malformed wire: record drop
-                    for n in names:
-                        fno, adapt = spec[n]
-                        rows[n].append(adapt(msg.get(fno, [])))
-                    n_rows += 1
-                    if n_rows >= 8192:
-                        yield pd.DataFrame(rows)
-                        rows = {n: [] for n in names}
-                        n_rows = 0
-                if n_rows:
-                    yield pd.DataFrame(rows)
+    def decode(content):
+        for raw in iter_delimited(content):
+            msg = walk_message(raw)
+            if msg is not None:  # malformed wire: record drop
+                yield tuple(adapt(msg.get(fno, [])) for fno, adapt in spec)
 
-    return bin_df.select("content").mapInPandas(gen, ddl)
+    return flat_map_rows(bin_df.select("content"), decode, ddl)
 
 
 # ----------------------------------------------------- fixture twin

@@ -18,7 +18,7 @@ or stream DROPS per the engine's malformed-record policy
 (sources/csv.py discipline, record granularity = the stream).
 
 Scale shape: like WARC, PDF is not block-splittable; the unit of
-parallelism is the FILE, and extraction is one Arrow ``mapInPandas``
+parallelism is the FILE, and extraction is one Arrow row stage
 over payload bytes with everything before it JVM-side.
 
 Reference parity note: the reference reads plain text/CSV only
@@ -30,13 +30,11 @@ from __future__ import annotations
 
 import re
 import zlib
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
-from distributed_computing_projects_spark.operators.spread import spread
+from distributed_computing_projects_spark.operators.spread import (
+    flat_map_rows, prefix_payloads)
 
 _PDF_HEADER = b"%PDF-1.4"
 
@@ -238,22 +236,9 @@ def pdf_payloads(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     first ``PDF_TEXT_BYTES`` UTF-8 bytes — even ids Flate-compress
     both content streams (REAL zlib through the decode path), odd ids
     leave them raw. Callers pre-filter to rows with enough bytes."""
-
-    def _encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, payloads = [], []
-            for i, text in zip(pdf["id"], pdf["text"]):
-                raw = text.encode("utf-8")[:PDF_TEXT_BYTES]
-                if len(raw) < PDF_TEXT_BYTES:
-                    continue
-                payloads.append(build_pdf(raw, flate=int(i) % 2 == 0))
-                ids.append(i)
-            yield pd.DataFrame({"id": ids, "payload": payloads})
-
-    cols = df.select(
-        F.col(id_col).alias("id"), F.col(text_col).alias("text")
-    )
-    return spread(cols).mapInPandas(_encode, schema="id bigint, payload binary")
+    return prefix_payloads(
+        df, id_col, text_col, PDF_TEXT_BYTES,
+        lambda i, raw: build_pdf(raw, flate=i % 2 == 0))
 
 
 PDF_SCHEMA = (
@@ -263,28 +248,16 @@ PDF_SCHEMA = (
 
 
 def extract_pdf_text(payloads: DataFrame) -> DataFrame:
-    """Per-payload PDF text extraction in one Arrow ``mapInPandas``:
+    """Per-payload PDF text extraction in one Arrow row stage:
     stream-object walk, Flate inflate, Tj/TJ scan, escape decode —
     emitting (stream/op counts, extracted byte count, byte sum of the
     extracted text) per payload. Non-PDF payloads drop the row."""
 
-    def _extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in ("id", "n_streams", "n_flate",
-                                   "n_text_ops", "n_chars", "prefix_sum")}
-            for i, payload in zip(pdf["id"], pdf["payload"]):
-                parsed = extract_text(bytes(payload))
-                if parsed is None:
-                    continue
-                n_streams, n_flate, n_ops, text = parsed
-                out["id"].append(i)
-                out["n_streams"].append(n_streams)
-                out["n_flate"].append(n_flate)
-                out["n_text_ops"].append(n_ops)
-                out["n_chars"].append(len(text))
-                out["prefix_sum"].append(int(sum(text)))
-            yield pd.DataFrame(out)
+    def extract(i, payload):
+        parsed = extract_text(payload)
+        if parsed is not None:
+            n_streams, n_flate, n_ops, text = parsed
+            yield i, n_streams, n_flate, n_ops, len(text), sum(text)
 
-    return payloads.select("id", "payload").mapInPandas(
-        _extract, schema=PDF_SCHEMA
-    )
+    return flat_map_rows(payloads.select("id", "payload"), extract,
+                         PDF_SCHEMA)

@@ -33,7 +33,7 @@ cyclic references drop the payload or stream, never the batch.
 
 Scale shape: identical to pdf.py — PDFs are not block-splittable, the
 unit of parallelism is the file, and everything runs in one Arrow
-``mapInPandas`` over payload bytes.
+row stage over payload bytes.
 
 Reference parity note: the reference reads plain text/CSV only
 (mp1/src/grep.go); PDF is LLM-ingest scale-extension surface
@@ -44,17 +44,15 @@ from __future__ import annotations
 
 import re
 import zlib
-from collections.abc import Iterator
 from typing import NamedTuple
 
-import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from distributed_computing_projects_spark.operators.multimodal import (
     _png_unfilter,
 )
-from distributed_computing_projects_spark.operators.spread import spread
+from distributed_computing_projects_spark.operators.spread import (
+    flat_map_rows, prefix_payloads)
 from distributed_computing_projects_spark.sources.pdf import (
     PDF_TEXT_BYTES,
     escape_string,
@@ -1202,44 +1200,26 @@ def build_pdf_filters(text_bytes: bytes, variant: int) -> bytes:
 
 
 # ---------------------------------------------------------------------------
-# DataFrame wiring (pdf.py shapes: encode mapInPandas -> extract
-# mapInPandas, everything before the Python stage JVM-side)
+# DataFrame wiring (pdf.py shapes: encode row stage -> extract row
+# stage, everything before the Python stage JVM-side)
 # ---------------------------------------------------------------------------
-
-def _payloads(df: DataFrame, id_col: str, text_col: str, build) -> DataFrame:
-    def _encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, payloads = [], []
-            for i, text in zip(pdf["id"], pdf["text"]):
-                raw = text.encode("utf-8")[:PDF_TEXT_BYTES]
-                if len(raw) < PDF_TEXT_BYTES:
-                    continue
-                payloads.append(build(raw, int(i)))
-                ids.append(i)
-            yield pd.DataFrame({"id": ids, "payload": payloads})
-
-    cols = df.select(
-        F.col(id_col).alias("id"), F.col(text_col).alias("text")
-    )
-    return spread(cols).mapInPandas(_encode, schema="id bigint, payload binary")
-
 
 def pdf_objstm_payloads(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """(id, payload): a PDF 1.5 object-stream-layout file per row —
     even ids put the xref stream behind PNG predictor 12, odd ids
     leave its rows raw (both decode paths on the hash path)."""
-    return _payloads(
-        df, id_col, text_col,
-        lambda raw, i: build_pdf_objstm(raw, i % 2 == 0),
+    return prefix_payloads(
+        df, id_col, text_col, PDF_TEXT_BYTES,
+        lambda i, raw: build_pdf_objstm(raw, i % 2 == 0),
     )
 
 
 def pdf_tounicode_payloads(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """(id, payload): a hex-string + ToUnicode-CMap PDF per row — even
     ids Flate the content stream, odd ids leave it raw."""
-    return _payloads(
-        df, id_col, text_col,
-        lambda raw, i: build_pdf_tounicode(raw, i % 2 == 0),
+    return prefix_payloads(
+        df, id_col, text_col, PDF_TEXT_BYTES,
+        lambda i, raw: build_pdf_tounicode(raw, i % 2 == 0),
     )
 
 
@@ -1250,7 +1230,9 @@ def pdf_filters_payloads(df: DataFrame, id_col: str, text_col: str) -> DataFrame
     matrix (see ``build_pdf_filters``) — every non-Flate filter
     ``decode_stream`` supports is on the hash path across the
     corpus."""
-    return _payloads(df, id_col, text_col, build_pdf_filters)
+    return prefix_payloads(
+        df, id_col, text_col, PDF_TEXT_BYTES,
+        lambda i, raw: build_pdf_filters(raw, i))
 
 
 OBJSTM_SCHEMA = (
@@ -1264,22 +1246,14 @@ TOUNICODE_SCHEMA = (
 
 
 def _extractor(keys: list[str], schema: str):
-    def run(payloads: DataFrame) -> DataFrame:
-        def _extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                out: dict = {k: [] for k in ["id", *keys]}
-                for i, payload in zip(pdf["id"], pdf["payload"]):
-                    facts = extract_facts(bytes(payload))
-                    if facts is None:
-                        continue
-                    out["id"].append(i)
-                    for k in keys:
-                        out[k].append(facts[k])
-                yield pd.DataFrame(out)
+    def extract(i, payload):
+        facts = extract_facts(payload)
+        if facts is not None:
+            yield (i, *(facts[k] for k in keys))
 
-        return payloads.select("id", "payload").mapInPandas(
-            _extract, schema=schema
-        )
+    def run(payloads: DataFrame) -> DataFrame:
+        return flat_map_rows(payloads.select("id", "payload"), extract,
+                             schema)
     return run
 
 

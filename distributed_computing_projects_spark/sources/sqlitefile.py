@@ -73,6 +73,8 @@ from typing import Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 
+from distributed_computing_projects_spark.operators.spread import decode_records
+
 MAX_PAYLOAD_BYTES = 1 << 28   # single-record bomb bound
 _MAX_OVERFLOW_PAGES = 1 << 20  # overflow chain bound (4 GiB at 4 KiB)
 
@@ -472,8 +474,8 @@ def _adapter(sql_type: str):
 def read_sqlite(spark: SparkSession, path: str, table: str,
                 ddl: str) -> DataFrame:
     """DataFrame over SQLite database files: binaryFile scan
-    (per-file parallelism), the stdlib page/record walk inside Arrow
-    ``mapInPandas``, row/table/file-granular drops, DDL-by-name
+    (per-file parallelism), the stdlib page/record walk inside the
+    Arrow row stage, row/table/file-granular drops, DDL-by-name
     resolution with per-cell nulling adapters."""
     return rows_from_binary(
         spark.read.format("binaryFile").load(path), table, ddl)
@@ -484,29 +486,6 @@ def rows_from_binary(bin_df: DataFrame, table: str,
     """The decode stage of :func:`read_sqlite` over any
     binaryFile-shaped DataFrame — shared by batch and the streaming
     landing-zone pattern (the avro/bson twin)."""
-    import pandas as pd
-
-    from pyspark.sql.types import StructType
-
-    fields = StructType.fromDDL(ddl).fields
-    names = [f.name for f in fields]
-    adapters = {f.name: _adapter(f.dataType.simpleString())
-                for f in fields}
-
-    def gen(batches):
-        for pdf in batches:
-            for content in pdf["content"]:
-                rows = {n: [] for n in names}
-                n_rows = 0
-                for rec in iter_table_rows(bytes(content), table):
-                    for n in names:
-                        rows[n].append(adapters[n](rec.get(n)))
-                    n_rows += 1
-                    if n_rows >= 8192:
-                        yield pd.DataFrame(rows)
-                        rows = {n: [] for n in names}
-                        n_rows = 0
-                if n_rows:
-                    yield pd.DataFrame(rows)
-
-    return bin_df.select("content").mapInPandas(gen, ddl)
+    return decode_records(
+        bin_df, ddl, lambda content: iter_table_rows(content, table),
+        _adapter)

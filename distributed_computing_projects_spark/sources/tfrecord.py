@@ -74,6 +74,8 @@ from typing import Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 
+from distributed_computing_projects_spark.operators.spread import decode_records
+
 MAX_RECORD_BYTES = 1 << 28  # 256 MiB, the codec-walk bomb bound
 _MASK_DELTA = 0xA282EAD8
 _U64 = 1 << 64
@@ -299,6 +301,13 @@ def parse_example(payload: bytes):
 # ----------------------------------------------------- Spark stages
 
 
+def _iter_examples(data: bytes):
+    for payload in iter_tfrecords(data):
+        feats = parse_example(payload)
+        if feats is not None:  # malformed Example: record drop
+            yield feats
+
+
 def _scalar_adapter(sql_type: str):
     """One cell from one (kind, values) feature, nulled on type or
     arity mismatch — the avro `_field_adapters` discipline. Scalars
@@ -345,7 +354,7 @@ def _scalar_adapter(sql_type: str):
 def read_tfrecord(spark: SparkSession, path: str, ddl: str) -> DataFrame:
     """DataFrame over ``.tfrecord`` files: binaryFile scan (per-file
     parallelism), the stdlib frame walk + Example wire decode inside
-    Arrow ``mapInPandas``, drop policy per the module docstring.
+    the Arrow row stage, drop policy per the module docstring.
     ``ddl`` is the READER schema: features resolve by NAME —
     writer-only features are discarded, reader-only columns null, a
     mis-typed or mis-shaped feature nulls its cell."""
@@ -359,35 +368,7 @@ def examples_from_binary(bin_df: DataFrame, ddl: str) -> DataFrame:
     stage serves the batch scan and the streaming landing-zone source
     (``readStream.format('binaryFile')``), so batch and stream agree
     record-for-record (the avro/arrowipc pattern)."""
-    import pandas as pd
-
-    from pyspark.sql.types import StructType
-
-    fields = StructType.fromDDL(ddl).fields
-    names = [f.name for f in fields]
-    adapters = {f.name: _scalar_adapter(f.dataType.simpleString())
-                for f in fields}
-
-    def gen(batches):
-        for pdf in batches:
-            for content in pdf["content"]:
-                rows = {n: [] for n in names}
-                n_rows = 0
-                for payload in iter_tfrecords(bytes(content)):
-                    feats = parse_example(payload)
-                    if feats is None:
-                        continue  # malformed Example: record drop
-                    for n in names:
-                        rows[n].append(adapters[n](feats.get(n)))
-                    n_rows += 1
-                    if n_rows >= 8192:
-                        yield pd.DataFrame(rows)
-                        rows = {n: [] for n in names}
-                        n_rows = 0
-                if n_rows:
-                    yield pd.DataFrame(rows)
-
-    return bin_df.select("content").mapInPandas(gen, ddl)
+    return decode_records(bin_df, ddl, _iter_examples, _scalar_adapter)
 
 
 # ----------------------------------------------------- fixture writer

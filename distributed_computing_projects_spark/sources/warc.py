@@ -20,7 +20,7 @@ length-prefixed but unindexed), so the unit of parallelism is the
 FILE — Common Crawl ships ~1 GB segment files in the tens of
 thousands, far more files than executors, which is exactly the
 granularity Spark's whole-file reads parallelize over. Parsing is an
-Arrow-batched ``mapInPandas`` per payload; everything before it
+Arrow row stage (``flat_map_rows``) per payload; everything before it
 (eligibility filters, file listing) stays JVM-side.
 
 The record builder is a deterministic fixture generator (per-doc
@@ -37,13 +37,11 @@ from __future__ import annotations
 import gzip
 import re
 import zlib
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
-from distributed_computing_projects_spark.operators.spread import spread
+from distributed_computing_projects_spark.operators.spread import (
+    encode_payloads, flat_map_rows)
 
 _CRLF = b"\r\n"
 _GZIP_MAGIC = b"\x1f\x8b"
@@ -371,6 +369,20 @@ def decode_content_encoding(head: bytes, body: bytes,
 WARC_PREFIX = 32
 
 
+def _warcinfo() -> bytes:
+    return build_record(
+        "warcinfo", {"Content-Type": "application/warc-fields"},
+        b"software: fixture\r\n")
+
+
+def _doc_url(source, i) -> str:
+    return f"https://{source}.example.com/doc/{i}"
+
+
+def _gz(record: bytes) -> bytes:
+    return gzip.compress(record, compresslevel=6, mtime=0)
+
+
 def warc_payloads(df: DataFrame, id_col: str, text_col: str,
                   source_col: str) -> DataFrame:
     """(id, payload): a deterministic two-record WARC per row — a
@@ -378,26 +390,11 @@ def warc_payloads(df: DataFrame, id_col: str, text_col: str,
     whose Target-URI derives from (source, id) and whose body is the
     doc text. No eligibility filter: WARC carries any body length."""
 
-    def _encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, payloads = [], []
-            for i, text, source in zip(pdf["id"], pdf["text"],
-                                       pdf["source"]):
-                url = f"https://{source}.example.com/doc/{i}"
-                info = build_record(
-                    "warcinfo", {"Content-Type": "application/warc-fields"},
-                    b"software: fixture\r\n")
-                payloads.append(
-                    info + build_response_record(url,
-                                                 text.encode("utf-8")))
-                ids.append(i)
-            yield pd.DataFrame({"id": ids, "payload": payloads})
+    def encode(i, text, source):
+        return _warcinfo() + build_response_record(
+            _doc_url(source, i), text.encode("utf-8"))
 
-    cols = df.select(
-        F.col(id_col).alias("id"), F.col(text_col).alias("text"),
-        F.col(source_col).alias("source"),
-    )
-    return spread(cols).mapInPandas(_encode, schema="id bigint, payload binary")
+    return encode_payloads(df, encode, id_col, text_col, source_col)
 
 
 CONTENT_ENCODINGS = [None, "gzip", "deflate", "br", "gzip, br"]
@@ -417,27 +414,12 @@ def warc_ce_payloads(df: DataFrame, id_col: str, text_col: str,
         raise RuntimeError(
             "warc_ce_payloads needs libbrotli (functions/brotlilib.py)")
 
-    def _encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, payloads = [], []
-            for i, text, source in zip(pdf["id"], pdf["text"],
-                                       pdf["source"]):
-                url = f"https://{source}.example.com/doc/{i}"
-                ce = CONTENT_ENCODINGS[int(i) % len(CONTENT_ENCODINGS)]
-                info = build_record(
-                    "warcinfo", {"Content-Type": "application/warc-fields"},
-                    b"software: fixture\r\n")
-                payloads.append(
-                    info + build_response_record(
-                        url, text.encode("utf-8"), content_encoding=ce))
-                ids.append(i)
-            yield pd.DataFrame({"id": ids, "payload": payloads})
+    def encode(i, text, source):
+        ce = CONTENT_ENCODINGS[i % len(CONTENT_ENCODINGS)]
+        return _warcinfo() + build_response_record(
+            _doc_url(source, i), text.encode("utf-8"), content_encoding=ce)
 
-    cols = df.select(
-        F.col(id_col).alias("id"), F.col(text_col).alias("text"),
-        F.col(source_col).alias("source"),
-    )
-    return spread(cols).mapInPandas(_encode, schema="id bigint, payload binary")
+    return encode_payloads(df, encode, id_col, text_col, source_col)
 
 
 def warc_zst_payloads(df: DataFrame, id_col: str, text_col: str,
@@ -454,25 +436,12 @@ def warc_zst_payloads(df: DataFrame, id_col: str, text_col: str,
         )
     compress, _ = backend
 
-    def _encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, payloads = [], []
-            for i, text, source in zip(pdf["id"], pdf["text"],
-                                       pdf["source"]):
-                url = f"https://{source}.example.com/doc/{i}"
-                info = build_record(
-                    "warcinfo", {"Content-Type": "application/warc-fields"},
-                    b"software: fixture\r\n")
-                resp = build_response_record(url, text.encode("utf-8"))
-                payloads.append(compress(info) + compress(resp))
-                ids.append(i)
-            yield pd.DataFrame({"id": ids, "payload": payloads})
+    def encode(i, text, source):
+        resp = build_response_record(_doc_url(source, i),
+                                     text.encode("utf-8"))
+        return compress(_warcinfo()) + compress(resp)
 
-    cols = df.select(
-        F.col(id_col).alias("id"), F.col(text_col).alias("text"),
-        F.col(source_col).alias("source"),
-    )
-    return spread(cols).mapInPandas(_encode, schema="id bigint, payload binary")
+    return encode_payloads(df, encode, id_col, text_col, source_col)
 
 
 def warc_gz_payloads(df: DataFrame, id_col: str, text_col: str,
@@ -482,28 +451,12 @@ def warc_gz_payloads(df: DataFrame, id_col: str, text_col: str,
     gzip member (mtime pinned 0 so the payload is deterministic),
     members concatenated."""
 
-    def _gz(record: bytes) -> bytes:
-        return gzip.compress(record, compresslevel=6, mtime=0)
+    def encode(i, text, source):
+        resp = build_response_record(_doc_url(source, i),
+                                     text.encode("utf-8"))
+        return _gz(_warcinfo()) + _gz(resp)
 
-    def _encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, payloads = [], []
-            for i, text, source in zip(pdf["id"], pdf["text"],
-                                       pdf["source"]):
-                url = f"https://{source}.example.com/doc/{i}"
-                info = build_record(
-                    "warcinfo", {"Content-Type": "application/warc-fields"},
-                    b"software: fixture\r\n")
-                resp = build_response_record(url, text.encode("utf-8"))
-                payloads.append(_gz(info) + _gz(resp))
-                ids.append(i)
-            yield pd.DataFrame({"id": ids, "payload": payloads})
-
-    cols = df.select(
-        F.col(id_col).alias("id"), F.col(text_col).alias("text"),
-        F.col(source_col).alias("source"),
-    )
-    return spread(cols).mapInPandas(_encode, schema="id bigint, payload binary")
+    return encode_payloads(df, encode, id_col, text_col, source_col)
 
 
 def build_conversion_record(url: str, text: bytes) -> bytes:
@@ -527,28 +480,12 @@ def wet_payloads(df: DataFrame, id_col: str, text_col: str,
     one conversion record, each its own gzip member (the
     ``.warc.wet.gz`` layout Common Crawl publishes)."""
 
-    def _gz(record: bytes) -> bytes:
-        return gzip.compress(record, compresslevel=6, mtime=0)
+    def encode(i, text, source):
+        conv = build_conversion_record(_doc_url(source, i),
+                                       text.encode("utf-8"))
+        return _gz(_warcinfo()) + _gz(conv)
 
-    def _encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, payloads = [], []
-            for i, text, source in zip(pdf["id"], pdf["text"],
-                                       pdf["source"]):
-                url = f"https://{source}.example.com/doc/{i}"
-                info = build_record(
-                    "warcinfo", {"Content-Type": "application/warc-fields"},
-                    b"software: fixture\r\n")
-                conv = build_conversion_record(url, text.encode("utf-8"))
-                payloads.append(_gz(info) + _gz(conv))
-                ids.append(i)
-            yield pd.DataFrame({"id": ids, "payload": payloads})
-
-    cols = df.select(
-        F.col(id_col).alias("id"), F.col(text_col).alias("text"),
-        F.col(source_col).alias("source"),
-    )
-    return spread(cols).mapInPandas(_encode, schema="id bigint, payload binary")
+    return encode_payloads(df, encode, id_col, text_col, source_col)
 
 
 def wet_zst_payloads(df: DataFrame, id_col: str, text_col: str,
@@ -563,25 +500,12 @@ def wet_zst_payloads(df: DataFrame, id_col: str, text_col: str,
             "wet_zst_payloads needs a zstd backend (sources/warc.py)")
     compress, _ = backend
 
-    def _encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, payloads = [], []
-            for i, text, source in zip(pdf["id"], pdf["text"],
-                                       pdf["source"]):
-                url = f"https://{source}.example.com/doc/{i}"
-                info = build_record(
-                    "warcinfo", {"Content-Type": "application/warc-fields"},
-                    b"software: fixture\r\n")
-                conv = build_conversion_record(url, text.encode("utf-8"))
-                payloads.append(compress(info) + compress(conv))
-                ids.append(i)
-            yield pd.DataFrame({"id": ids, "payload": payloads})
+    def encode(i, text, source):
+        conv = build_conversion_record(_doc_url(source, i),
+                                       text.encode("utf-8"))
+        return compress(_warcinfo()) + compress(conv)
 
-    cols = df.select(
-        F.col(id_col).alias("id"), F.col(text_col).alias("text"),
-        F.col(source_col).alias("source"),
-    )
-    return spread(cols).mapInPandas(_encode, schema="id bigint, payload binary")
+    return encode_payloads(df, encode, id_col, text_col, source_col)
 
 
 WET_SCHEMA = (
@@ -596,37 +520,19 @@ def extract_conversions(payloads: DataFrame) -> DataFrame:
     envelope to strip. Emits (id, url, text byte length, bounded
     prefix byte sum)."""
 
-    def _extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in ("id", "url", "n_text_bytes",
-                                   "prefix_sum")}
-            for i, payload in zip(pdf["id"], pdf["payload"]):
-                raw = bytes(payload)
-                if raw[:2] == _GZIP_MAGIC:
-                    raw = gunzip_members(raw)
-                    if raw is None:
-                        continue
-                elif raw[:4] == _ZSTD_MAGIC:
-                    raw = unzstd_members(raw)
-                    if raw is None:
-                        continue
-                records = parse_records(raw)
-                if records is None:
-                    continue
-                for headers, block in records:
-                    if headers.get("warc-type") != "conversion":
-                        continue
-                    out["id"].append(i)
-                    out["url"].append(
-                        headers.get("warc-target-uri", ""))
-                    out["n_text_bytes"].append(len(block))
-                    out["prefix_sum"].append(
-                        int(sum(block[:WARC_PREFIX])))
-            yield pd.DataFrame(out)
+    def extract(i, raw):
+        if raw[:2] == _GZIP_MAGIC:
+            raw = gunzip_members(raw)
+        elif raw[:4] == _ZSTD_MAGIC:
+            raw = unzstd_members(raw)
+        records = parse_records(raw) if raw is not None else None
+        for headers, block in records or ():
+            if headers.get("warc-type") == "conversion":
+                yield (i, headers.get("warc-target-uri", ""), len(block),
+                       sum(block[:WARC_PREFIX]))
 
-    return payloads.select("id", "payload").mapInPandas(
-        _extract, schema=WET_SCHEMA
-    )
+    return flat_map_rows(payloads.select("id", "payload"), extract,
+                         WET_SCHEMA)
 
 
 WARC_SCHEMA = (
@@ -647,25 +553,15 @@ def extract_response_bodies(payloads: DataFrame) -> DataFrame:
     decode drop too (a wrong or skipped Content-Encoding decode
     usually surfaces exactly there)."""
 
-    def _extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in ("id", "url", "status", "body")}
-            for i, payload in zip(pdf["id"], pdf["payload"]):
-                for url, status, body in iter_http_responses(
-                        bytes(payload)):
-                    try:
-                        text = body.decode("utf-8")
-                    except UnicodeDecodeError:
-                        continue
-                    out["id"].append(i)
-                    out["url"].append(url)
-                    out["status"].append(status)
-                    out["body"].append(text)
-            yield pd.DataFrame(out)
+    def extract(i, payload):
+        for url, status, body in iter_http_responses(payload):
+            try:
+                yield i, url, status, body.decode("utf-8")
+            except UnicodeDecodeError:
+                continue
 
-    return payloads.select("id", "payload").mapInPandas(
-        _extract, schema=BODY_SCHEMA
-    )
+    return flat_map_rows(payloads.select("id", "payload"), extract,
+                         BODY_SCHEMA)
 
 
 def iter_http_responses(raw: bytes):
@@ -698,7 +594,7 @@ def iter_http_responses(raw: bytes):
 
 
 def extract_responses(payloads: DataFrame) -> DataFrame:
-    """Per-payload WARC extraction inside one Arrow ``mapInPandas``:
+    """Per-payload WARC extraction inside one Arrow row stage:
     walk records, skip non-response types, strip the HTTP envelope,
     and emit (id, url, status, body length, byte sum of the first
     ``WARC_PREFIX`` body bytes) per response record — the fields a
@@ -711,21 +607,9 @@ def extract_responses(payloads: DataFrame) -> DataFrame:
     plain, gzip, and zstd WARC read through the one path
     (:func:`iter_http_responses`)."""
 
-    def _extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in ("id", "url", "status",
-                                   "n_body_bytes", "prefix_sum")}
-            for i, payload in zip(pdf["id"], pdf["payload"]):
-                for url, status, body in iter_http_responses(
-                        bytes(payload)):
-                    out["id"].append(i)
-                    out["url"].append(url)
-                    out["status"].append(status)
-                    out["n_body_bytes"].append(len(body))
-                    out["prefix_sum"].append(
-                        int(sum(body[:WARC_PREFIX])))
-            yield pd.DataFrame(out)
+    def extract(i, payload):
+        for url, status, body in iter_http_responses(payload):
+            yield i, url, status, len(body), sum(body[:WARC_PREFIX])
 
-    return payloads.select("id", "payload").mapInPandas(
-        _extract, schema=WARC_SCHEMA
-    )
+    return flat_map_rows(payloads.select("id", "payload"), extract,
+                         WARC_SCHEMA)

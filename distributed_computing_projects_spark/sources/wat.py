@@ -28,13 +28,12 @@ from __future__ import annotations
 
 import gzip
 import json
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from distributed_computing_projects_spark.operators.spread import spread
+from distributed_computing_projects_spark.operators.spread import (
+    encode_payloads, flat_map_rows)
 from distributed_computing_projects_spark.sources import warc as W
 
 # Deterministic fixture link topology: doc i emits (i % 3 + 1) links,
@@ -102,33 +101,25 @@ def wat_payloads(df: DataFrame, id_col: str, n_docs: int) -> DataFrame:
     def _gz(record: bytes) -> bytes:
         return gzip.compress(record, mtime=0)
 
-    def _encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, payloads = [], []
-            for i in pdf["id"]:
-                i = int(i)
-                url = f"{_HOST}/{i}"
-                links = [
-                    f"{_HOST}/{(i * LINK_MULT + j * LINK_STEP) % n_docs}"
-                    for j in range(1, i % LINK_FAN + 2)
-                ]
-                info = W.build_record(
-                    "warcinfo", {"Content-Type": "application/warc-fields"},
-                    b"software: fixture-wat\r\n")
-                parts = [_gz(info), _gz(build_metadata_record(
-                    url, build_envelope(url, links, f"Doc {i}")))]
-                if i % 5 == 0:
-                    dud = json.dumps({"Envelope": {"Payload-Metadata": {
-                        "Actual-Content-Type": "text/css"}}}).encode()
-                    parts.append(_gz(build_metadata_record(
-                        f"{_HOST}/{i}/style.css", dud)))
-                payloads.append(b"".join(parts))
-                ids.append(i)
-            yield pd.DataFrame({"id": ids, "payload": payloads})
+    def encode(i):
+        url = f"{_HOST}/{i}"
+        links = [
+            f"{_HOST}/{(i * LINK_MULT + j * LINK_STEP) % n_docs}"
+            for j in range(1, i % LINK_FAN + 2)
+        ]
+        info = W.build_record(
+            "warcinfo", {"Content-Type": "application/warc-fields"},
+            b"software: fixture-wat\r\n")
+        parts = [_gz(info), _gz(build_metadata_record(
+            url, build_envelope(url, links, f"Doc {i}")))]
+        if i % 5 == 0:
+            dud = json.dumps({"Envelope": {"Payload-Metadata": {
+                "Actual-Content-Type": "text/css"}}}).encode()
+            parts.append(_gz(build_metadata_record(
+                f"{_HOST}/{i}/style.css", dud)))
+        return b"".join(parts)
 
-    cols = df.select(F.col(id_col).alias("id"))
-    return spread(cols).mapInPandas(_encode,
-                                    schema="id bigint, payload binary")
+    return encode_payloads(df, encode, id_col)
 
 
 def metadata_records(payloads: DataFrame) -> DataFrame:
@@ -138,31 +129,18 @@ def metadata_records(payloads: DataFrame) -> DataFrame:
     strings. The envelope stays unparsed here; JSON work is the JVM's
     (:func:`extract_links`)."""
 
-    def _extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            urls, metas = [], []
-            for payload in pdf["payload"]:
-                raw = bytes(payload)
-                if raw[:2] == W._GZIP_MAGIC:
-                    plain = W.gunzip_members(raw)
-                    if plain is None:
-                        continue  # row drop: not one complete member
-                    raw = plain
-                records = W.parse_records(raw)
-                if records is None:
-                    continue  # row drop: not WARC-framed at all
-                for headers, block in records:
-                    if headers.get("warc-type") != "metadata":
-                        continue
-                    url = headers.get("warc-target-uri")
-                    if not url:
-                        continue
-                    urls.append(url)
-                    metas.append(block.decode("utf-8", "replace"))
-            yield pd.DataFrame({"url": urls, "meta": metas})
+    def extract(raw):
+        if raw[:2] == W._GZIP_MAGIC:
+            raw = W.gunzip_members(raw)  # None: not one complete member
+        records = W.parse_records(raw) if raw is not None else None
+        # None: row drop, not WARC-framed at all
+        for headers, block in records or ():
+            url = headers.get("warc-target-uri")
+            if headers.get("warc-type") == "metadata" and url:
+                yield url, block.decode("utf-8", "replace")
 
-    return payloads.select("payload").mapInPandas(
-        _extract, schema="url string, meta string")
+    return flat_map_rows(payloads.select("payload"), extract,
+                         "url string, meta string")
 
 
 def read_wat(spark, path: str) -> DataFrame:
@@ -170,7 +148,7 @@ def read_wat(spark, path: str) -> DataFrame:
     (binaryFile scan, per-file parallelism)."""
     return extract_links(
         spark.read.format("binaryFile").load(path)
-        .select(F.col("content").alias("payload")))
+        .withColumnRenamed("content", "payload"))
 
 
 def extract_links(payloads: DataFrame) -> DataFrame:

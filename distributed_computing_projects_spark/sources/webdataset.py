@@ -38,6 +38,8 @@ from typing import Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 
+from distributed_computing_projects_spark.operators.spread import flat_map_rows
+
 MAX_MEMBER_BYTES = 1 << 28  # 256 MiB per part, the codec-walk bound
 
 
@@ -100,25 +102,9 @@ def read_webdataset(spark: SparkSession, path: str) -> DataFrame:
     select/decode the parts they need (e.g. ``parts['jpg']`` through
     the multimodal decode tier, ``parts['txt']`` through the text
     tier)."""
-    import pandas as pd
-
-    bin_df = spark.read.format("binaryFile").load(path).select("content")
-
-    def gen(batches):
-        for pdf in batches:
-            for content in pdf["content"]:
-                keys, parts = [], []
-                for key, group in iter_samples(bytes(content)):
-                    keys.append(key)
-                    parts.append(group)
-                    if len(keys) >= 2048:
-                        yield pd.DataFrame({"key": keys,
-                                            "parts": parts})
-                        keys, parts = [], []
-                if keys:
-                    yield pd.DataFrame({"key": keys, "parts": parts})
-
-    return bin_df.mapInPandas(gen, "key string, parts map<string,binary>")
+    return flat_map_rows(
+        spark.read.format("binaryFile").load(path).select("content"),
+        iter_samples, "key string, parts map<string,binary>")
 
 
 def build_shard(samples, mtime: int = 0) -> bytes:

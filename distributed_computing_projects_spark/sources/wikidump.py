@@ -17,7 +17,7 @@ training pipelines drop on ns != 0).
 
 Scale shape: like WARC, the dump is file-parallel (one ~20 GB
 multistream file splits logically at the index's stream offsets; here
-the unit is the payload row). Extraction is one Arrow ``mapInPandas``.
+the unit is the payload row). Extraction is one Arrow row stage.
 
 Reference parity note: the reference reads plain text/CSV only; this
 is LLM-ingest scale-extension surface (SURVEY.md §2 extensions).
@@ -26,14 +26,12 @@ is LLM-ingest scale-extension surface (SURVEY.md §2 extensions).
 from __future__ import annotations
 
 import bz2
-from collections.abc import Iterator
 from xml.sax.saxutils import escape
 
-import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
-from distributed_computing_projects_spark.operators.spread import spread
+from distributed_computing_projects_spark.operators.spread import (
+    encode_payloads, flat_map_rows)
 
 _BZ2_MAGIC = b"BZh"
 
@@ -182,22 +180,13 @@ def wikidump_payloads(df: DataFrame, id_col: str,
     doc text (XML-escaped, so '&'/'<'/'>' roundtrip through real
     escaping), plus a ns=1 Talk page."""
 
-    def _encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, payloads = [], []
-            for i, text in zip(pdf["id"], pdf["text"]):
-                i = int(i)
-                payloads.append(build_dump([
-                    (2 * i, f"Doc {i}", 0, text),
-                    (2 * i + 1, f"Talk:Doc {i}", 1, TALK_TEXT),
-                ]))
-                ids.append(i)
-            yield pd.DataFrame({"id": ids, "payload": payloads})
+    def encode(i, text):
+        return build_dump([
+            (2 * i, f"Doc {i}", 0, text),
+            (2 * i + 1, f"Talk:Doc {i}", 1, TALK_TEXT),
+        ])
 
-    cols = df.select(
-        F.col(id_col).alias("id"), F.col(text_col).alias("text")
-    )
-    return spread(cols).mapInPandas(_encode, schema="id bigint, payload binary")
+    return encode_payloads(df, encode, id_col, text_col)
 
 
 WIKI_SCHEMA = (
@@ -207,34 +196,20 @@ WIKI_SCHEMA = (
 
 
 def extract_pages(payloads: DataFrame) -> DataFrame:
-    """Per-payload dump extraction in one Arrow ``mapInPandas``: bz2
+    """Per-payload dump extraction in one Arrow row stage: bz2
     member walk, expat page parse, per-page (title, namespace, text
     byte length, bounded-prefix byte sum) — the fields dump ingest
     filters on before any wikitext processing. Undecodable payloads
     drop the row; torn payloads keep completed pages."""
 
-    def _extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in ("id", "page_id", "title", "ns",
-                                   "n_text_bytes", "prefix_sum")}
-            for i, payload in zip(pdf["id"], pdf["payload"]):
-                pages = extract_dump(bytes(payload))
-                if pages is None:
-                    continue
-                for pg in pages:
-                    raw = pg["text"].encode("utf-8")
-                    out["id"].append(i)
-                    out["page_id"].append(pg["page_id"])
-                    out["title"].append(pg["title"])
-                    out["ns"].append(pg["ns"])
-                    out["n_text_bytes"].append(len(raw))
-                    out["prefix_sum"].append(
-                        int(sum(raw[:WIKI_PREFIX])))
-            yield pd.DataFrame(out)
+    def extract(i, payload):
+        for pg in extract_dump(payload) or ():
+            raw = pg["text"].encode("utf-8")
+            yield (i, pg["page_id"], pg["title"], pg["ns"], len(raw),
+                   sum(raw[:WIKI_PREFIX]))
 
-    return payloads.select("id", "payload").mapInPandas(
-        _extract, schema=WIKI_SCHEMA
-    )
+    return flat_map_rows(payloads.select("id", "payload"), extract,
+                         WIKI_SCHEMA)
 
 
 WIKI_TEXT_SCHEMA = "id bigint, page_id bigint, ns int, wikitext string"
@@ -245,20 +220,9 @@ def extract_page_text(payloads: DataFrame) -> DataFrame:
     (the raw wikitext), for the markup-stripping stage that follows
     dump ingest (``functions/wikitext.py``). Same drop policy."""
 
-    def _extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in ("id", "page_id", "ns", "wikitext")}
-            for i, payload in zip(pdf["id"], pdf["payload"]):
-                pages = extract_dump(bytes(payload))
-                if pages is None:
-                    continue
-                for pg in pages:
-                    out["id"].append(i)
-                    out["page_id"].append(pg["page_id"])
-                    out["ns"].append(pg["ns"])
-                    out["wikitext"].append(pg["text"])
-            yield pd.DataFrame(out)
+    def extract(i, payload):
+        for pg in extract_dump(payload) or ():
+            yield i, pg["page_id"], pg["ns"], pg["text"]
 
-    return payloads.select("id", "payload").mapInPandas(
-        _extract, schema=WIKI_TEXT_SCHEMA
-    )
+    return flat_map_rows(payloads.select("id", "payload"), extract,
+                         WIKI_TEXT_SCHEMA)

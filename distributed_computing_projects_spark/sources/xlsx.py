@@ -37,11 +37,11 @@ text/CSV only, mp3/src/maple/mapler.go:41-43).
 from __future__ import annotations
 
 import re
-from collections.abc import Iterator
 from xml.sax.saxutils import escape
 
-import pandas as pd
 from pyspark.sql import DataFrame
+
+from distributed_computing_projects_spark.operators.spread import flat_map_rows
 
 from distributed_computing_projects_spark.sources.ziparchive import (
     build_zip,
@@ -285,50 +285,37 @@ def rows_from_binary(bin_df: DataFrame, ddl: str,
     pattern like avro/arrowipc."""
     from pyspark.sql.types import StructType
 
-    fields = StructType.fromDDL(ddl).fields
-    names = [f.name for f in fields]
-    kinds = [f.dataType.simpleString() for f in fields]
+    kinds = [f.dataType.simpleString()
+             for f in StructType.fromDDL(ddl).fields]
 
-    def adapt(kind: str, vals: list):
+    def decode(content):
+        rows = iter_sheet_rows(content, skip_header=skip_header)
+        # None: not a spreadsheet, file-granular drop
+        for row in rows or ():
+            yield tuple(_cell(k, row.get(i)) for i, k in enumerate(kinds))
+
+    return flat_map_rows(bin_df.select("content"), decode, ddl)
+
+
+def _cell(kind: str, v):
+    """One sheet cell coerced to its DDL column type, or null."""
+    if kind == "boolean":
+        return v if isinstance(v, bool) else None
+    if kind == "string":
+        return v if isinstance(v, str) or v is None else str(v)
+    try:
+        f = float(v)  # numbers, booleans, numeric text
         if kind in ("bigint", "int"):
-            s = pd.to_numeric(pd.Series(vals, dtype="object"),
-                              errors="coerce")
-            return s.round().astype("Int64")
-        if kind in ("double", "float"):
-            return pd.to_numeric(pd.Series(vals, dtype="object"),
-                                 errors="coerce").astype("float64")
-        if kind == "boolean":
-            return [v if isinstance(v, bool) else None for v in vals]
+            return round(f)
         if kind in ("timestamp", "timestamp_ntz"):
-            # Excel serial days -> epoch seconds; SECOND precision is
-            # the format's honest contract (float serial). For the
-            # INSTANT type the series must be tz-aware UTC — Arrow
-            # localizes naive values to the session timezone (the
-            # avro lesson); ntz stays naive.
-            s = pd.to_numeric(pd.Series(vals, dtype="object"),
-                              errors="coerce")
-            secs = ((s - _UNIX_EPOCH_SERIAL) * 86400.0).round()
-            return pd.to_datetime(secs, unit="s",
-                                  utc=(kind == "timestamp"))
-        return [v if isinstance(v, str) else
-                (None if v is None else str(v)) for v in vals]
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for content in pdf["content"]:
-                rows = iter_sheet_rows(bytes(content),
-                                       skip_header=skip_header)
-                if rows is None:
-                    continue  # not a spreadsheet: file-granular drop
-                cols = {n: [] for n in names}
-                for row in rows:
-                    for i, n in enumerate(names):
-                        cols[n].append(row.get(i))
-                yield pd.DataFrame(
-                    {n: adapt(k, cols[n])
-                     for n, k in zip(names, kinds)})
-
-    return bin_df.select("content").mapInPandas(gen, ddl)
+            # Excel serial days -> epoch microseconds; SECOND
+            # precision is the format's honest contract (float
+            # serial). The DDL's Arrow type makes the INSTANT
+            # tz-aware UTC (the avro lesson); ntz stays naive.
+            return round((f - _UNIX_EPOCH_SERIAL) * 86400.0) * 1_000_000
+        return f if f == f else None
+    except (TypeError, ValueError, OverflowError):
+        return None
 
 
 # -------------------------------------------------------- builder

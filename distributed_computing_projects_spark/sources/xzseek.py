@@ -294,12 +294,6 @@ def xz_lines(spark: SparkSession, path: str,
     INTRA-file parallelism — the xz sibling of
     ``zstdseek.seekable_lines`` (same adaptive sizing, same shared
     ownership walker, same drop policies)."""
-    import pandas as pd
-
-    from distributed_computing_projects_spark.sources.compressed import (
-        iter_lines,
-    )
-
     files = _resolve(path)
     indexes = {p: parse_index(p) for p in files}
     if target_bytes is None:
@@ -309,51 +303,10 @@ def xz_lines(spark: SparkSession, path: str,
             for p, parsed in indexes.items())
         par = max(spark.sparkContext.defaultParallelism, 1)
         target_bytes = min(max(total // (par * 2), 1 << 16), 1 << 27)
-    splits = plan_splits(files, target_bytes, indexes=indexes)
-    if not splits:
-        return spark.createDataFrame([], "value string")
-    rows = [(s["path"], s["c_off"], s["c_len"], s["d_off"],
-             s["d_len"], s["cont_end"], s["streaming"],
-             s["check_id"]) for s in splits]
-    sdf = spark.createDataFrame(
-        rows,
-        "path string, c_off bigint, c_len bigint, d_off bigint, "
-        "d_len bigint, cont_end bigint, streaming boolean, "
-        "check_id int",
-    ).repartition(len(rows))
-
-    def gen(batches):
-        for pdf in batches:
-            for row in pdf.itertuples(index=False):
-                sp = dict(path=row.path, c_off=int(row.c_off),
-                          c_len=int(row.c_len), d_off=int(row.d_off),
-                          d_len=int(row.d_len),
-                          cont_end=int(row.cont_end))
-                cid = int(row.check_id)
-                out: list[str] = []
-                with open(row.path, "rb") as f:
-                    if row.streaming:
-                        f.seek(sp["c_off"])
-                        data = f.read(sp["c_len"])
-                        it = iter_lines(data, lzma.LZMADecompressor)
-                    else:
-                        it = ZS.split_lines(
-                            f, sp, lambda: _BlockDecompressor(cid))
-                    for ln in it:
-                        if ln.endswith(b"\r"):
-                            ln = ln[:-1]
-                        try:
-                            s = ln.decode("utf-8")
-                        except UnicodeDecodeError:
-                            continue
-                        out.append(s)
-                        if len(out) >= 8192:
-                            yield pd.DataFrame({"value": out})
-                            out = []
-                if out:
-                    yield pd.DataFrame({"value": out})
-
-    return sdf.mapInPandas(gen, "value string")
+    return ZS.lines_from_splits(
+        spark, plan_splits(files, target_bytes, indexes=indexes),
+        lambda sp: (lzma.LZMADecompressor,
+                    lambda: _BlockDecompressor(sp["check_id"])))
 
 
 def _resolve(path: str):

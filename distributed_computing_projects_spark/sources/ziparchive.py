@@ -6,7 +6,7 @@ portals, arXiv bulk files, older corpus releases), and Spark cannot
 read zip AT ALL — zip is an archive, not a Hadoop compression codec,
 so there is no text-scan route and no datasource. The engine reads it
 the way it reads tar (``sources/webdataset.py``): binaryFile scan,
-per-file parallelism, stdlib walk inside Arrow ``mapInPandas``.
+per-file parallelism, stdlib walk inside the Arrow row stage.
 
 Member policies (the codec-seam discipline):
 
@@ -37,6 +37,8 @@ import zlib
 from typing import Iterator
 
 from pyspark.sql import DataFrame, SparkSession
+
+from distributed_computing_projects_spark.operators.spread import flat_map_rows
 
 MAX_MEMBER_BYTES = 1 << 28  # 256 MiB per member, the codec-walk bound
 
@@ -138,26 +140,9 @@ def read_zip(spark: SparkSession, path: str) -> DataFrame:
     """DataFrame of (name string, content binary) over ``.zip``
     archives — the generic member table; pipelines route members by
     name/extension into the text or multimodal tiers."""
-    import pandas as pd
-
-    bin_df = spark.read.format("binaryFile").load(path).select("content")
-
-    def gen(batches):
-        for pdf in batches:
-            for content in pdf["content"]:
-                names, bodies = [], []
-                for name, body in iter_zip_members(bytes(content)):
-                    names.append(name)
-                    bodies.append(body)
-                    if len(names) >= 2048:
-                        yield pd.DataFrame({"name": names,
-                                            "content": bodies})
-                        names, bodies = [], []
-                if names:
-                    yield pd.DataFrame({"name": names,
-                                        "content": bodies})
-
-    return bin_df.mapInPandas(gen, "name string, content binary")
+    return flat_map_rows(
+        spark.read.format("binaryFile").load(path).select("content"),
+        iter_zip_members, "name string, content binary")
 
 
 def build_zip(members, compression=zipfile.ZIP_DEFLATED) -> bytes:

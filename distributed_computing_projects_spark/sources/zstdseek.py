@@ -58,6 +58,7 @@ import struct
 
 from pyspark.sql import DataFrame, SparkSession
 
+from distributed_computing_projects_spark.operators.spread import flat_map_rows
 from distributed_computing_projects_spark.sources.warc import zstd_backend
 
 SEEKABLE_MAGIC = 0x8F92EAB1
@@ -65,7 +66,6 @@ SKIPPABLE_MAGIC = 0x184D2A5E
 _FOOTER = 9  # frame count (4) + descriptor (1) + seekable magic (4)
 MAX_LINE_BYTES = 1 << 26  # the compressed.py line bound
 _OUT_CHUNK = 1 << 20
-_BATCH_LINES = 8192
 
 
 # ------------------------------------------------------- seek table
@@ -354,12 +354,6 @@ def seekable_lines(spark: SparkSession, path: str,
     128 MiB] (Spark's own maxPartitionBytes/minPartitionNum shape):
     small fixtures still exercise >1 split, huge shards neither
     fragment into thousand-task confetti nor under-parallelize."""
-    import pandas as pd
-
-    from distributed_computing_projects_spark.sources.compressed import (
-        iter_lines,
-    )
-
     files = _resolve(path)
     tables = {p: read_seek_table(p) for p in files}
     if target_bytes is None:
@@ -368,51 +362,55 @@ def seekable_lines(spark: SparkSession, path: str,
             for p, t in tables.items())
         par = max(spark.sparkContext.defaultParallelism, 1)
         target_bytes = min(max(total // (par * 2), 1 << 16), 1 << 27)
-    splits = plan_splits(files, target_bytes, tables=tables)
+
+    def decompressors(sp):
+        backend = zstd_backend()
+        # dormant path: no zstd backend, the split yields nothing
+        return None if backend is None else (backend[1], backend[1])
+
+    return lines_from_splits(
+        spark, plan_splits(files, target_bytes, tables=tables),
+        decompressors)
+
+
+_SPLIT_COLUMNS = ("path string, c_off bigint, c_len bigint, d_off bigint, "
+                  "d_len bigint, cont_end bigint, streaming boolean, "
+                  "check_id int")
+
+
+def lines_from_splits(spark: SparkSession, splits: list,
+                      decompressors) -> DataFrame:
+    """``value: string`` lines from a split plan, one task per split —
+    the decode stage the seekable zstd, BGZF and multi-block xz readers
+    share. ``decompressors(sp)`` gives one split's (whole-file
+    streaming, split-walk) decompressor factories, or ``None`` to skip
+    the split. Lines keep the compressed_lines policy
+    (``compressed.line_rows``)."""
+    from distributed_computing_projects_spark.sources.compressed import (
+        iter_lines, line_rows,
+    )
+
     if not splits:
         return spark.createDataFrame([], "value string")
-    rows = [(s["path"], s["c_off"], s["c_len"], s["d_off"],
-             s["d_len"], s["cont_end"], s["streaming"])
-            for s in splits]
+    keys = [c.split()[0] for c in _SPLIT_COLUMNS.split(", ")]
     sdf = spark.createDataFrame(
-        rows,
-        "path string, c_off bigint, c_len bigint, d_off bigint, "
-        "d_len bigint, cont_end bigint, streaming boolean",
-    ).repartition(len(rows))
+        [tuple(s.get(k) for k in keys) for s in splits], _SPLIT_COLUMNS,
+    ).repartition(len(splits))
 
-    def gen(batches):
-        backend = zstd_backend()
-        for pdf in batches:
-            for row in pdf.itertuples(index=False):
-                if backend is None:
-                    continue  # dormant path: no zstd backend
-                sp = dict(path=row.path, c_off=int(row.c_off),
-                          c_len=int(row.c_len), d_off=int(row.d_off),
-                          d_len=int(row.d_len),
-                          cont_end=int(row.cont_end))
-                out: list[str] = []
-                with open(row.path, "rb") as f:
-                    if row.streaming:
-                        f.seek(sp["c_off"])
-                        data = f.read(sp["c_len"])
-                        it = iter_lines(data, backend[1])
-                    else:
-                        it = split_lines(f, sp, backend[1])
-                    for ln in it:
-                        if ln.endswith(b"\r"):
-                            ln = ln[:-1]
-                        try:
-                            s = ln.decode("utf-8")
-                        except UnicodeDecodeError:
-                            continue
-                        out.append(s)
-                        if len(out) >= _BATCH_LINES:
-                            yield pd.DataFrame({"value": out})
-                            out = []
-                if out:
-                    yield pd.DataFrame({"value": out})
+    def lines(*row):
+        sp = dict(zip(keys, row))
+        factories = decompressors(sp)
+        if factories is None:
+            return
+        with open(sp["path"], "rb") as f:
+            if sp["streaming"]:
+                f.seek(sp["c_off"])
+                it = iter_lines(f.read(sp["c_len"]), factories[0])
+            else:
+                it = split_lines(f, sp, factories[1])
+            yield from line_rows(it)
 
-    return sdf.mapInPandas(gen, "value string")
+    return flat_map_rows(sdf, lines, "value string")
 
 
 def read_jsonl_zst_seekable(spark: SparkSession, path: str, schema,

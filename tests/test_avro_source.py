@@ -292,19 +292,31 @@ def test_base_type_unwraps_wrappers_and_unions():
         AV._base_type(["int", "string"])
 
 
-def test_timestamp_instants_are_utc_aware_before_arrow():
+def test_timestamp_instants_are_utc_aware_before_arrow(spark):
     """timestamp-micros/millis are UTC instants per the spec; the
-    pandas series handed to Arrow must be tz-AWARE UTC (a naive
-    series localizes to the session timezone — only correct when the
+    Arrow cells handed to Spark must be tz-AWARE UTC (a naive cell
+    localizes to the session timezone — only correct when the
     session happens to pin UTC; review finding). local-* variants
     stay naive (timestamp_ntz)."""
-    import pandas as pd
+    import datetime as dt
 
-    pdf = AV._to_pdf(pd, {"t": [86_400_000_000], "lt": [86_400_000],
-                          "a": [1]},
-                     {"t": "timestamp-micros",
-                      "lt": "local-timestamp-millis"})
-    assert str(pdf["t"].dt.tz) == "UTC"
-    assert pdf["lt"].dt.tz is None
-    assert pdf["t"].iloc[0] == pd.Timestamp("1970-01-02", tz="UTC")
-    assert pdf["lt"].iloc[0] == pd.Timestamp("1970-01-02")
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
+
+    schema = {"type": "record", "name": "r", "fields": [
+        {"name": "t", "type": {"type": "long",
+                               "logicalType": "timestamp-micros"}},
+        {"name": "lt", "type": {"type": "long",
+                                "logicalType": "local-timestamp-millis"}},
+    ]}
+    adapters = AV._field_adapters(schema)
+    arrow = to_arrow_schema(StructType.fromDDL(AV.avro_spark_ddl(schema)))
+    t = pa.array([adapters["t"][1](86_400_000_000)],
+                 type=arrow.field("t").type)
+    lt = pa.array([adapters["lt"][1](86_400_000)],
+                  type=arrow.field("lt").type)
+    assert t.type.tz == "UTC"
+    assert lt.type.tz is None
+    assert t[0].as_py() == dt.datetime(1970, 1, 2, tzinfo=dt.timezone.utc)
+    assert lt[0].as_py() == dt.datetime(1970, 1, 2)

@@ -35,15 +35,32 @@ def test_driver_replay_matches_distributed_training(spark, monkeypatch):
     """The r17 driver-side Lloyd replay must be BIT-identical to the
     distributed agg+collect rounds it replaces (same folds, same
     argmin tie-breaks, same sum/n division) — compared as exact float
-    equality over every centroid component, for 1 and 2 rounds."""
+    equality over every centroid component, for 1 and 2 rounds. The
+    forced distributed path must not collect the sample at all."""
     emb = _emb(spark)
+    cls = type(emb)
+    real_collect = cls.collect
+    collected = []
+
+    def spy(df):
+        collected.append(df.columns)
+        return real_collect(df)
+
     for n_iters in (1, 2):
+        monkeypatch.setattr(cls, "collect", spy)
         fast = IVT.train(spark, emb, "vec_id", "embedding",
                          n_iters=n_iters)
+        assert collected == [["id", "v"]]  # one driver-path collect
+        collected.clear()
         monkeypatch.setattr(IVT, "MAX_DRIVER_TRAIN_ROWS", 0)
         slow = IVT.train(spark, emb, "vec_id", "embedding",
                          n_iters=n_iters)
         monkeypatch.undo()
+        # the distributed path collects per-cell aggregates only,
+        # never the (id, v) sample rows the driver path replays
+        assert len(collected) == n_iters
+        assert ["id", "v"] not in collected
+        collected.clear()
         assert [c for c, _ in fast] == [c for c, _ in slow]
         for (_, fc), (_, sc) in zip(fast, slow):
             assert all(a == b for a, b in zip(fc, sc)) and len(fc) == len(sc)

@@ -111,6 +111,17 @@ def test_spark_read_with_ddl_adapters(tmp_path, spark):
                    for i in range(40)]
 
 
+def test_uint64_past_bigint_nulls_the_cell(tmp_path, spark):
+    """A uint64 above the bigint range nulls its cell (the CBOR
+    adapter rule the two formats share) instead of failing the task
+    in the Arrow conversion."""
+    (tmp_path / "u.msgpack").write_bytes(build_msgpack_dump(
+        [{"id": 1, "big": (1 << 64) - 1}, {"id": 2, "big": 5}]))
+    df = read_msgpack(spark, str(tmp_path), "id bigint, big bigint")
+    assert sorted((r.id, r.big) for r in df.collect()) == [(1, None),
+                                                           (2, 5)]
+
+
 def test_cli_msgpack_scan(spark, tmp_path, capsys):
     from distributed_computing_projects_spark.cli import main
 

@@ -84,7 +84,8 @@ def test_wordcount_plan_is_codegen_only(spark, sf_dir, registry):
     """explode+count stays entirely in whole-stage codegen: no Python
     evaluation node may appear in the hot path."""
     plan = physical_plan(registry["wordcount"].fn(spark, sf_dir))
-    for bad in ("BatchEvalPython", "ArrowEvalPython", "MapInPandas"):
+    for bad in ("BatchEvalPython", "ArrowEvalPython", "MapInPandas",
+                "MapInArrow"):
         assert bad not in plan
     # AQE shows codegen spans only in the final plan; pre-execution the
     # guard that matters is that no Python node interrupts the stages.
@@ -122,7 +123,8 @@ def test_extension_expressions_stay_jvm_side(spark, sf_dir, registry):
     for name in ("minhash_signature", "simhash_fingerprint",
                  "dedup_embedding_cosine", "ann_bruteforce_topk"):
         plan = physical_plan(registry[name].fn(spark, sf_dir))
-        for bad in ("BatchEvalPython", "ArrowEvalPython", "MapInPandas"):
+        for bad in ("BatchEvalPython", "ArrowEvalPython", "MapInPandas",
+                    "MapInArrow"):
             assert bad not in plan, f"{name} fell off the JVM path: {bad}"
 
 
@@ -404,9 +406,9 @@ def test_jpeg_decode_filters_jvm_side_before_python(spark, sf_dir,
     assert "roundrobin" in plan.lower(), plan
     assert "octet_length" in plan, plan
     # filter must appear upstream of (= listed after, in the formatted
-    # numbering) the first MapInPandas: codegen Filter node feeds it
+    # numbering) the first MapInArrow: codegen Filter node feeds it
     filt = plan.index("Filter")
-    first_py = plan.index("MapInPandas")
+    first_py = plan.index("MapInArrow")
     assert first_py < filt  # tree prints top-down: Python sits above
     assert "ReadSchema: struct<doc_id:bigint,text:string>" in plan, plan
 
@@ -427,7 +429,7 @@ def test_video_and_gif_frames_filter_jvm_side_before_python(
         assert "roundrobin" in plan.lower(), (name, plan)
         assert "octet_length" in plan, (name, plan)
         filt = plan.index("Filter")
-        first_py = plan.index("MapInPandas")
+        first_py = plan.index("MapInArrow")
         assert first_py < filt, (name, plan)
         assert "ReadSchema: struct<doc_id:bigint,text:string>" in plan, (
             name, plan)
@@ -500,7 +502,7 @@ def test_new_codec_queries_filter_jvm_side_before_python(
         plan = physical_plan(df)
         assert "octet_length" in plan, (name, plan)
         filt = plan.index("Filter")
-        first_py = plan.index("MapInPandas")
+        first_py = plan.index("MapInArrow")
         assert first_py < filt, (name, plan)
         assert ("ReadSchema: struct<doc_id:bigint,text:string>"
                 in plan), (name, plan)

@@ -42,6 +42,32 @@ def test_derived_session_is_memoized_per_base_and_confs(spark):
     assert c.conf.get("spark.sql.shuffle.partitions") == "7"
 
 
+def test_derived_session_memo_keys_on_the_live_base(spark):
+    """Two distinct bases get distinct siblings, each memoized; the
+    memo holds a base only while it is alive, so a later base can never
+    inherit a sibling of a stopped-and-collected one (the id() reuse
+    hazard of keying on ``id(spark._jsparkSession)``)."""
+    import gc
+
+    from distributed_computing_projects_spark import session as S
+
+    a, b = spark.newSession(), spark.newSession()
+    sa, sb = byte_coalesced(a), byte_coalesced(b)
+    assert sa is not sb
+    assert byte_coalesced(a) is sa and byte_coalesced(b) is sb
+    assert sa.sparkContext is sb.sparkContext is spark.sparkContext
+    k = "spark.sql.adaptive.coalescePartitions.parallelismFirst"
+    assert sa.conf.get(k) == sb.conf.get(k) == "false"
+    assert a.conf.get(k) == b.conf.get(k) == "true"
+    assert a in S._DERIVED_SESSIONS and b in S._DERIVED_SESSIONS
+    n = len(S._DERIVED_SESSIONS)
+    del a, sa
+    gc.collect()
+    assert len(S._DERIVED_SESSIONS) == n - 1
+    assert b in S._DERIVED_SESSIONS
+    assert byte_coalesced(b) is sb
+
+
 def test_derived_session_inherits_builder_confs(spark):
     """Builder-time confs (AQE on, UTC timezone, broadcast threshold)
     live in the context conf, so a sibling keeps the engine contract."""
