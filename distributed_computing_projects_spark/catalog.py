@@ -41,14 +41,18 @@ class Catalog:
     # parquet is the default (columnar, pushdown); orc is the other
     # splittable columnar option; json = JSONL interchange.
     #
-    # The format (plus, for json, the exact schema — JSONL is not
-    # self-describing: re-inference narrows int widths and re-types
-    # timestamps) is recorded in a ``_format`` sidecar written inside
-    # the same atomic rename as the data, so it can never disagree
-    # with the part-files. Part-file extension sniffing remains only
-    # as a fallback for pre-sidecar datasets and RAISES when nothing
-    # matches (an empty dataset dir used to silently default to
-    # parquet and fail confusingly downstream).
+    # The format and the exact write-time schema are recorded in a
+    # ``_format`` sidecar written inside the same atomic rename as the
+    # data, so they can never disagree with the part-files. ``get``
+    # reads with that schema, for every format: JSONL is not
+    # self-describing (re-inference narrows int widths and re-types
+    # timestamps), partition columns would be re-typed from directory
+    # names, and inferring a parquet schema starts a Spark job to read
+    # a footer. Sidecars without a schema (written before it was
+    # recorded) read by inference. Part-file extension sniffing remains
+    # only as a fallback for pre-sidecar datasets and RAISES when
+    # nothing matches (an empty dataset dir used to silently default
+    # to parquet and fail confusingly downstream).
     FORMATS = ("parquet", "orc", "json")
     SIDECAR = "_format"
 
@@ -84,9 +88,7 @@ class Catalog:
     def _write_sidecar(self, data_dir: str, fmt: str, df: DataFrame) -> None:
         import json
 
-        meta = {"format": fmt}
-        if fmt == "json":
-            meta["schema"] = json.loads(df.schema.json())
+        meta = {"format": fmt, "schema": json.loads(df.schema.json())}
         with open(os.path.join(data_dir, self.SIDECAR), "w") as f:
             json.dump(meta, f)
 
@@ -99,7 +101,8 @@ class Catalog:
 
         sidecar = os.path.join(path, self.SIDECAR)
         if os.path.exists(sidecar):
-            return json.load(open(sidecar))
+            with open(sidecar) as f:
+                return json.load(f)
         fmt = self._sniff_format(path)
         if fmt is not None:
             return {"format": fmt}
@@ -199,9 +202,10 @@ class Catalog:
 
     def get(self, name: str) -> DataFrame:
         """≅ reference ``get sdfsfilename localfilename``. The storage
-        format (and, for JSON, the exact write-time schema) comes from
-        the ``_format`` sidecar, so callers stay format-agnostic and
-        JSON round-trips losslessly — no re-inference."""
+        format and the exact write-time schema come from the ``_format``
+        sidecar, so callers stay format-agnostic, every format
+        round-trips its types losslessly and no Spark job runs to infer
+        a schema."""
         path = self._path(name)
         if not os.path.exists(path):
             raise FileNotFoundError(name)
@@ -215,14 +219,21 @@ class Catalog:
 
     def ls(self, name: str) -> list[dict]:
         """Per-file layout of a dataset (≅ ``ls`` replica listing,
-        mp3/src/sdfs.go:230-248 — block/replica map becomes file list)."""
+        mp3/src/sdfs.go:230-248 — block/replica map becomes file list).
+        Part files of a partitioned dataset are listed by their path
+        under the dataset, e.g. ``l_returnflag=A/part-...``."""
         path = self._path(name)
+        if not os.path.exists(path):
+            raise FileNotFoundError(name)
         out = []
-        for f in sorted(os.listdir(path)):
-            full = os.path.join(path, f)
-            if os.path.isfile(full) and not f.startswith((".", "_")):
-                out.append({"file": f, "bytes": os.path.getsize(full)})
-        return out
+        for dirpath, dirs, files in os.walk(path):
+            dirs[:] = [d for d in dirs if not d.startswith((".", "_"))]
+            for f in files:
+                if not f.startswith((".", "_")):
+                    full = os.path.join(dirpath, f)
+                    out.append({"file": os.path.relpath(full, path),
+                                "bytes": os.path.getsize(full)})
+        return sorted(out, key=lambda e: e["file"])
 
     def store(self) -> list[str]:
         """All dataset names (≅ ``store``, mp3/src/sdfsmaster.go:206-222)."""

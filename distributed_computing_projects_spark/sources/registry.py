@@ -5,6 +5,17 @@ The reference resolves dataset names through the SDFS master's
 resolves to ``<sf_dir>/<name>.parquet`` and Spark's FileSourceScanExec
 does split planning (the reference's line-aligned ``GetLogicalSplits``,
 mp3/src/sdfs.go:94-106, is built into the datasource layer).
+
+Like the master's maps, a name's schema is known without touching the
+data after the first read: ``spark.read.parquet`` without a schema runs
+a one-task Spark job to read a footer, so ``load_table`` memoizes the
+schema Spark inferred and reads with it afterwards. The memo key is the
+file's identity (absolute path, inode, size, mtime in ns) plus every
+session conf whose key mentions ``parquet`` (binaryAsString,
+int96AsTimestamp, inferTimestampNTZ, nanosAsLong, ...), so a rewritten
+file or a flipped conf infers again. A path that is not a local regular
+file (a non-local ``sf_dir``, or a directory of part files, whose stat
+misses a part rewritten in place) is read with inference every time.
 """
 
 from __future__ import annotations
@@ -12,6 +23,7 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 TABLE_NAMES = [
     "region",
@@ -26,6 +38,33 @@ TABLE_NAMES = [
     "embeddings",
 ]
 
+_SCHEMAS: dict[tuple, StructType] = {}
+
+
+def _parquet_confs(spark: SparkSession) -> tuple:
+    """The session's confs whose key mentions ``parquet``, sorted.
+    ``spark.conf.getAll`` makes one py4j round trip per conf (~25 ms);
+    this reads the same map's keys in one and only the matches' values."""
+    confs = spark.conf._jconf.getAllAsJava()
+    keys = confs.keySet().toString()[1:-1].split(", ")
+    return tuple(sorted((k, confs.get(k)) for k in keys if "parquet" in k))
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` with the schema memoized per file
+    identity and parquet conf (module docstring)."""
+    if not os.path.isfile(path):
+        return spark.read.parquet(path)
+    st = os.stat(path)
+    key = (os.path.abspath(path), st.st_ino, st.st_size, st.st_mtime_ns,
+           _parquet_confs(spark))
+    schema = _SCHEMAS.get(key)
+    if schema is not None:
+        return spark.read.schema(schema).parquet(path)
+    df = spark.read.parquet(path)
+    _SCHEMAS[key] = df.schema
+    return df
+
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLE_NAMES:
@@ -39,7 +78,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     #   DuckDB oracle's naive-UTC timestamps wherever the host TZ.
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    df = _read_parquet(spark, os.path.join(sf_dir, f"{name}.parquet"))
     # events.ts is TIMESTAMP(NANOS) in parquet; with nanosAsLong it
     # arrives as a bigint of nanoseconds — convert (µs resolution,
     # verified lossless for the driver data).
