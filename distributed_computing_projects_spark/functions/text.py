@@ -174,6 +174,19 @@ def minhash_sig(hashes_arr: str, dialect: str) -> list[str]:
     ]
 
 
+def band_key(sig: str, band: int, dialect: str) -> str:
+    """LSH band ``band``'s bucket key: its ``ROWS_PER_BAND`` signature
+    rows as decimal strings joined by ``,``. Spark arrays index from 0,
+    DuckDB lists from 1."""
+    _check(dialect)
+    rows = range(band * ROWS_PER_BAND, (band + 1) * ROWS_PER_BAND)
+    if dialect == "spark":
+        parts = ", ".join(f"CAST({sig}[{i}] AS STRING)" for i in rows)
+    else:
+        parts = ", ".join(f"CAST({sig}[{i + 1}] AS VARCHAR)" for i in rows)
+    return f"concat_ws(',', {parts})"
+
+
 def winnow(text: str, k: int, w: int, dialect: str) -> str:
     """Winnowing document fingerprint (Schleimer/Wilkerson/Aiken '03):
     hash every character k-gram (rolling window of the text), then keep

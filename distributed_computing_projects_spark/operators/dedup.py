@@ -82,22 +82,16 @@ def minhash_signatures(
     callers splitting one table by a flag need no join back."""
     sh = T.shingles(text_col, 3, "spark")
     hashes = f"transform({sh}, s -> {T.hash32('s', 'spark')} % {T.MERSENNE_P})"
-    rows = spread(df).select(
-        F.col(id_col).alias("id"),
-        *[F.col(c) for c in carry],
-        F.explode(F.expr(hashes)).alias("h"),
+    rows = spread(df).selectExpr(
+        f"{id_col} AS id", *carry, f"explode({hashes}) AS h",
     )
-    mins = [
-        F.min(F.expr(
-            f"({T.MINHASH_A[i]} * h + {T.MINHASH_B[i]}) % {T.MERSENNE_P}"
-        )).alias(f"_s{i}")
+    mins = ", ".join(
+        f"min(({T.MINHASH_A[i]} * h + {T.MINHASH_B[i]}) % {T.MERSENNE_P})"
         for i in range(T.N_PERMS)
-    ]
-    carries = [F.first(c).alias(c) for c in carry]
-    return (
-        rows.groupBy("id").agg(*mins, *carries)
-        .select("id", F.array(*[f"_s{i}" for i in range(T.N_PERMS)])
-                .alias("sig"), *carry)
+    )
+    return rows.groupBy("id").agg(
+        F.expr(f"array({mins}) AS sig"),
+        *[F.expr(f"first({c}) AS {c}") for c in carry],
     )
 
 
@@ -105,29 +99,28 @@ def _banded(sigs: DataFrame, carry: tuple[str, ...] = ()) -> DataFrame:
     """(id, sig, band, key[, carry...]): one row per signature per LSH
     band, the band key being the concatenated band rows. Signatures
     ride along (128 B) so estimated Jaccard needs no join back."""
-    bands = F.array(*[
-        F.struct(
-            F.lit(b).alias("band"),
-            F.concat_ws(",", *[
-                F.col("sig")[b * T.ROWS_PER_BAND + r].cast("string")
-                for r in range(T.ROWS_PER_BAND)
-            ]).alias("key"),
-        )
+    bands = ", ".join(
+        f"named_struct('band', {b}, 'key', {T.band_key('sig', b, 'spark')})"
         for b in range(T.N_BANDS)
-    ])
-    return sigs.select("id", "sig", *carry, F.explode(bands).alias("bk")).select(
-        "id", "sig", *carry,
-        F.col("bk.band").alias("band"), F.col("bk.key").alias("key"),
     )
+    return sigs.selectExpr("id", "sig", *carry, f"inline(array({bands}))")
 
 
-def _est_jaccard():
-    # one compact fold, not N_PERMS separate CASEs — the expanded form
-    # made the codegen stage pathologically slow to JIT (15 s first run)
-    return F.expr(
-        "aggregate(zip_with(a.sig, b.sig, (x, y) -> CASE WHEN x = y THEN 1"
-        " ELSE 0 END), 0, (acc, v) -> acc + v)"
-    ) / F.lit(float(T.N_PERMS))
+# One compact fold, not N_PERMS separate CASEs — the expanded form made
+# the codegen stage pathologically slow to JIT (15 s first run). The
+# divisor is a DOUBLE: a bare ``16.0`` in Spark SQL is a DECIMAL literal
+# and would make the column decimal.
+_EST_JACCARD = (
+    "aggregate(zip_with(a.sig, b.sig, (x, y) -> CASE WHEN x = y THEN 1"
+    f" ELSE 0 END), 0, (acc, v) -> acc + v) / CAST({T.N_PERMS} AS DOUBLE)"
+    " AS est_jaccard"
+)
+
+
+def _at_least(col: str, threshold: float) -> str:
+    """``col >= threshold`` with the threshold as a DOUBLE, not the
+    DECIMAL a bare ``0.25`` parses to."""
+    return f"{col} >= CAST('{float(threshold)!r}' AS DOUBLE)"
 
 
 def lsh_candidate_pairs(sigs: DataFrame) -> DataFrame:
@@ -139,14 +132,9 @@ def lsh_candidate_pairs(sigs: DataFrame) -> DataFrame:
     banded = _banded(sigs)
     a, b = banded.alias("a"), banded.alias("b")
     return (
-        a.join(b, (F.col("a.band") == F.col("b.band"))
-               & (F.col("a.key") == F.col("b.key"))
-               & (F.col("a.id") < F.col("b.id")))
-        .select(
-            F.col("a.id").alias("id_a"),
-            F.col("b.id").alias("id_b"),
-            _est_jaccard().alias("est_jaccard"),
-        )
+        a.join(b, F.expr(
+            "a.band = b.band AND a.key = b.key AND a.id < b.id"))
+        .selectExpr("a.id AS id_a", "b.id AS id_b", _EST_JACCARD)
         .distinct()
     )
 
@@ -170,7 +158,8 @@ def minhash_lsh_pairs(
     sigs = minhash_signatures(df, id_col, text_col)
     if persist:
         sigs = sigs.persist()
-    return lsh_candidate_pairs(sigs).filter(F.col("est_jaccard") >= threshold)
+    return lsh_candidate_pairs(sigs).filter(
+        _at_least("est_jaccard", threshold))
 
 
 def lsh_incremental_pairs(
@@ -229,8 +218,8 @@ def lsh_incremental_pairs_single_scan(
     if persist:
         banded = banded.persist()
     return _incremental_join(
-        banded.filter(F.col("_is_new")).drop("_is_new"),
-        banded.filter(~F.col("_is_new")).drop("_is_new"),
+        banded.filter("_is_new").drop("_is_new"),
+        banded.filter("NOT _is_new").drop("_is_new"),
         threshold,
     )
 
@@ -240,15 +229,10 @@ def _incremental_join(
 ) -> DataFrame:
     a, b = banded_new.alias("a"), banded_corpus.alias("b")
     return (
-        a.join(b, (F.col("a.band") == F.col("b.band"))
-               & (F.col("a.key") == F.col("b.key")))
-        .select(
-            F.col("a.id").alias("new_id"),
-            F.col("b.id").alias("corpus_id"),
-            _est_jaccard().alias("est_jaccard"),
-        )
+        a.join(b, F.expr("a.band = b.band AND a.key = b.key"))
+        .selectExpr("a.id AS new_id", "b.id AS corpus_id", _EST_JACCARD)
         .distinct()
-        .filter(F.col("est_jaccard") >= threshold)
+        .filter(_at_least("est_jaccard", threshold))
     )
 
 
@@ -533,10 +517,11 @@ def neardup_clusters(
         pairs.select(F.col(id_a).alias("u"), F.col(id_b).alias("v"))
         .filter(F.col("u") != F.col("v"))
         .distinct()
-        # lazy: the count below is the materializing action, so each
-        # checkpoint costs ONE job, not an eager-materialize job plus a
-        # count job (2 rounds x 1 saved job is ~30% of wall time on a
-        # small edge set, where per-job overhead dominates)
+        # lazy, yet not free: under AQE, turning the plan into the RDD
+        # to checkpoint runs its shuffle-map stages to finalize it (5
+        # jobs at this call on the sf0.01 documents edge set); the
+        # count below then runs 2 (the checkpoint write and the count)
+        # and the union-find collect 1
         .localCheckpoint(eager=False)
     )
     # Convergence = set equality of consecutive edge sets. Both sides

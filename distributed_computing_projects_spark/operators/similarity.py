@@ -31,7 +31,7 @@ the top-k ranking — are oracle-exact.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 from distributed_computing_projects_spark.functions import text as T
 from distributed_computing_projects_spark.operators import storemeta
@@ -268,31 +268,25 @@ def knn_join(
     """
     from distributed_computing_projects_spark.operators.spread import spread
 
-    b = spread(emb).select(
-        F.col(id_col).alias("id"),
-        F.col(vec_col).alias("v"),
-        F.expr(T.lsh_bucket(vec_col, "spark", n_planes)).alias("bucket"),
-        F.expr(T.sq_norm(vec_col, "spark")).alias("nrm"),
+    b = spread(emb).selectExpr(
+        f"{id_col} AS id",
+        f"{vec_col} AS v",
+        f"{T.lsh_bucket(vec_col, 'spark', n_planes)} AS bucket",
+        f"{T.sq_norm(vec_col, 'spark')} AS nrm",
     )
     if persist:
         b = b.persist()
     a, bb = b.alias("a"), b.alias("b")
     cos = T.cosine(T.dot("a.v", "b.v", "spark"), "a.nrm", "b.nrm")
-    pairs = (
-        a.join(bb, (F.col("a.bucket") == F.col("b.bucket"))
-               & (F.col("a.id") != F.col("b.id")))
-        .select(
-            F.col("a.id").alias("id"),
-            F.col("b.id").alias("neighbour_id"),
-            F.expr(cos).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("id").orderBy(
-        F.desc("cosine"), F.asc("neighbour_id")
-    )
     return (
-        pairs.withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rank") <= k)
+        a.join(bb, F.expr("a.bucket = b.bucket AND a.id <> b.id"))
+        .selectExpr("a.id AS id", "b.id AS neighbour_id", f"{cos} AS cosine")
+        .selectExpr(
+            "*",
+            "CAST(row_number() OVER (PARTITION BY id"
+            " ORDER BY cosine DESC, neighbour_id ASC) AS BIGINT) AS `rank`",
+        )
+        .filter(f"`rank` <= {int(k)}")
     )
 
 

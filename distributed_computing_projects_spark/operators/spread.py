@@ -33,7 +33,6 @@ import re
 from typing import Callable, Iterable
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 # Output rows per Arrow batch a row stage sends back to the JVM.
@@ -155,9 +154,8 @@ def encode_payloads(df: DataFrame, encode: Callable[..., bytes | None],
     the ``spread`` projection of ``id_col`` and ``cols`` returns the
     payload bytes, or ``None`` to drop the row — the shape every
     fixture container builder shares."""
-    picked = spread(df.select(
-        F.col(id_col).alias("id"),
-        *(F.col(c).alias(f"c{k}") for k, c in enumerate(cols))))
+    picked = spread(df.select(id_col, *cols).toDF(
+        "id", *(f"c{k}" for k in range(len(cols)))))
 
     def row(i, *values):
         payload = encode(i, *values)

@@ -25,12 +25,17 @@ _HASHES_D = f"list_transform({_SH_D}, s -> {T.hash32('s', 'duck')} % {T.MERSENNE
 _SIG_D = ", ".join(T.minhash_sig("hs", "duck"))
 
 
-_BAND_SELECTS = " UNION ALL ".join(
-    f"SELECT id, sig, {b} AS band, concat_ws(',', "
-    + ", ".join(f"sig[{b * T.ROWS_PER_BAND + r + 1}]" for r in range(T.ROWS_PER_BAND))
-    + ") AS key FROM sigs"
-    for b in range(T.N_BANDS)
-)
+def _band_selects(carry: str = "") -> str:
+    """The banding of ``dedup._banded``: one row per signature per
+    band, with ``carry`` columns riding along."""
+    return " UNION ALL ".join(
+        f"SELECT id, {carry}sig, {b} AS band,"
+        f" {T.band_key('sig', b, 'duck')} AS key FROM sigs"
+        for b in range(T.N_BANDS)
+    )
+
+
+_BAND_SELECTS = _band_selects()
 
 
 _N_EQ_D = " + ".join(
@@ -98,14 +103,9 @@ GATE_MIN_DISTINCT = 0.3
 INCR_BATCH_SOURCE = "src0"
 
 
-# Same band projection as _BAND_SELECTS, with the source column riding
-# along so the oracle can split batch vs corpus after banding.
-_BAND_SELECTS_SRC = " UNION ALL ".join(
-    f"SELECT id, source, sig, {b} AS band, concat_ws(',', "
-    + ", ".join(f"sig[{b * T.ROWS_PER_BAND + r + 1}]" for r in range(T.ROWS_PER_BAND))
-    + ") AS key FROM sigs"
-    for b in range(T.N_BANDS)
-)
+# the source column rides along so the oracle can split batch vs
+# corpus after banding
+_BAND_SELECTS_SRC = _band_selects("source, ")
 
 
 _INCR_ORACLE = f"""
