@@ -10,15 +10,10 @@ values after sorting columns by name.
 
 from __future__ import annotations
 
-import functools
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
-
-from distributed_computing_projects_spark.queries._byte_coalesced import (
-    BYTE_COALESCED_QUERIES,
-)
 
 
 @dataclass
@@ -40,20 +35,7 @@ def query(name: str, oracle: str | None = None, headline: bool = False,
             # a silent overwrite would drop a query from the driver's
             # correctness matrix with no failing signal
             raise ValueError(f"duplicate query name {name!r}")
-        run = fn
-        if name in BYTE_COALESCED_QUERIES:
-            # measured winners run on the byte-coalesced sibling
-            # session (see _byte_coalesced.py for the sweep and the
-            # scale argument); partitioning never changes results,
-            # and the caller's base session conf stays untouched
-            @functools.wraps(fn)
-            def run(spark, sf_dir, _fn=fn):
-                from distributed_computing_projects_spark.session import (
-                    byte_coalesced,
-                )
-
-                return _fn(byte_coalesced(spark), sf_dir)
-        REGISTRY[name] = QuerySpec(name, run, oracle, headline, doc)
+        REGISTRY[name] = QuerySpec(name, fn, oracle, headline, doc)
         return fn
     return deco
 

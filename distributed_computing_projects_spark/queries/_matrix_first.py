@@ -111,6 +111,8 @@ MATRIX_ORDER = [
     'webdataset_scan',  # changed since green r13
     'wikidump_nowiki_plain_text',  # changed since green r13
     'wikidump_plain_text',  # changed since green r13
+    'condorcet_round1',  # changed since green r14
+    'condorcet_wins',  # changed since green r14
     'dataset_split_counts',  # changed since green r14
     'epub_extract_text',  # changed since green r14
     'mbox_extract_emails',  # changed since green r14
@@ -211,9 +213,7 @@ MATRIX_ORDER = [
     'streaming_avro_ingest',  # green r13
     'streaming_jsonl_zst_ingest',  # green r13
     'asof_last_click_before_purchase',  # green r14
-    'condorcet_round1',  # green r14
     'condorcet_winner',  # green r14
-    'condorcet_wins',  # green r14
     'customers_without_orders',  # green r14
     'pack_stats',  # green r14
     'q10_returned_item_customers',  # green r14
@@ -263,4 +263,4 @@ MATRIX_ORDER = [
 # Urgent queries past the driver's row budget this round: no
 # driver row until next round; oracle-verified in pytest instead
 # (tests/test_matrix_rotation.py::test_overflow_queries_verify).
-MATRIX_OVERFLOW = ['dedup_ngram_jaccard', 'dedup_semantic', 'dedup_semantic_twolevel', 'dedup_simhash', 'dedup_survivors', 'knn_join_recall', 'knn_join_topk', 'knn_label_accuracy', 'minhash_signature', 'quality_classifier_confusion', 'quality_classifier_weights', 'simhash_fingerprint', 'streaming_ann_ingest', 'streaming_dedup_ingest', 'streaming_dedup_ingest_epochs', 'streaming_ivfpq_ingest', 'wikidump_extract_pages', 'multimodal_adpcm_decode', 'multimodal_audio_decode', 'multimodal_audio_features', 'multimodal_avif_decode', 'multimodal_features', 'multimodal_flac_decode', 'multimodal_frame_sample', 'multimodal_g711_decode', 'multimodal_gif_decode', 'multimodal_gif_frames', 'multimodal_heic_decode', 'multimodal_image_decode', 'multimodal_jpeg420_decode', 'multimodal_jpeg_coeffs', 'multimodal_jpeg_decode', 'multimodal_jpeg_progressive', 'multimodal_jpeg_progressive_decode', 'multimodal_payload_stats', 'multimodal_png_decode', 'multimodal_png_interlaced', 'multimodal_png_palette', 'multimodal_resize', 'multimodal_tiff_decode', 'multimodal_webp_decode', 'pdf_extract_text', 'pdf_filters_extract_text', 'pdf_objstm_extract_strings', 'pdf_objstm_extract_text', 'pdf_tounicode_extract_text', 'training_corpus_summary', 'training_corpus_v2', 'webdataset_scan', 'wikidump_nowiki_plain_text', 'wikidump_plain_text', 'dataset_split_counts', 'epub_extract_text', 'mbox_extract_emails', 'odt_extract_text', 'stratified_sample_counts', 'streaming_wet_ingest', 'tfidf_top_terms', 'token_stats', 'token_stats_bpe', 'training_corpus_wire', 'vocab_coverage', 'warc_content_encoded_responses', 'warc_extract_responses', 'warc_gz_extract_responses', 'warc_zst_extract_responses', 'wet_extract_conversions', 'wet_zst_extract_conversions', 'zip_archive_scan', 'arrow_events_roundtrip', 'bson_events_scan', 'cbor_events_scan', 'doc_length_histogram', 'docx_extract_text', 'jsonl_bgzf_scan', 'jsonl_xz_blocks_scan', 'msgpack_events_scan', 'pptx_extract_text', 'rtf_extract_text', 'seekable_sink_roundtrip', 'sketch_hll_tokens', 'sketch_intersect_distinct', 'wat_extract_links', 'xlsx_events_roundtrip']
+MATRIX_OVERFLOW = ['dedup_ngram_jaccard', 'dedup_semantic', 'dedup_semantic_twolevel', 'dedup_simhash', 'dedup_survivors', 'knn_join_recall', 'knn_join_topk', 'knn_label_accuracy', 'minhash_signature', 'quality_classifier_confusion', 'quality_classifier_weights', 'simhash_fingerprint', 'streaming_ann_ingest', 'streaming_dedup_ingest', 'streaming_dedup_ingest_epochs', 'streaming_ivfpq_ingest', 'wikidump_extract_pages', 'multimodal_adpcm_decode', 'multimodal_audio_decode', 'multimodal_audio_features', 'multimodal_avif_decode', 'multimodal_features', 'multimodal_flac_decode', 'multimodal_frame_sample', 'multimodal_g711_decode', 'multimodal_gif_decode', 'multimodal_gif_frames', 'multimodal_heic_decode', 'multimodal_image_decode', 'multimodal_jpeg420_decode', 'multimodal_jpeg_coeffs', 'multimodal_jpeg_decode', 'multimodal_jpeg_progressive', 'multimodal_jpeg_progressive_decode', 'multimodal_payload_stats', 'multimodal_png_decode', 'multimodal_png_interlaced', 'multimodal_png_palette', 'multimodal_resize', 'multimodal_tiff_decode', 'multimodal_webp_decode', 'pdf_extract_text', 'pdf_filters_extract_text', 'pdf_objstm_extract_strings', 'pdf_objstm_extract_text', 'pdf_tounicode_extract_text', 'training_corpus_summary', 'training_corpus_v2', 'webdataset_scan', 'wikidump_nowiki_plain_text', 'wikidump_plain_text', 'condorcet_round1', 'condorcet_wins', 'dataset_split_counts', 'epub_extract_text', 'mbox_extract_emails', 'odt_extract_text', 'stratified_sample_counts', 'streaming_wet_ingest', 'tfidf_top_terms', 'token_stats', 'token_stats_bpe', 'training_corpus_wire', 'vocab_coverage', 'warc_content_encoded_responses', 'warc_extract_responses', 'warc_gz_extract_responses', 'warc_zst_extract_responses', 'wet_extract_conversions', 'wet_zst_extract_conversions', 'zip_archive_scan', 'arrow_events_roundtrip', 'bson_events_scan', 'cbor_events_scan', 'doc_length_histogram', 'docx_extract_text', 'jsonl_bgzf_scan', 'jsonl_xz_blocks_scan', 'msgpack_events_scan', 'pptx_extract_text', 'rtf_extract_text', 'seekable_sink_roundtrip', 'sketch_hll_tokens', 'sketch_intersect_distinct', 'wat_extract_links', 'xlsx_events_roundtrip']

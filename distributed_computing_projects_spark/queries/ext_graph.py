@@ -88,9 +88,9 @@ def _pagerank_oracle(n_iters: int = G.N_ITERS,
         "collected state) is the 100 TB-legal one.",
 )
 def q_graph_pagerank_topk(spark, sf_dir):
-    # runs on the byte-coalesced sibling via the registry wrapper
-    # (queries/_byte_coalesced.py): 32 tiny per-round partitions were
-    # pure scheduler latency — the 8-core bench BEAT 32-core 0.40x here
+    # relies on get_spark's byte-driven AQE coalescing, which also
+    # reaches the persisted per-round plans: 32 tiny per-round
+    # partitions were pure scheduler latency (8 cores beat 32, 0.40x)
     ev = load_table(spark, sf_dir, "events")
     ranked = G.pagerank_fixedpoint(G.click_graph(ev))
     w = Window.orderBy(F.desc("rank"), F.asc("node"))

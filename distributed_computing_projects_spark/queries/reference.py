@@ -148,10 +148,15 @@ def q_condorcet_round1(spark, sf_dir):
     # l_suppkey) AND groupBy(l_orderkey), so the explicit repartition
     # replaces two narrower exchanges (per-supplier partial rows, then
     # per-order rows) with a single shuffle of the pruned scan —
-    # half the shuffled bytes, and AQE still coalesces its partitions.
+    # half the shuffled bytes. Both exchanges are by-number
+    # repartitions, which AQE never coalesces: the per-order and pair
+    # aggregates are CPU-dense per key, and byte-driven coalescing ran
+    # them in a task or two at bench scale (sf0.1/local[4]: 2.2 s
+    # pinned, 5.6 s unpinned, 3.1 s with only this first one pinned).
+    n = int(spark.conf.get("spark.sql.shuffle.partitions"))
     per_sup = (
         li.select("l_orderkey", "l_suppkey", "l_linenumber")
-        .repartition("l_orderkey")
+        .repartition(n, "l_orderkey")
         .groupBy("l_orderkey", "l_suppkey")
         .agg(F.min("l_linenumber").alias("r"))
     )
@@ -171,10 +176,12 @@ def q_condorcet_round1(spark, sf_dir):
     """
     return (
         per_order.select(F.explode(F.expr(pairs)).alias("p"))
-        .groupBy(F.col("p.a").alias("a"), F.col("p.b").alias("b"))
+        .select("p.a", "p.b", "p.a_beats", "p.b_beats")
+        .repartition(n, "a", "b")
+        .groupBy("a", "b")
         .agg(
-            F.sum("p.a_beats").alias("a_pref"),
-            F.sum("p.b_beats").alias("b_pref"),
+            F.sum("a_beats").alias("a_pref"),
+            F.sum("b_beats").alias("b_pref"),
         )
         .withColumn(
             "winner",

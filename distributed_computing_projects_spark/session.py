@@ -7,6 +7,17 @@ Spark's scheduler. Every knob here is chosen for the 100 TB target:
 - AQE on (runtime re-plan, skew-join splitting, partition coalescing) —
   the reference's fixed ``num_maples``/``num_juices`` DOP knob
   (mp3/src/maplejuice.go:209-225) becomes adaptive.
+- AQE coalesces post-shuffle partitions by BYTES
+  (``parallelismFirst=false``: honor ``advisoryPartitionSizeInBytes``),
+  also inside persisted subplans
+  (``canChangeCachedPlanOutputPartitioning``), where iterative
+  operators' per-round exchanges live: ~defaultParallelism KB-sized
+  partitions per round are pure scheduling overhead (pagerank 4.30 ->
+  1.35 s at sf0.1/local[32]), and at real data sizes the rule yields
+  more partitions, not one. condorcet_round1 and q17 are CPU-dense per
+  key, so they pin their exchanges with a by-number
+  ``repartition(<shuffle partitions>, key)``, which AQE never
+  coalesces; otherwise each stage runs in one task at bench scale.
 - shuffle partitions default to the core count locally; on a real
   cluster callers pass ``shuffle_partitions`` sized to the data.
 - Arrow enabled so the few Pandas-UDF operators batch-transfer.
@@ -21,7 +32,6 @@ Spark's scheduler. Every knob here is chosen for the 100 TB target:
 from __future__ import annotations
 
 import os
-import weakref
 
 from pyspark.sql import SparkSession
 
@@ -56,67 +66,12 @@ def hadoop_conf_from_env(env=None) -> dict[str, str]:
     return out
 
 
-# ---------------------------------------------------------------------
-# Per-query runtime-SQL-conf scoping (r17). Some queries want AQE to
-# coalesce post-shuffle partitions BY BYTES (parallelismFirst=false:
-# honor advisoryPartitionSizeInBytes) — the documented production
-# setting for shuffle-latency-bound iterative plans like PageRank,
-# where keeping ~defaultParallelism KB-sized partitions per round is
-# pure scheduling overhead (measured: the r16 bench anti-scaled 8 vs
-# 32 cores, pagerank ratio 0.40). A BLANKET flip is a measured
-# pessimization for CPU-dense post-shuffle stages (condorcet_round1
-# 1.4 -> 3.4 s: its per-order aggregate collapsed to one partition at
-# bench scale), so the flip is scoped per query through a SIBLING
-# SparkSession: same SparkContext (same executors, caches, JVM), own
-# SQLConf, so the conf is live when the CALLER's action later executes
-# the returned lazy DataFrame — a plain spark.conf.set inside a query
-# function would be reset long before the bench's count() runs.
-# Sessions are memoized per (base session, conf) so bench reps reuse
-# one sibling instead of leaking SessionStates. The memo holds the base
-# session weakly: an ``id()`` key could be reused by a new base after
-# the old one was stopped and collected, handing out a sibling bound to
-# a stopped SparkContext.
-
-_DERIVED_SESSIONS: weakref.WeakKeyDictionary[
-    SparkSession, dict[tuple[tuple[str, str], ...], SparkSession]
-] = weakref.WeakKeyDictionary()
-
-
-def derived_session(spark: SparkSession,
-                    confs: dict[str, str]) -> SparkSession:
-    """A sibling session of ``spark`` with ``confs`` applied to its
-    (separate) runtime SQLConf. The base session's conf is untouched."""
-    siblings = _DERIVED_SESSIONS.setdefault(spark, {})
-    key = tuple(sorted(confs.items()))
-    s = siblings.get(key)
-    if s is None:
-        s = spark.newSession()
-        for k, v in confs.items():
-            s.conf.set(k, v)
-        siblings[key] = s
-    return s
-
-
-# At 100 TB the same seam carries the full production recommendation
-# (advisory 256m); locally the inherited 64m default keeps bench-scale
-# single-partition coalescing while staying byte-driven at any scale.
-BYTE_COALESCE_CONFS = {
-    "spark.sql.adaptive.coalescePartitions.parallelismFirst": "false",
-    # persisted subplans otherwise keep their static shuffle
-    # partitioning (Spark pins cached output partitioning by default),
-    # which is exactly where iterative operators' per-round exchanges
-    # live — without this the flip never reaches them (measured r17:
-    # pagerank 2.5-4.2 s -> 1.4-1.7 s at sf0.1/local[32])
-    "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning": "true",
-}
-
-
 def byte_coalesced(spark: SparkSession) -> SparkSession:
-    """Sibling session where AQE coalesces post-shuffle partitions by
-    target BYTES rather than keeping local-parallelism-many tiny
-    partitions — scale-adaptive by construction (partition count
-    follows shuffle bytes / advisory size at any data size)."""
-    return derived_session(spark, BYTE_COALESCE_CONFS)
+    """Return ``spark`` itself: every ``get_spark`` session already
+    coalesces by bytes. Kept only because ``perfbench/run.py``, which
+    changes only with the benchmark, imports and calls it; delete it
+    with the next benchmark change."""
+    return spark
 
 
 def get_spark(
@@ -140,6 +95,10 @@ def get_spark(
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
+        .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
+                "false")
+        .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
+                "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.sql.session.timeZone", "UTC")

@@ -8,6 +8,8 @@ move. One representative query per shape class."""
 
 from __future__ import annotations
 
+import re
+
 import pytest
 
 QUERIES = [
@@ -33,18 +35,56 @@ def test_partition_count_does_not_change_values(spark, sf_dir, name):
 
     fn = load_registry()[name].fn
     key = "spark.sql.shuffle.partitions"
-    saved = spark.conf.get(key)
+    coalesce = "spark.sql.adaptive.coalescePartitions.enabled"
+    saved = {k: spark.conf.get(k) for k in (key, coalesce)}
     try:
-        spark.conf.set(key, "2")
-        spark.catalog.clearCache()
-        at2 = _rows(fn(spark, sf_dir))
-        spark.conf.set(key, "17")
-        spark.catalog.clearCache()
-        at17 = _rows(fn(spark, sf_dir))
+        # without coalescing, 2 and 17 reduce tasks really run
+        spark.conf.set(coalesce, "false")
+        results = []
+        for n in ("2", "17"):
+            spark.conf.set(key, n)
+            spark.catalog.clearCache()
+            df = fn(spark, sf_dir)
+            # the query runs on the session whose conf was just set
+            assert df.sparkSession.conf.get(key) == n
+            results.append(_rows(df))
     finally:
-        spark.conf.set(key, saved)
+        for k, v in saved.items():
+            spark.conf.set(k, v)
         spark.catalog.clearCache()
+    at2, at17 = results
     assert at2 == at17, f"{name} values moved with partition count"
+
+
+# CPU-dense per-key stages that byte-driven coalescing (the session
+# default) would run in a task or two at bench scale: their by-number
+# repartitions must keep every configured reduce partition
+PINNED_EXCHANGES = {
+    "condorcet_round1": {"l_orderkey", "a, b"},
+    "q17_small_quantity_revenue": {"l_partkey"},
+}
+
+
+@pytest.mark.parametrize("name", sorted(PINNED_EXCHANGES))
+def test_pinned_exchanges_are_not_coalesced(spark, sf_dir, name):
+    from distributed_computing_projects_spark.queries import load_registry
+
+    assert spark.conf.get("spark.sql.shuffle.partitions") == "4"
+    df = load_registry()[name].fn(spark, sf_dir)
+    df.collect()
+    # the final AQE plan exists only after the action
+    plan = df._jdf.queryExecution().executedPlan()
+    assert plan.isFinalPlan()
+    final = plan.toString().split("== Initial Plan ==")[0].splitlines()
+    reads = {}
+    for i, line in enumerate(final):
+        m = re.search(r"Exchange hashpartitioning\((.*), (\d+)\)", line)
+        if m:
+            # lines above: ShuffleQueryStage, then the stage's reader
+            coalesced = "AQEShuffleRead" in final[i - 2]
+            reads[re.sub(r"#\d+L?", "", m.group(1))] = (
+                "coalesced" if coalesced else int(m.group(2)))
+    assert reads == dict.fromkeys(PINNED_EXCHANGES[name], 4)
 
 
 FILE_SOURCE_QUERIES = [
