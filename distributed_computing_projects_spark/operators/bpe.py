@@ -48,6 +48,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from distributed_computing_projects_spark.operators.spread import local_frame
+
 MAX_WORD_LEN = 20
 
 
@@ -144,7 +146,7 @@ def train_bpe(spark: SparkSession, docs: DataFrame, text_col: str,
             cached = nxt
     finally:
         cached.unpersist()
-    return spark.createDataFrame(merges, schema=MERGES_SCHEMA)
+    return local_frame(spark, merges, MERGES_SCHEMA)
 
 
 def encode_tokens(docs: DataFrame, id_col: str, text_col: str,

@@ -25,7 +25,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window, functions as F
 
 from distributed_computing_projects_spark.functions import text as T
-from distributed_computing_projects_spark.operators.spread import spread
+from distributed_computing_projects_spark.operators.spread import (
+    local_frame, spread,
+)
 
 NORM_TEXT_SPARK = "md5(lower(regexp_replace({col}, '\\\\s+', ' ')))"
 NORM_TEXT_DUCK = "md5(lower(regexp_replace({col}, '\\s+', ' ', 'g')))"
@@ -425,13 +427,13 @@ def _small_star(edges: DataFrame) -> DataFrame:
 MAX_DRIVER_EDGES = 100_000
 
 
-def _components_local(edges: DataFrame) -> DataFrame:
-    """Exact union-find over an already-counted small edge frame,
-    emitting the same (id, cluster_id, is_keeper, cluster_size) table
-    as the distributed star rounds — identical types (ids keep the
-    edge column's type; cluster_size is the aggregate's BIGINT) and
-    identical values (components are unique; the representative is
-    the component minimum either way)."""
+def _components_local(spark, edges: list, id_type) -> DataFrame:
+    """Exact union-find over a small collected edge list (``(u, v)``
+    rows of ids typed ``id_type``), emitting the same (id, cluster_id,
+    is_keeper, cluster_size) table as the distributed star rounds —
+    identical types (ids keep the edge column's type; cluster_size is
+    the aggregate's BIGINT) and identical values (components are
+    unique; the representative is the component minimum either way)."""
     from pyspark.sql.types import BooleanType, LongType, StructField, StructType
 
     parent: dict = {}
@@ -444,8 +446,7 @@ def _components_local(edges: DataFrame) -> DataFrame:
             parent[x], x = root, parent[x]
         return root
 
-    for r in edges.collect():
-        u, v = r[0], r[1]
+    for u, v in edges:
         if u not in parent:
             parent[u] = u
         if v not in parent:
@@ -463,7 +464,6 @@ def _components_local(edges: DataFrame) -> DataFrame:
         for node in members:
             rows.append((node, m, node == m, size))
     rows.sort()
-    id_type = edges.schema["u"].dataType
     schema = StructType([
         StructField("id", id_type, True),
         StructField("cluster_id", id_type, True),
@@ -471,7 +471,7 @@ def _components_local(edges: DataFrame) -> DataFrame:
         # count(*) is non-nullable on the star path; match it exactly
         StructField("cluster_size", LongType(), False),
     ])
-    return edges.sparkSession.createDataFrame(rows, schema)
+    return local_frame(spark, rows, schema)
 
 
 def neardup_clusters(
@@ -489,13 +489,13 @@ def neardup_clusters(
     reference has no analog; standard training-pipeline construction.
 
     Algorithm, size-adaptive (r17): edge sets at or below
-    ``MAX_DRIVER_EDGES`` (known from the convergence count the loop
-    needs anyway) collect and resolve by exact driver-side union-find
-    — components are unique, so the output is bit-identical, and a
-    KB-sized edge set pays one collect instead of ~8 scheduler-bound
-    stage-jobs per star round. Above the bound: alternating
-    large-star / small-star (Kiveris et al., "Connected Components in
-    MapReduce and Beyond", SoCC '14) — converges in O(log n) rounds on
+    ``MAX_DRIVER_EDGES`` (known from one bounded collect of at most
+    ``MAX_DRIVER_EDGES + 1`` edges) resolve by exact driver-side
+    union-find — components are unique, so the output is
+    bit-identical, and a KB-sized edge set pays one collect instead
+    of ~8 scheduler-bound stage-jobs per star round. Above the bound:
+    alternating large-star / small-star (Kiveris et al., "Connected
+    Components in MapReduce and Beyond", SoCC '14) — converges in O(log n) rounds on
     ANY graph shape, unlike plain min-label propagation whose round
     count is the graph diameter (a 1M-doc chain of near-dups would
     need 1M rounds). Each round is two groupBy/join stages on the
@@ -520,10 +520,17 @@ def neardup_clusters(
         # lazy, yet not free: under AQE, turning the plan into the RDD
         # to checkpoint runs its shuffle-map stages to finalize it (5
         # jobs at this call on the sf0.01 documents edge set); the
-        # count below then runs 2 (the checkpoint write and the count)
-        # and the union-find collect 1
+        # bounded collect below then computes the pair set once, into
+        # the checkpoint, and only an overflow reads it again
         .localCheckpoint(eager=False)
     )
+    head = edges.limit(MAX_DRIVER_EDGES + 1).collect()
+    if len(head) <= MAX_DRIVER_EDGES:
+        # exact union-find on the whole (small) edge set; the star
+        # loop below is the at-scale path (bit-identical output — see
+        # _components_local)
+        return _components_local(edges.sparkSession, head,
+                                 edges.schema["u"].dataType)
     # Convergence = set equality of consecutive edge sets. Both sides
     # are distinct, so |nxt| == |edges| == |nxt ∩ edges| suffices —
     # and all three scalars come from ONE action per round (r17): a
@@ -538,11 +545,6 @@ def neardup_clusters(
     # blocks, not recomputed lineage. Action budget pinned by
     # tests/test_extensions.py::test_neardup_clusters_action_budget.
     n_edges = edges.count()
-    if n_edges <= MAX_DRIVER_EDGES:
-        # exact union-find on the already-counted small edge set; the
-        # star loop below is the at-scale path (bit-identical output —
-        # see _components_local)
-        return _components_local(edges)
     for _ in range(max_iter):
         nxt = _small_star(_large_star(edges)).localCheckpoint(eager=False)
         stats = (

@@ -42,6 +42,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from distributed_computing_projects_spark.functions import text as T
 from distributed_computing_projects_spark.operators import similarity as S
+from distributed_computing_projects_spark.operators.spread import local_frame
 
 TRAIN_SAMPLE_MOD = 5
 N_ITERS = 2
@@ -372,7 +373,8 @@ def assign_cells_join(
         f" - 2 * {T.dot(vec_col, 'cent', 'spark')}"
     )
     spark = emb.sparkSession
-    cents = spark.createDataFrame(
+    cents = local_frame(
+        spark,
         [(c, [float(x) for x in cent]) for c, cent in sorted(centroids)],
         "cell BIGINT, cent ARRAY<DOUBLE>",
     )
@@ -566,8 +568,8 @@ def assign_cells_two_level(
         )
         for c, cent in sorted(centroids)
     ]
-    cents = spark.createDataFrame(
-        cents_rows,
+    cents = local_frame(
+        spark, cents_rows,
         "super BIGINT, cell BIGINT, c2 DOUBLE, cent ARRAY<DOUBLE>",
     )
     staged = emb.select(

@@ -1,7 +1,9 @@
 """Pre-Python / pre-expression parallelism guard, shared by every
 CPU-heavy stage (dedup signature hashing, ANN bucketing, media
-encode/decode), and :func:`flat_map_rows` — the one Arrow row stage
-every Python-worker decode and encode runs through.
+encode/decode), :func:`flat_map_rows` — the one Arrow row stage
+every Python-worker decode and encode runs through — and
+:func:`local_frame`, the one way the package turns driver-side rows
+into a DataFrame.
 
 A small single-file parquet arrives as ONE input split, serializing
 the work no matter how many cores exist (measured 5 s -> 0.3 s on 32
@@ -32,7 +34,7 @@ import os
 import re
 from typing import Callable, Iterable
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
 # Output rows per Arrow batch a row stage sends back to the JVM.
@@ -78,6 +80,35 @@ def spread(df: DataFrame) -> DataFrame:
     return df
 
 
+def _arrow_batch(cols: list[list], schema):
+    """One pyarrow ``RecordBatch`` of ``schema`` from per-column value
+    lists."""
+    import pyarrow as pa
+
+    return pa.RecordBatch.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, schema)],
+        schema=schema)
+
+
+def local_frame(spark: SparkSession, rows: Iterable[tuple],
+                ddl: str | StructType) -> DataFrame:
+    """A DataFrame of driver-side ``rows`` (tuples in ``ddl`` column
+    order), built through one pyarrow Table: its plan is a
+    ``LocalTableScan`` that runs no Python. ``createDataFrame`` over a
+    Python list instead plans a pickled ``PythonRDD`` stage, which
+    Spark serves from a second Python worker daemon of its own."""
+    import pyarrow as pa
+
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(ddl, str):
+        ddl = StructType.fromDDL(ddl)
+    schema = to_arrow_schema(ddl)
+    cols = [list(c) for c in zip(*rows)] or [[] for _ in schema]
+    table = pa.Table.from_batches([_arrow_batch(cols, schema)])
+    return spark.createDataFrame(table, ddl)
+
+
 def flat_map_rows(df: DataFrame,
                   fn: Callable[..., Iterable[tuple]],
                   ddl: str | StructType) -> DataFrame:
@@ -89,18 +120,11 @@ def flat_map_rows(df: DataFrame,
     built with ``pa.array`` at the schema's Arrow type and flushed as
     one ``RecordBatch`` every :data:`BATCH_ROWS` output rows, so one
     input row may yield any number of rows across flushes."""
-    import pyarrow as pa
-
     from pyspark.sql.pandas.types import to_arrow_schema
 
     if isinstance(ddl, str):
         ddl = StructType.fromDDL(ddl)
     schema = to_arrow_schema(ddl)
-
-    def flush(cols):
-        return pa.RecordBatch.from_arrays(
-            [pa.array(c, type=f.type) for c, f in zip(cols, schema)],
-            schema=schema)
 
     def run(batches):
         cols = [[] for _ in schema]
@@ -110,10 +134,10 @@ def flat_map_rows(df: DataFrame,
                     for col, v in zip(cols, out):
                         col.append(v)
                     if len(cols[0]) == BATCH_ROWS:
-                        yield flush(cols)
+                        yield _arrow_batch(cols, schema)
                         cols = [[] for _ in schema]
         if cols[0]:
-            yield flush(cols)
+            yield _arrow_batch(cols, schema)
 
     return df.mapInArrow(run, ddl)
 

@@ -144,6 +144,7 @@ MATRIX_ORDER = [
     'seekable_sink_roundtrip',  # changed since green r15
     'sketch_hll_tokens',  # changed since green r15
     'sketch_intersect_distinct',  # changed since green r15
+    'streaming_tfrecord_ingest',  # changed since green r15
     'wat_extract_links',  # changed since green r15
     'xlsx_events_roundtrip',  # changed since green r15
     'maplejuice_wordcount',  # pre-snapshot green r17 — conservative re-verify
@@ -254,7 +255,6 @@ MATRIX_ORDER = [
     'streaming_jsonl_agg',  # green r15
     'streaming_msgpack_ingest',  # green r15
     'streaming_sqlite_ingest',  # green r15
-    'streaming_tfrecord_ingest',  # green r15
     'user_sessions',  # green r15
     'wine_filter_agg',  # green r15
     'wordcount',  # green r15
@@ -263,4 +263,4 @@ MATRIX_ORDER = [
 # Urgent queries past the driver's row budget this round: no
 # driver row until next round; oracle-verified in pytest instead
 # (tests/test_matrix_rotation.py::test_overflow_queries_verify).
-MATRIX_OVERFLOW = ['dedup_ngram_jaccard', 'dedup_semantic', 'dedup_semantic_twolevel', 'dedup_simhash', 'dedup_survivors', 'knn_join_recall', 'knn_join_topk', 'knn_label_accuracy', 'minhash_signature', 'quality_classifier_confusion', 'quality_classifier_weights', 'simhash_fingerprint', 'streaming_ann_ingest', 'streaming_dedup_ingest', 'streaming_dedup_ingest_epochs', 'streaming_ivfpq_ingest', 'wikidump_extract_pages', 'multimodal_adpcm_decode', 'multimodal_audio_decode', 'multimodal_audio_features', 'multimodal_avif_decode', 'multimodal_features', 'multimodal_flac_decode', 'multimodal_frame_sample', 'multimodal_g711_decode', 'multimodal_gif_decode', 'multimodal_gif_frames', 'multimodal_heic_decode', 'multimodal_image_decode', 'multimodal_jpeg420_decode', 'multimodal_jpeg_coeffs', 'multimodal_jpeg_decode', 'multimodal_jpeg_progressive', 'multimodal_jpeg_progressive_decode', 'multimodal_payload_stats', 'multimodal_png_decode', 'multimodal_png_interlaced', 'multimodal_png_palette', 'multimodal_resize', 'multimodal_tiff_decode', 'multimodal_webp_decode', 'pdf_extract_text', 'pdf_filters_extract_text', 'pdf_objstm_extract_strings', 'pdf_objstm_extract_text', 'pdf_tounicode_extract_text', 'training_corpus_summary', 'training_corpus_v2', 'webdataset_scan', 'wikidump_nowiki_plain_text', 'wikidump_plain_text', 'condorcet_round1', 'condorcet_wins', 'dataset_split_counts', 'epub_extract_text', 'mbox_extract_emails', 'odt_extract_text', 'stratified_sample_counts', 'streaming_wet_ingest', 'tfidf_top_terms', 'token_stats', 'token_stats_bpe', 'training_corpus_wire', 'vocab_coverage', 'warc_content_encoded_responses', 'warc_extract_responses', 'warc_gz_extract_responses', 'warc_zst_extract_responses', 'wet_extract_conversions', 'wet_zst_extract_conversions', 'zip_archive_scan', 'arrow_events_roundtrip', 'bson_events_scan', 'cbor_events_scan', 'doc_length_histogram', 'docx_extract_text', 'jsonl_bgzf_scan', 'jsonl_xz_blocks_scan', 'msgpack_events_scan', 'pptx_extract_text', 'rtf_extract_text', 'seekable_sink_roundtrip', 'sketch_hll_tokens', 'sketch_intersect_distinct', 'wat_extract_links', 'xlsx_events_roundtrip']
+MATRIX_OVERFLOW = ['dedup_ngram_jaccard', 'dedup_semantic', 'dedup_semantic_twolevel', 'dedup_simhash', 'dedup_survivors', 'knn_join_recall', 'knn_join_topk', 'knn_label_accuracy', 'minhash_signature', 'quality_classifier_confusion', 'quality_classifier_weights', 'simhash_fingerprint', 'streaming_ann_ingest', 'streaming_dedup_ingest', 'streaming_dedup_ingest_epochs', 'streaming_ivfpq_ingest', 'wikidump_extract_pages', 'multimodal_adpcm_decode', 'multimodal_audio_decode', 'multimodal_audio_features', 'multimodal_avif_decode', 'multimodal_features', 'multimodal_flac_decode', 'multimodal_frame_sample', 'multimodal_g711_decode', 'multimodal_gif_decode', 'multimodal_gif_frames', 'multimodal_heic_decode', 'multimodal_image_decode', 'multimodal_jpeg420_decode', 'multimodal_jpeg_coeffs', 'multimodal_jpeg_decode', 'multimodal_jpeg_progressive', 'multimodal_jpeg_progressive_decode', 'multimodal_payload_stats', 'multimodal_png_decode', 'multimodal_png_interlaced', 'multimodal_png_palette', 'multimodal_resize', 'multimodal_tiff_decode', 'multimodal_webp_decode', 'pdf_extract_text', 'pdf_filters_extract_text', 'pdf_objstm_extract_strings', 'pdf_objstm_extract_text', 'pdf_tounicode_extract_text', 'training_corpus_summary', 'training_corpus_v2', 'webdataset_scan', 'wikidump_nowiki_plain_text', 'wikidump_plain_text', 'condorcet_round1', 'condorcet_wins', 'dataset_split_counts', 'epub_extract_text', 'mbox_extract_emails', 'odt_extract_text', 'stratified_sample_counts', 'streaming_wet_ingest', 'tfidf_top_terms', 'token_stats', 'token_stats_bpe', 'training_corpus_wire', 'vocab_coverage', 'warc_content_encoded_responses', 'warc_extract_responses', 'warc_gz_extract_responses', 'warc_zst_extract_responses', 'wet_extract_conversions', 'wet_zst_extract_conversions', 'zip_archive_scan', 'arrow_events_roundtrip', 'bson_events_scan', 'cbor_events_scan', 'doc_length_histogram', 'docx_extract_text', 'jsonl_bgzf_scan', 'jsonl_xz_blocks_scan', 'msgpack_events_scan', 'pptx_extract_text', 'rtf_extract_text', 'seekable_sink_roundtrip', 'sketch_hll_tokens', 'sketch_intersect_distinct', 'streaming_tfrecord_ingest', 'wat_extract_links', 'xlsx_events_roundtrip']

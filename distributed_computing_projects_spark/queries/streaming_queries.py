@@ -23,6 +23,7 @@ from contextlib import contextmanager
 
 from pyspark.sql import functions as F
 
+from distributed_computing_projects_spark.operators.spread import local_frame
 from distributed_computing_projects_spark.queries import query
 from distributed_computing_projects_spark.streaming.windows import (
     EVENT_CATEGORIES,
@@ -338,9 +339,8 @@ def _event_categories_values_sql() -> str:
 )
 def q_streaming_enriched_category_totals(spark, sf_dir):
     stream = read_events_stream(spark, sf_dir)
-    dim = spark.createDataFrame(
-        EVENT_CATEGORIES, "event_type string, category string"
-    )
+    dim = local_frame(
+        spark, EVENT_CATEGORIES, "event_type string, category string")
     agg = (
         enrich_with_static(stream, dim)
         .groupBy("category")
@@ -1215,6 +1215,8 @@ _ARROW_EVENTS_DDL = ("event_id bigint, user_id bigint, "
         "values).",
 )
 def q_streaming_tfrecord_ingest(spark, sf_dir):
+    import shutil
+
     from pyspark.sql import functions as SF
 
     from distributed_computing_projects_spark.queries.ext_pipeline import (
@@ -1228,6 +1230,10 @@ def q_streaming_tfrecord_ingest(spark, sf_dir):
                                             "stream_tfrecord")
     store = os.path.join(work, "records")
     ckpt = os.path.join(work, "ckpt")
+    # the landing may be a reused one: start the sink afresh, or the
+    # stream resumes from the last call's checkpoint and reads nothing
+    for d in (store, ckpt):
+        shutil.rmtree(d, ignore_errors=True)
 
     stream = (
         spark.readStream.format("binaryFile")

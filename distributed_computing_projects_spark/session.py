@@ -27,6 +27,16 @@ Spark's scheduler. Every knob here is chosen for the 100 TB target:
   ``pyspark.zip`` and the Spark jar's central directories (measured
   0.18 worker CPU-s per task on Python 3.11). Inert on Python >= 3.13,
   which no longer re-reads there.
+- Spark's worker daemon imports that module before its first fork, and
+  there it preloads pyarrow, pandas and the Arrow row stage, then
+  freezes its GC: every worker forks with them imported and shares
+  their pages, and the full collection a worker runs after each task
+  skips them. Driver-side frames are built through Arrow
+  (``operators/spread.local_frame``, a ``LocalTableScan``), so no
+  pickled ``PythonRDD`` stage starts a second daemon and pool.
+- Parquet columns resolve by field id where the read schema carries
+  ``parquet.field.id`` (only iceberg's does) and by name elsewhere, so
+  an iceberg read changes no session conf.
 """
 
 from __future__ import annotations
@@ -107,6 +117,9 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "32g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.parquet.filterPushdown", "true")
+        # iceberg's read schemas carry parquet.field.id, resolved by id;
+        # every other read schema has none and still resolves by name
+        .config("spark.sql.parquet.fieldId.read.enabled", "true")
         .config("spark.python.worker.module", "pyspark_worker_entry")
         # bucketed tables (catalog.put_bucketed) need a warehouse; keep
         # it out of the repo tree

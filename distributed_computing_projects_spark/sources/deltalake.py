@@ -88,6 +88,8 @@ import urllib.parse
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from distributed_computing_projects_spark.operators.spread import local_frame
+
 _COMMIT_RE = re.compile(r"^(\d{20})\.json$")
 _CKPT_RE = re.compile(
     r"^(\d{20})\.checkpoint(?:\.\d{10}\.\d{10})?\.parquet$")
@@ -408,7 +410,7 @@ def read_delta(spark: SparkSession, table_path: str,
     order = [f.name for f in full.fields]
 
     if not files:
-        return spark.createDataFrame([], full).select(*order)
+        return local_frame(spark, [], full).select(*order)
 
     paths = [p for p, _pv in files]
     path_set = set(paths)
@@ -447,8 +449,8 @@ def read_delta(spark: SparkSession, table_path: str,
         dead = [(os.path.basename(p), int(i))
                 for p, desc in sorted(dv_map.items())
                 for i in DVC.resolve_dv(desc, table_path)]
-        dead_df = spark.createDataFrame(
-            dead, "`_delta_file` string, `_dv_row` bigint")
+        dead_df = local_frame(
+            spark, dead, "`_delta_file` string, `_dv_row` bigint")
         df = (df.withColumn("_dv_row", F.col("_metadata.row_index"))
               .join(F.broadcast(dead_df),
                     ["_delta_file", "_dv_row"], "left_anti")
@@ -469,7 +471,7 @@ def read_delta(spark: SparkSession, table_path: str,
         map_ddl = ", ".join(
             ["`_delta_file` string"]
             + [f"`_pv_{c}` string" for c in part_cols])
-        map_df = spark.createDataFrame(rows, map_ddl)
+        map_df = local_frame(spark, rows, map_ddl)
         joined = df.join(F.broadcast(map_df), "_delta_file", "left")
         for c in part_cols:
             joined = joined.withColumn(
@@ -763,7 +765,7 @@ def delete_where(spark: SparkSession, table_path: str,
             ["`_delta_file` string"]
             + [f"`_pv_{c}` string" for c in part_cols])
         df = df.join(F.broadcast(
-            spark.createDataFrame(rows, map_ddl)), "_delta_file",
+            local_frame(spark, rows, map_ddl)), "_delta_file",
             "left")
         for c in part_cols:
             df = df.withColumn(
@@ -902,7 +904,7 @@ def read_delta_changes(spark: SparkSession, table_path: str,
          for f in full.fields if f.name not in part_cols])
     order = [f.name for f in full.fields]
     if not added:
-        return spark.createDataFrame([], full).select(*order)
+        return local_frame(spark, [], full).select(*order)
     files = sorted(
         (os.path.join(table_path, rel), pv)
         for rel, pv in added.items())
@@ -933,7 +935,7 @@ def read_delta_changes(spark: SparkSession, table_path: str,
         df.withColumn(
             "_delta_file",
             F.element_at(F.split(F.input_file_name(), "/"), -1))
-        .join(F.broadcast(spark.createDataFrame(rows, map_ddl)),
+        .join(F.broadcast(local_frame(spark, rows, map_ddl)),
               "_delta_file", "left"))
     for c in part_cols:
         joined = joined.withColumn(
@@ -998,8 +1000,8 @@ def optimize(spark: SparkSession, table_path: str,
                     for p in paths if p in snap.dvs
                     for i in DVC.resolve_dv(snap.dvs[p],
                                             table_path)]
-            dead_df = spark.createDataFrame(
-                dead, "`_delta_file` string, `_dv_row` bigint")
+            dead_df = local_frame(
+                spark, dead, "`_delta_file` string, `_dv_row` bigint")
             g = (g.withColumn(
                 "_delta_file",
                 F.element_at(F.split(F.input_file_name(), "/"), -1))

@@ -53,6 +53,8 @@ import re
 
 from pyspark.sql import DataFrame, SparkSession
 
+from distributed_computing_projects_spark.operators.spread import local_frame
+
 _COMPLETED_RE = re.compile(r"^(\d+)\.(commit|replacecommit)$")
 
 
@@ -145,7 +147,7 @@ def read_hudi(spark: SparkSession, table_path: str, ddl: str,
     schema = StructType.fromDDL(ddl)
     order = [f.name for f in schema.fields]
     if not files:
-        return spark.createDataFrame([], schema).select(*order)
+        return local_frame(spark, [], schema).select(*order)
     return spark.read.schema(schema).parquet(*files).select(*order)
 
 

@@ -80,7 +80,9 @@ import struct
 
 from pyspark.sql import DataFrame, SparkSession
 
-from distributed_computing_projects_spark.operators.spread import flat_map_rows
+from distributed_computing_projects_spark.operators.spread import (
+    flat_map_rows, local_frame,
+)
 from distributed_computing_projects_spark.sources import avro as AV
 from distributed_computing_projects_spark.sources.hudi import (
     _read_properties,
@@ -415,16 +417,11 @@ def _log_records_df(spark, log_files: list[str],
                    bool(rec.get(DELETED_FIELD, False)))
 
     # dedup (several deltacommits reference the same log file — a
-    # double read would double-apply its records), then slice the
-    # path list at creation: parallelize() distributes WITHOUT a
-    # shuffle exchange, unlike repartition()
+    # double read would double-apply its records); a LocalTableScan
+    # slices its rows over min(rows, defaultParallelism) tasks, so the
+    # decode spreads WITHOUT a shuffle exchange
     uniq = sorted(set(log_files))
-    n_slices = max(1, min(
-        len(uniq), spark.sparkContext.defaultParallelism))
-    paths_df = spark.createDataFrame(
-        spark.sparkContext.parallelize([(p,) for p in uniq],
-                                       n_slices),
-        "`path` string")
+    paths_df = local_frame(spark, [(p,) for p in uniq], "`path` string")
     return flat_map_rows(paths_df, decode, out_ddl)
 
 
@@ -439,7 +436,7 @@ def _merge(spark, schema, base_files: list[str],
     order = [f.name for f in schema.fields]
     base = (spark.read.schema(schema).parquet(*base_files)
             if base_files
-            else spark.createDataFrame([], schema))
+            else local_frame(spark, [], schema))
     base = (base
             .withColumn("_mor_instant", F.lit(""))
             .withColumn("_mor_seq", F.lit(-1).cast("bigint"))

@@ -73,6 +73,7 @@ import urllib.parse
 
 from pyspark.sql import DataFrame, SparkSession
 
+from distributed_computing_projects_spark.operators.spread import local_frame
 from distributed_computing_projects_spark.sources import avro as AV
 
 _META_RE = re.compile(r"^v?(\d+)(?:-[0-9a-fA-F-]+)?\.metadata\.json$")
@@ -397,7 +398,7 @@ def read_iceberg(spark: SparkSession, table_path: str,
     name_schema = _spark_schema(snap.schema, with_ids=False)
     order = [f.name for f in id_schema.fields]
     if not files:
-        return spark.createDataFrame([], name_schema).select(*order)
+        return local_frame(spark, [], name_schema).select(*order)
     paths = [p for p, _pv in files]
     pq = [p for p in paths
           if snap.file_formats.get(p, "PARQUET") == "PARQUET"]
@@ -418,12 +419,7 @@ def read_iceberg(spark: SparkSession, table_path: str,
             f"resolution would read the wrong column — refusing")
     df = None
     if pq:
-        # field-ID resolution (spark.sql.parquet.fieldId.read) is
-        # the spec's rule: data files MUST carry ids, renames are
-        # metadata-only, and an id-less non-conformant file errors
-        # loudly rather than matching names silently
-        spark.conf.set("spark.sql.parquet.fieldId.read.enabled",
-                       "true")
+        _require_field_ids(spark)
         df = spark.read.schema(id_schema).parquet(*pq)
         if snap.deletes:
             df = _apply_position_deletes(spark, df, snap, pq)
@@ -433,6 +429,20 @@ def read_iceberg(spark: SparkSession, table_path: str,
         odf = spark.read.schema(name_schema).orc(*orc)
         df = odf if df is None else df.unionByName(odf)
     return df.select(*order)
+
+
+def _require_field_ids(spark: SparkSession) -> None:
+    """Field-ID resolution (``spark.sql.parquet.fieldId.read``) is the
+    spec's rule: data files MUST carry ids, renames are metadata-only,
+    and an id-less non-conformant file errors loudly rather than
+    matching names silently. ``get_spark`` sessions carry it (it only
+    acts on read schemas with ``parquet.field.id`` metadata, which only
+    this reader builds), so this sets nothing there; a session built
+    elsewhere is switched on, since name resolution would read a
+    renamed column wrong."""
+    key = "spark.sql.parquet.fieldId.read.enabled"
+    if spark.conf.get(key) != "true":
+        spark.conf.set(key, "true")
 
 
 def _apply_position_deletes(spark: SparkSession, df: DataFrame,
@@ -454,7 +464,8 @@ def _apply_position_deletes(spark: SparkSession, df: DataFrame,
         raise ValueError(
             "position deletes over colliding data-file basenames; "
             "refusing")
-    seq_map = spark.createDataFrame(
+    seq_map = local_frame(
+        spark,
         [(os.path.basename(p), int(snap.file_seqs.get(p, 0)))
          for p in paths],
         "`_ice_file` string, `_data_seq` bigint")
@@ -656,7 +667,7 @@ def delete_where(spark: SparkSession, table_path: str,
     snap = resolve_snapshot(table_path)
     if not snap.files:
         raise ValueError("delete_where on an empty table")
-    spark.conf.set("spark.sql.parquet.fieldId.read.enabled", "true")
+    _require_field_ids(spark)
     spark_schema = _spark_schema(snap.schema, with_ids=True)
     paths = [p for p, _pv in snap.files]
     basenames = [os.path.basename(p) for p in paths]
@@ -687,12 +698,8 @@ def delete_where(spark: SparkSession, table_path: str,
 
     stage = os.path.join(table_path,
                          f"_staging-{uuidmod.uuid4().hex}")
-    # repartition(1), not coalesce(1): coalesce over a parallelized
-    # local relation serializes one Python-worker round trip per
-    # slice into a single task (~4 s at local[32]; see
-    # deltalake.write_checkpoint)
-    (spark.createDataFrame(del_rows, "`file_path` string, "
-                                     "`pos` bigint")
+    # one part file
+    (local_frame(spark, del_rows, "`file_path` string, `pos` bigint")
      .repartition(1).write.mode("overwrite").parquet(stage))
     part = next(n for n in sorted(os.listdir(stage))
                 if n.startswith("part-") and n.endswith(".parquet"))

@@ -58,7 +58,9 @@ import struct
 
 from pyspark.sql import DataFrame, SparkSession
 
-from distributed_computing_projects_spark.operators.spread import flat_map_rows
+from distributed_computing_projects_spark.operators.spread import (
+    flat_map_rows, local_frame,
+)
 from distributed_computing_projects_spark.sources.warc import zstd_backend
 
 SEEKABLE_MAGIC = 0x8F92EAB1
@@ -391,10 +393,11 @@ def lines_from_splits(spark: SparkSession, splits: list,
     )
 
     if not splits:
-        return spark.createDataFrame([], "value string")
+        return local_frame(spark, [], "value string")
     keys = [c.split()[0] for c in _SPLIT_COLUMNS.split(", ")]
-    sdf = spark.createDataFrame(
-        [tuple(s.get(k) for k in keys) for s in splits], _SPLIT_COLUMNS,
+    sdf = local_frame(
+        spark, [tuple(s.get(k) for k in keys) for s in splits],
+        _SPLIT_COLUMNS,
     ).repartition(len(splits))
 
     def lines(*row):

@@ -1,5 +1,6 @@
 """PySpark worker entry: ``pyspark.worker.main`` behind a stat-guarded
-zipimport directory cache.
+zipimport directory cache, forked from a daemon that preloads what every
+row stage imports.
 
 Every Python UDF task runs ``importlib.invalidate_caches()``
 (``pyspark.worker_util.setup_spark_files``). Before Python 3.13,
@@ -12,6 +13,19 @@ time that importer read it, so a zip rewritten or replaced mid-session
 is still seen. Python 3.13 only drops the cache entry there, so nothing is
 installed.
 
+Spark's daemon (``pyspark.daemon``) imports this module once, before
+it forks its first worker. There, and only there, the module preloads:
+it imports :data:`PRELOAD` (pyarrow, pandas and the Arrow row stage,
+which every worker would otherwise import for itself), installs the
+guard and stamps every zipimporter's stat key with one
+``importlib.invalidate_caches()``, then calls ``gc.freeze()``. Workers
+then share those pages with the daemon instead of holding private
+copies, and the full collection a worker runs after every task
+(``pyspark.daemon``) no longer walks the imported modules' objects,
+whose reference-count writes would also unshare the pages. Imported
+anywhere else (the driver, tests, the ``spark.python.use.daemon=false``
+worker) the module installs and imports nothing.
+
 ``session.get_spark`` names this module as ``spark.python.worker.module``.
 Spark's daemon ignores a worker module whose name does not start with
 ``pyspark``, hence the name. It sits beside the package, so any worker
@@ -20,12 +34,27 @@ that can import the package can import it.
 
 from __future__ import annotations
 
+import gc
+import importlib
 import os
 import runpy
 import sys
 import zipimport
 
 from pyspark import worker
+
+# What every Python row stage imports (operators/spread.flat_map_rows
+# and the serializers Spark's Arrow UDF runners use).
+PRELOAD = (
+    "pyarrow",
+    "pandas",
+    "pyspark.sql.pandas.serializers",
+    "pyspark.sql.pandas.types",
+    "distributed_computing_projects_spark.operators.spread",
+)
+
+# True only in a daemon that ran the preload, and in its forked workers.
+preloaded = False
 
 _reread = zipimport.zipimporter.invalidate_caches
 
@@ -49,6 +78,26 @@ def install() -> None:
         zipimport.zipimporter.invalidate_caches = invalidate_caches
 
 
+def _in_daemon() -> bool:
+    """Whether this process is Spark's worker daemon
+    (``python -m pyspark.daemon``)."""
+    spec = sys.modules["__main__"].__spec__
+    return spec is not None and spec.name == "pyspark.daemon"
+
+
+def preload() -> None:
+    """Import :data:`PRELOAD`, install the guard, set every
+    zipimporter's stat key, then freeze the heap. Run once, in the
+    daemon, before its first fork."""
+    global preloaded
+    for name in PRELOAD:
+        importlib.import_module(name)
+    install()
+    importlib.invalidate_caches()
+    preloaded = True
+    gc.freeze()
+
+
 def main(infile, outfile) -> None:
     """The daemon's per-worker entry: ``pyspark.worker.main``."""
     install()
@@ -60,3 +109,5 @@ if __name__ == "__main__":
     install()
     del sys.modules["pyspark.worker"]  # run it afresh, as Spark would
     runpy.run_module("pyspark.worker", run_name="__main__", alter_sys=True)
+elif _in_daemon():
+    preload()

@@ -177,6 +177,29 @@ def test_neardup_clusters_action_budget(spark, monkeypatch):
     assert jobs <= 55, f"action budget blown: {jobs} jobs"
 
 
+def test_neardup_clusters_driver_path_job_budget(spark):
+    """The driver path reads the checkpointed edge set with ONE bounded
+    collect (``limit(MAX_DRIVER_EDGES + 1)``), not a count followed by
+    a second collect, and builds its output frame without a Python
+    stage. The call plus the output's collect ran 5 jobs on this
+    17-edge fixture with a count, a second collect and a pickled local
+    frame, and runs 2 with the bounded collect; 3 sits between."""
+    sc = spark.sparkContext
+    group = "neardup-driver-budget"
+    pairs = spark.createDataFrame(
+        [(i, i + 1) for i in range(16)] + [(100, 101)],
+        "id_a long, id_b long",
+    )
+    sc.setJobGroup(group, "driver path job budget")
+    try:
+        rows = D.neardup_clusters(pairs).collect()
+    finally:
+        sc.setJobGroup(None, None)
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert len(rows) == 19
+    assert jobs <= 3, f"driver path job budget blown: {jobs} jobs"
+
+
 def test_neardup_clusters_raises_when_not_converged(spark, monkeypatch):
     pairs = spark.createDataFrame([(i, i + 1) for i in range(20)],
                                   "id_a long, id_b long")

@@ -697,3 +697,24 @@ def test_write_iceberg_overwrite_and_gates(spark, tmp_path):
     with pytest.raises(ValueError, match="string identity"):
         IC.write_iceberg(df2, str(tmp_path / "np"),
                          partition_by=["k"])
+
+
+def test_iceberg_scan_leaves_the_session_conf(spark, sf_dir):
+    """An iceberg read changes no session conf: a fresh session built
+    from ``get_spark``'s conf already resolves parquet by field id, so
+    a memoized ``load_table`` (keyed on every parquet conf) after the
+    scan still starts no job."""
+    from distributed_computing_projects_spark.queries import load_registry
+    from distributed_computing_projects_spark.sources import registry as R
+
+    s = spark.newSession()
+    sc = s.sparkContext
+    R.load_table(s, sf_dir, "orders")
+    load_registry()["iceberg_table_scan"].fn(s, sf_dir).collect()
+    group = "iceberg-conf-leak"
+    sc.setJobGroup(group, group)
+    try:
+        R.load_table(s, sf_dir, "orders")
+    finally:
+        sc.setJobGroup(None, None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 0

@@ -176,3 +176,93 @@ def test_cli_tfrecord_scan(spark, tmp_path, capsys):
     assert rc == 0
     out = capsys.readouterr().out
     assert "n2" in out
+
+
+def _jobs(spark, group, fn):
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setJobGroup(None, None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _rows(df):
+    return sorted(map(tuple, df.collect()))
+
+
+def _events_dir(sf_dir, tmp_path, name):
+    """A fixture dir holding a copy of ``events.parquet`` (its basename
+    names the query's scratch dir, so each test gets its own)."""
+    import shutil
+
+    d = tmp_path / name
+    d.mkdir()
+    shutil.copy(f"{sf_dir}/events.parquet", d / "events.parquet")
+    return str(d)
+
+
+def test_tfrecord_landing_is_staged_once(spark, sf_dir, tmp_path):
+    from distributed_computing_projects_spark.queries import load_registry
+
+    fn = load_registry()["tfrecord_scan"].fn
+    d = _events_dir(sf_dir, tmp_path, "tfr_once")
+    first, staged = _jobs(spark, "tfr-once-1", lambda: fn(spark, d))
+    rows = _rows(first)
+    again, reused = _jobs(spark, "tfr-once-2", lambda: fn(spark, d))
+    assert staged > 0 and reused == 0
+    assert rows and _rows(again) == rows
+
+
+def test_tfrecord_landing_restages_on_change(spark, sf_dir, tmp_path):
+    import os
+    import shutil
+
+    from distributed_computing_projects_spark.queries import (
+        ext_pipeline as EP,
+        load_registry,
+    )
+
+    fn = load_registry()["tfrecord_scan"].fn
+    d = _events_dir(sf_dir, tmp_path, "tfr_change")
+    rows = _rows(fn(spark, d))
+    # a rewritten events file (new inode and mtime, same bytes)
+    events = os.path.join(d, "events.parquet")
+    shutil.copy(events, events + ".new")
+    os.replace(events + ".new", events)
+    df, jobs = _jobs(spark, "tfr-change-1", lambda: fn(spark, d))
+    assert jobs > 0 and _rows(df) == rows
+    # a landing shard deleted behind the memo's back
+    landing = os.path.join(EP._session_scratch(spark, "tfrecord", d),
+                           "landing")
+    os.remove(os.path.join(landing, "part-0.tfrecord"))
+    df, jobs = _jobs(spark, "tfr-change-2", lambda: fn(spark, d))
+    assert jobs > 0 and _rows(df) == rows
+    assert os.path.exists(os.path.join(landing, "part-0.tfrecord"))
+
+
+def test_streaming_tfrecord_twin_repeats(spark, sf_dir, tmp_path):
+    """The streaming twin reuses the staged landing; its sink and
+    checkpoint start afresh per call, so a second call streams the
+    whole landing again (new sink files) instead of resuming from the
+    last call's checkpoint, and returns the same rows."""
+    import os
+
+    from distributed_computing_projects_spark.queries import (
+        ext_pipeline as EP,
+        load_registry,
+    )
+
+    fn = load_registry()["streaming_tfrecord_ingest"].fn
+    d = _events_dir(sf_dir, tmp_path, "tfr_stream")
+    store = os.path.join(EP._session_scratch(spark, "stream_tfrecord", d),
+                         "records")
+
+    def sink_files():
+        return {n for n in os.listdir(store) if n.endswith(".parquet")}
+
+    first = _rows(fn(spark, d))
+    files = sink_files()
+    assert first and _rows(fn(spark, d)) == first
+    assert files and not files & sink_files()

@@ -1,7 +1,9 @@
 """The PySpark worker entry (``pyspark_worker_entry``): its stat-guarded
 ``zipimporter.invalidate_caches`` skips the per-task central-directory
 re-read while an archive is unchanged and still sees a rewritten one,
-and ``get_spark``'s Python workers run with it installed."""
+``get_spark``'s Python workers run with it installed, and they fork
+from a daemon that preloaded the row-stage libraries and froze its
+heap — while importing the module anywhere else preloads nothing."""
 
 from __future__ import annotations
 
@@ -77,6 +79,31 @@ def test_python_workers_run_with_the_guard(spark):
         assert not row.installed
     else:
         assert row.installed and row.kept
+
+
+def test_importing_the_entry_preloads_nothing():
+    assert not entry.preloaded
+    assert zipimport.zipimporter.invalidate_caches is not entry.invalidate_caches
+
+
+def test_workers_fork_from_a_preloaded_frozen_daemon(spark):
+    def probe(batches):
+        import gc
+
+        import pandas as pd
+
+        import pyspark_worker_entry
+
+        for _ in batches:
+            pass
+        yield pd.DataFrame({"frozen": [gc.get_freeze_count()],
+                            "preloaded": [pyspark_worker_entry.preloaded]})
+
+    [row] = (spark.range(1, numPartitions=1)
+             .mapInPandas(probe, "frozen bigint, preloaded boolean")
+             .collect())
+    assert row.preloaded
+    assert row.frozen > 0
 
 
 def test_worker_entry_runs_as_a_simple_worker():
