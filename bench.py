@@ -36,6 +36,11 @@ and committed, so nothing is lost and the driver line always parses.
 Each query is forced with a count() (no driver-side collect of result
 data; the work happens on executors). A warmup pass on the smallest SF
 absorbs JVM/codegen startup so numbers reflect steady-state throughput.
+
+After the timed reps, one more UNTIMED rep per headliner runs under
+`profile.run`; the detail file's "profile" block holds its layer split
+(pre-action, jobs/stages/tasks, executor run/CPU/GC, shuffle and spill,
+Python time, parallel efficiency), numbers only.
 """
 
 from __future__ import annotations
@@ -48,6 +53,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from distributed_computing_projects_spark import profile
 from distributed_computing_projects_spark.queries import load_registry
 from distributed_computing_projects_spark.session import get_spark
 
@@ -135,6 +141,12 @@ def main() -> int:
             spec = headliners[name]
             reps[name].append(_timed(lambda: spec.fn(spark, sf_dir).count()))
 
+    profiles = {}
+    for name in names:
+        rec = profile.run(spark, headliners[name].fn, sf_dir)
+        profiles[name] = {k: round(v, 4) for k, v in rec.items()
+                          if isinstance(v, (int, float))}
+
     timings = {n: round(min(ts), 3) for n, ts in reps.items()}
     spread_pct = {
         n: round(100.0 * (max(ts) - min(ts)) / min(ts), 1) for n, ts in reps.items()
@@ -153,6 +165,7 @@ def main() -> int:
         "reps": {n: [round(t, 3) for t in ts] for n, ts in reps.items()},
         "spread_pct": spread_pct,
         "canary_times": [round(t, 3) for t in canary_times],
+        "profile": profiles,
     }
     try:
         with open(detail_path, "w") as f:

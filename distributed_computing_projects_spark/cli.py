@@ -7,6 +7,7 @@ submission, plus `query` for the engine's registered query catalog.
     python -m distributed_computing_projects_spark ls mytable
     python -m distributed_computing_projects_spark maple mymod:tokenize docs/
     python -m distributed_computing_projects_spark query q1_pricing_summary
+    python -m distributed_computing_projects_spark profile q1_pricing_summary
 
 Differences from the reference CLI, on purpose:
 - no membership commands (join/leave/kill, main.go:146-178) — cluster
@@ -14,7 +15,10 @@ Differences from the reference CLI, on purpose:
 - `maple`/`juice` take a ``module:function`` Python callable (native
   tier) or ``--exec`` with a shell command (exec-compat tier,
   RDD.pipe) instead of a compiled Go binary;
-- `query` is new: the reference has no query catalog.
+- `query` is new: the reference has no query catalog;
+- `profile` is new: where the reference reports one elapsed time per
+  job (mp3/src/maplejuice.go:204-205), it prints one JSON record that
+  splits a query's time by layer (``profile.run``).
 
 Output goes line-by-line through ``toLocalIterator`` — the driver
 never materializes a whole result (grep over 100 TB of logs streams).
@@ -96,6 +100,11 @@ def build_parser() -> argparse.ArgumentParser:
     q.add_argument("--sf-dir", default="/root/testdata/sf0.01")
     q.add_argument("--explain", action="store_true",
                    help="print the formatted physical plan instead of rows")
+
+    pf = sub.add_parser("profile", help="warm, then profile a registered "
+                        "query; prints its layer split as JSON")
+    pf.add_argument("name", help="query name")
+    pf.add_argument("--sf-dir", default="/root/testdata/sf0.01")
 
     bw = sub.add_parser(
         "bandstore-write",
@@ -747,7 +756,7 @@ def main(argv: list[str] | None = None, spark: SparkSession | None = None) -> in
             _emit(juice(kv, _load_callable(args.fn),
                         num_juices=args.num_juices,
                         partition=args.partition))
-        elif args.cmd == "query":
+        elif args.cmd in ("query", "profile"):
             from distributed_computing_projects_spark.queries import (
                 load_registry,
             )
@@ -757,6 +766,15 @@ def main(argv: list[str] | None = None, spark: SparkSession | None = None) -> in
                 raise SystemExit(
                     f"unknown query {args.name!r}; run `query` to list"
                 )
+            if args.cmd == "profile":
+                import json
+
+                from distributed_computing_projects_spark import profile
+
+                profile.run(spark, reg[args.name].fn, args.sf_dir)  # warm
+                print(json.dumps(profile.run(spark, reg[args.name].fn,
+                                             args.sf_dir), indent=1))
+                return 0
             df = reg[args.name].fn(spark, args.sf_dir)
             if args.explain:
                 from distributed_computing_projects_spark.plans.inspect import (

@@ -145,7 +145,8 @@ def _events_roundtrip_facts(back):
 # events subset, and staging them through Spark write jobs cost
 # 0.3-0.5 s of fixed job latency PER FILE SET — the dominant term of
 # every lakehouse bench entry after the coalesce(1) fix, none of it
-# work a real table's reader pays (tools/lakehouse_attribution.py).
+# work a real table's reader pays (measured in round 16 with a
+# per-stage attribution script, since replaced by `profile`).
 # pyarrow writes the same parquet driver-side in milliseconds, and
 # is ALSO the better differential fixture: the engine's Spark-native
 # read paths now scan parquet produced by an independent writer

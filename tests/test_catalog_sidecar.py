@@ -12,6 +12,7 @@ import os
 import warnings
 
 from distributed_computing_projects_spark.catalog import Catalog
+from distributed_computing_projects_spark.profile import job_group
 from distributed_computing_projects_spark.sources import load_table
 
 
@@ -34,15 +35,10 @@ def test_get_starts_no_job(spark, sf_dir, tmp_path):
     cat = Catalog(spark, str(tmp_path / "cat"))
     li = _lineitem(spark, sf_dir)
     names = _put_all(cat, li)
-    sc = spark.sparkContext
     for name in names:
-        group = f"catalog-get-{name}"
-        sc.setJobGroup(group, group)
-        try:
+        with job_group(spark) as jobs:
             got = cat.get(name)
-        finally:
-            sc.setJobGroup(None, None)
-        assert sc.statusTracker().getJobIdsForGroup(group) == [], name
+        assert jobs() == [], name
         assert sorted(got.columns) == sorted(li.columns)
         assert got.count() == li.count()
 

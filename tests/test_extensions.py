@@ -16,6 +16,7 @@ from distributed_computing_projects_spark.operators import (
     similarity as S,
     textstats as X,
 )
+from distributed_computing_projects_spark.profile import job_group
 
 
 def _docs(spark, texts):
@@ -156,19 +157,14 @@ def test_neardup_clusters_action_budget(spark, monkeypatch):
     EVERY round — a regression back to either trips this budget. Jobs
     are counted via a dedicated job group (statusTracker survives
     across tests; a fresh group isolates us)."""
-    sc = spark.sparkContext
-    group = "neardup-action-budget"
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(16)] + [(100, 101)],
         "id_a long, id_b long",
     )
     monkeypatch.setattr(D, "MAX_DRIVER_EDGES", 0)  # pin the STAR path
-    sc.setJobGroup(group, "convergence action budget")
-    try:
+    with job_group(spark) as group_jobs:
         D.neardup_clusters(pairs, max_iter=10).collect()
-    finally:
-        sc.setJobGroup(None, None)
-    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    jobs = len(group_jobs())
     # AQE materializes several jobs per action, so the budget is
     # measured, not derived: this 17-edge fixture runs ~47 jobs
     # end-to-end with the fused one-action-per-round check, vs ~68 for
@@ -184,18 +180,13 @@ def test_neardup_clusters_driver_path_job_budget(spark):
     stage. The call plus the output's collect ran 5 jobs on this
     17-edge fixture with a count, a second collect and a pickled local
     frame, and runs 2 with the bounded collect; 3 sits between."""
-    sc = spark.sparkContext
-    group = "neardup-driver-budget"
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(16)] + [(100, 101)],
         "id_a long, id_b long",
     )
-    sc.setJobGroup(group, "driver path job budget")
-    try:
+    with job_group(spark) as group_jobs:
         rows = D.neardup_clusters(pairs).collect()
-    finally:
-        sc.setJobGroup(None, None)
-    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    jobs = len(group_jobs())
     assert len(rows) == 19
     assert jobs <= 3, f"driver path job budget blown: {jobs} jobs"
 

@@ -704,17 +704,13 @@ def test_iceberg_scan_leaves_the_session_conf(spark, sf_dir):
     from ``get_spark``'s conf already resolves parquet by field id, so
     a memoized ``load_table`` (keyed on every parquet conf) after the
     scan still starts no job."""
+    from distributed_computing_projects_spark.profile import job_group
     from distributed_computing_projects_spark.queries import load_registry
     from distributed_computing_projects_spark.sources import registry as R
 
     s = spark.newSession()
-    sc = s.sparkContext
     R.load_table(s, sf_dir, "orders")
     load_registry()["iceberg_table_scan"].fn(s, sf_dir).collect()
-    group = "iceberg-conf-leak"
-    sc.setJobGroup(group, group)
-    try:
+    with job_group(s) as jobs:
         R.load_table(s, sf_dir, "orders")
-    finally:
-        sc.setJobGroup(None, None)
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 0
+    assert len(jobs()) == 0

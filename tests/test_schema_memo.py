@@ -12,6 +12,7 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
+from distributed_computing_projects_spark.profile import job_group
 from distributed_computing_projects_spark.sources import registry as R
 
 
@@ -21,16 +22,6 @@ def memo(monkeypatch):
     schemas: dict = {}
     monkeypatch.setattr(R, "_SCHEMAS", schemas)
     return schemas
-
-
-def _jobs(spark, group, fn):
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc.setJobGroup(None, None)
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def _rows(df):
@@ -50,11 +41,11 @@ def test_memoized_load_matches_inference(spark, sf_dir, memo, name):
 def test_second_load_starts_no_job(spark, sf_dir, memo, tmp_path):
     shutil.copy(f"{sf_dir}/region.parquet", tmp_path / "region.parquet")
     d = str(tmp_path)
-    _, first = _jobs(spark, "schema-memo-first",
-                     lambda: R.load_table(spark, d, "region"))
-    df, second = _jobs(spark, "schema-memo-second",
-                       lambda: R.load_table(spark, d, "region"))
-    assert (first, second) == (1, 0)
+    with job_group(spark) as first:
+        R.load_table(spark, d, "region")
+    with job_group(spark) as second:
+        df = R.load_table(spark, d, "region")
+    assert (len(first()), len(second())) == (1, 0)
     assert df.count() == R.load_table(spark, sf_dir, "region").count()
 
 

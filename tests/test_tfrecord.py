@@ -10,6 +10,7 @@ import struct
 import pytest
 
 import distributed_computing_projects_spark.sources.tfrecord as TF
+from distributed_computing_projects_spark.profile import job_group
 from distributed_computing_projects_spark.sources.tfrecord import (
     build_example,
     build_tfrecord,
@@ -178,16 +179,6 @@ def test_cli_tfrecord_scan(spark, tmp_path, capsys):
     assert "n2" in out
 
 
-def _jobs(spark, group, fn):
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc.setJobGroup(None, None)
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def _rows(df):
     return sorted(map(tuple, df.collect()))
 
@@ -208,10 +199,12 @@ def test_tfrecord_landing_is_staged_once(spark, sf_dir, tmp_path):
 
     fn = load_registry()["tfrecord_scan"].fn
     d = _events_dir(sf_dir, tmp_path, "tfr_once")
-    first, staged = _jobs(spark, "tfr-once-1", lambda: fn(spark, d))
+    with job_group(spark) as staged:
+        first = fn(spark, d)
     rows = _rows(first)
-    again, reused = _jobs(spark, "tfr-once-2", lambda: fn(spark, d))
-    assert staged > 0 and reused == 0
+    with job_group(spark) as reused:
+        again = fn(spark, d)
+    assert len(staged()) > 0 and len(reused()) == 0
     assert rows and _rows(again) == rows
 
 
@@ -231,14 +224,16 @@ def test_tfrecord_landing_restages_on_change(spark, sf_dir, tmp_path):
     events = os.path.join(d, "events.parquet")
     shutil.copy(events, events + ".new")
     os.replace(events + ".new", events)
-    df, jobs = _jobs(spark, "tfr-change-1", lambda: fn(spark, d))
-    assert jobs > 0 and _rows(df) == rows
+    with job_group(spark) as jobs:
+        df = fn(spark, d)
+    assert len(jobs()) > 0 and _rows(df) == rows
     # a landing shard deleted behind the memo's back
     landing = os.path.join(EP._session_scratch(spark, "tfrecord", d),
                            "landing")
     os.remove(os.path.join(landing, "part-0.tfrecord"))
-    df, jobs = _jobs(spark, "tfr-change-2", lambda: fn(spark, d))
-    assert jobs > 0 and _rows(df) == rows
+    with job_group(spark) as jobs:
+        df = fn(spark, d)
+    assert len(jobs()) > 0 and _rows(df) == rows
     assert os.path.exists(os.path.join(landing, "part-0.tfrecord"))
 
 

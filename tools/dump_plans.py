@@ -1,6 +1,8 @@
-"""Write PLANS.md: the formatted physical plan of every headline query
-at the bench SF, with the scale-relevant plan facts (pushed filters,
-read schemas, join strategies, top-k operators) summarized per query.
+"""Write PLANS.md: the final (post-execution) physical plan of every
+headline query at the bench SF, as `profile.run` reads it from the SQL
+status store after the action, with the scale-relevant plan facts
+(pushed filters, read schemas, join strategies, top-k operators,
+exchanges and AQE's coalesced shuffle reads) summarized per query.
 
 Usage: python tools/dump_plans.py [sf_dir] [out_md]
 """
@@ -13,7 +15,7 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from distributed_computing_projects_spark.plans.inspect import physical_plan
+from distributed_computing_projects_spark import profile
 from distributed_computing_projects_spark.queries import load_registry
 from distributed_computing_projects_spark.session import get_spark
 
@@ -29,7 +31,15 @@ FACTS = [
     # exchange line previously included broadcast exchanges)
     ("Exchange", r"(?<![A-Za-z])Exchange [^\n]*"),
     ("BroadcastExchange", r"BroadcastExchange [^\n]*"),
+    ("AQEShuffleRead", r"AQEShuffleRead [^\n]*"),
 ]
+# facts reported as a count of operators
+COUNTED = {"Exchange": "shuffle exchange(s)",
+           "BroadcastExchange": "broadcast exchange(s)",
+           "AQEShuffleRead": "AQE shuffle read(s)"}
+# AQE prints the plan it started from under the final one; its tree
+# lines would count every exchange twice
+INITIAL_TREE = re.compile(r"(?m)^([ :]*)\+- == Initial Plan ==\n(?:\1 +\S.*\n)*")
 
 
 def main() -> int:
@@ -43,25 +53,25 @@ def main() -> int:
         "# PLANS — physical plans of the headline queries",
         "",
         f"Generated by `tools/dump_plans.py` against `{sf_dir}`. The",
-        "summary lists the plan facts the 100 TB design cares about",
-        "(SURVEY §4.2): filters pushed to the scan, pruned read schemas,",
-        "join strategies, top-k operators, exchange count.",
+        "plans are the final AQE plans each query's action ran (a `noop`",
+        "write), read from the SQL status store. The summary lists the",
+        "plan facts the 100 TB design cares about (SURVEY §4.2): filters",
+        "pushed to the scan, pruned read schemas, join strategies, top-k",
+        "operators, exchange count, and the shuffle reads AQE coalesced.",
         "",
     ]
     for name, spec in sorted(reg.items()):
         if not spec.headline:
             continue
-        plan = physical_plan(spec.fn(spark, sf_dir))
+        plan = profile.run(spark, spec.fn, sf_dir)["final_plan"]
+        final = INITIAL_TREE.sub("", plan)
         lines += [f"## {name}", "", spec.doc, "", "**Plan facts**", ""]
         for label, pat in FACTS:
-            hits = re.findall(pat, plan)
+            hits = re.findall(pat, final)
             if not hits:
                 continue
-            if label == "Exchange":
-                lines.append(f"- {len(hits)} shuffle exchange(s)")
-                continue
-            if label == "BroadcastExchange":
-                lines.append(f"- {len(hits)} broadcast exchange(s)")
+            if label in COUNTED:
+                lines.append(f"- {len(hits)} {COUNTED[label]}")
                 continue
             for h in dict.fromkeys(hits):  # dedupe, keep order
                 lines.append(f"- `{h.strip()[:160]}`")

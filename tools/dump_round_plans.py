@@ -1,7 +1,10 @@
 """Write plans/r<N>/<query>_{before,after}.txt dossiers for an
 optimization round: "after" from the working tree, "before" from a
 named git rev (checked out into a temporary worktree so the current
-tree is untouched).
+tree is untouched). Each dossier is the final AQE plan the query's
+action ran, read by the working tree's `profile.run` (loaded by file
+path, so a "before" rev older than the module is profiled the same
+way).
 
 Usage: python tools/dump_round_plans.py <round> <before_rev> <query ...>
 """
@@ -14,6 +17,7 @@ import sys
 import tempfile
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+PROFILE = os.path.join(REPO, "distributed_computing_projects_spark", "profile.py")
 
 
 def _dump(repo_root: str, queries: list[str], out_dir: str,
@@ -21,15 +25,18 @@ def _dump(repo_root: str, queries: list[str], out_dir: str,
     code = f"""
 import sys
 sys.path.insert(0, {repo_root!r})
+import importlib.util
 from distributed_computing_projects_spark.session import get_spark
-from distributed_computing_projects_spark.plans.inspect import physical_plan
 from distributed_computing_projects_spark.queries import load_registry
+spec = importlib.util.spec_from_file_location("query_profile", {PROFILE!r})
+profile = importlib.util.module_from_spec(spec)
+spec.loader.exec_module(profile)
 spark = get_spark(app_name="dossier", cpus=4, shuffle_partitions=4)
 spark.sparkContext.setLogLevel("ERROR")
 reg = load_registry()
 import os
 for name in {queries!r}:
-    p = physical_plan(reg[name].fn(spark, "/root/testdata/sf0.001"))
+    p = profile.run(spark, reg[name].fn, "/root/testdata/sf0.001")["final_plan"]
     with open(os.path.join({out_dir!r}, name + "_" + {suffix!r} + ".txt"),
               "w") as f:
         f.write(p)

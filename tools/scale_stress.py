@@ -729,7 +729,8 @@ def _write_md(out: dict) -> None:
         "(WARC/PDF are not block-splittable; crawl segments outnumber "
         "executors). The avro_events_roundtrip row — the heaviest in "
         "the table — was ATTRIBUTED in round 14 "
-        "(tools/avro_attribution.py, factor 100, 10M records): ~89% "
+        "(a round-14/15/16 attribution script, since replaced by "
+        "`profile`; factor 100, 10M records): ~89% "
         "of its wall-clock is FIXTURE construction that only this "
         "round-trip harness pays — driver-side json.loads of the "
         "staged shards (157 s) plus the single-threaded pure-Python "
@@ -763,7 +764,8 @@ def _write_md(out: dict) -> None:
         "same split (per-doc MIME builds / staging dominate; the "
         "extraction walks are the linear part). Round 15: "
         "tfrecord_scan's 332.6 s at 100x was ATTRIBUTED the same way "
-        "(tools/tfrecord_attribution.py, 3.33M records): 83.9% is "
+        "(a round-14/15/16 attribution script, since replaced by "
+        "`profile`; 3.33M records): 83.9% is "
         "fixture construction only the harness pays — the driver's "
         "single-threaded Example encode + CRC framing (198.6 s) and "
         "json.loads staging (28.3 s) — while the stage a "
@@ -822,7 +824,8 @@ def _write_md(out: dict) -> None:
         "KB-sized driver work however large the table, and the "
         "scan inherits Spark's parquet parallelism. Round 16 made "
         "the delta/hudi fixture floors a MEASURED split "
-        "(tools/lakehouse_attribution.py at the bench scale "
+        "(a round-14/15/16 attribution script, since replaced by "
+        "`profile`, at the bench scale "
         "sf0.1, local[32]): delta_table_scan = fixture build "
         "~10-17 s (Spark stages + commits + checkpoint the harness "
         "pays each rep; the spread is JVM warm-up on the first "
@@ -841,7 +844,8 @@ def _write_md(out: dict) -> None:
         "while rows grow 50x — both floors are fixture construction "
         "plus --only-session warm-up (the full-matrix r15 runs "
         "amortized warm-up across dozens of earlier metrics; "
-        "tools/lakehouse_attribution.py splits posdel at sf0.1 as "
+        "a round-14/15/16 attribution script, since replaced by "
+        "`profile`, split posdel at sf0.1 as "
         "fixture 11.4 s / replay <1 ms / scan 0.8 s), and the DV / "
         "delete-file decode is KB-sized driver+broadcast work at "
         "every factor. hudi_mor_snapshot_scan reads 1.6 -> 19.1 s "
