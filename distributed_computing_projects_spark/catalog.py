@@ -9,7 +9,11 @@ directory of Parquet datasets:
 - the per-file writer lock service (mp3/src/sdfslock.go) is replaced by
   atomic write-to-temp + rename commit;
 - the master metadata maps (fileMap/numBlocks, mp3/src/sdfsmaster.go:17-25)
-  collapse to "name -> directory" resolved by listing.
+  collapse to "name -> directory" resolved by listing, plus a
+  ``_format`` sidecar per dataset holding its format, schema and data
+  bytes. The master plans one map task for a one-block file
+  (GetLogicalSplits, mp3/src/sdfs.go:94-106); ``get`` likewise reads
+  a dataset no bigger than one file open as one partition.
 
 At 100 TB the catalog would point at a real metastore; this class keeps
 the same narrow API so callers never touch paths.
@@ -23,6 +27,8 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
+from distributed_computing_projects_spark.session import conf_bytes
+
 
 class Catalog:
     def __init__(self, spark: SparkSession, root: str):
@@ -31,7 +37,9 @@ class Catalog:
         os.makedirs(root, exist_ok=True)
 
     def _path(self, name: str) -> str:
-        if "/" in name or name.startswith("."):
+        # an empty name would resolve to the root itself: delete("")
+        # would remove every dataset
+        if not name or "/" in name or name.startswith("."):
             raise ValueError(f"invalid dataset name: {name!r}")
         return os.path.join(self.root, name)
 
@@ -41,7 +49,8 @@ class Catalog:
     # parquet is the default (columnar, pushdown); orc is the other
     # splittable columnar option; json = JSONL interchange.
     #
-    # The format and the exact write-time schema are recorded in a
+    # The format, the exact write-time schema and the data bytes (the
+    # part files' sizes, as ``ls`` lists them) are recorded in a
     # ``_format`` sidecar written inside the same atomic rename as the
     # data, so they can never disagree with the part-files. ``get``
     # reads with that schema, for every format: JSONL is not
@@ -88,7 +97,8 @@ class Catalog:
     def _write_sidecar(self, data_dir: str, fmt: str, df: DataFrame) -> None:
         import json
 
-        meta = {"format": fmt, "schema": json.loads(df.schema.json())}
+        meta = {"format": fmt, "schema": json.loads(df.schema.json()),
+                "bytes": sum(size for _, size in _data_files(data_dir))}
         with open(os.path.join(data_dir, self.SIDECAR), "w") as f:
             json.dump(meta, f)
 
@@ -205,7 +215,18 @@ class Catalog:
         format and the exact write-time schema come from the ``_format``
         sidecar, so callers stay format-agnostic, every format
         round-trips its types losslessly and no Spark job runs to infer
-        a schema."""
+        a schema.
+
+        A dataset whose recorded data bytes are at most
+        ``min(spark.sql.files.openCostInBytes,
+        spark.sql.files.maxPartitionBytes)`` (read from the session on
+        each call) comes back as ONE partition. Spark charges the open
+        cost per file when it packs splits, so such a dataset is worth
+        no more than one task; saying so lets a count or an aggregate
+        over it plan no Exchange and run as one job instead of two.
+        Filters, partition filters and column pruning still push below
+        the coalesce. Sidecars without recorded bytes (written before
+        they were) read as they were written."""
         path = self._path(name)
         if not os.path.exists(path):
             raise FileNotFoundError(name)
@@ -215,7 +236,15 @@ class Catalog:
             from pyspark.sql.types import StructType
 
             reader = reader.schema(StructType.fromJson(meta["schema"]))
-        return reader.format(meta["format"]).load(path)
+        df = reader.format(meta["format"]).load(path)
+        size = meta.get("bytes")
+        conf = self.spark.conf
+        if size is not None and size <= min(
+            conf_bytes(conf, "spark.sql.files.openCostInBytes", 4194304),
+            conf_bytes(conf, "spark.sql.files.maxPartitionBytes", 134217728),
+        ):
+            return df.coalesce(1)
+        return df
 
     def ls(self, name: str) -> list[dict]:
         """Per-file layout of a dataset (≅ ``ls`` replica listing,
@@ -225,15 +254,9 @@ class Catalog:
         path = self._path(name)
         if not os.path.exists(path):
             raise FileNotFoundError(name)
-        out = []
-        for dirpath, dirs, files in os.walk(path):
-            dirs[:] = [d for d in dirs if not d.startswith((".", "_"))]
-            for f in files:
-                if not f.startswith((".", "_")):
-                    full = os.path.join(dirpath, f)
-                    out.append({"file": os.path.relpath(full, path),
-                                "bytes": os.path.getsize(full)})
-        return sorted(out, key=lambda e: e["file"])
+        return sorted(({"file": f, "bytes": size}
+                       for f, size in _data_files(path)),
+                      key=lambda e: e["file"])
 
     def store(self) -> list[str]:
         """All dataset names (≅ ``store``, mp3/src/sdfsmaster.go:206-222)."""
@@ -249,3 +272,15 @@ class Catalog:
         if not os.path.exists(path):
             raise FileNotFoundError(name)
         shutil.rmtree(path)
+
+
+def _data_files(path: str):
+    """``(path relative to the dataset, bytes)`` of each data file of the
+    dataset at ``path``. Names starting with ``_`` or ``.`` (the sidecar,
+    ``_SUCCESS``, ``.crc`` checksums, temp dirs) are not data."""
+    for dirpath, dirs, files in os.walk(path):
+        dirs[:] = [d for d in dirs if not d.startswith((".", "_"))]
+        for f in files:
+            if not f.startswith((".", "_")):
+                full = os.path.join(dirpath, f)
+                yield os.path.relpath(full, path), os.path.getsize(full)

@@ -724,6 +724,8 @@ def main(argv: list[str] | None = None, spark: SparkSession | None = None) -> in
                 # compression, and footer metadata may differ from the
                 # original upload — cheap at CLI scale; a bulk export
                 # would copy files through the FileSystem API instead.
+                # A dataset no bigger than Spark's file open cost reads
+                # as one partition, so it exports as one part file.
                 cat.get(args.name).write.mode("error").parquet(args.local_path)
             elif args.cmd == "ls":
                 for f in cat.ls(args.name):

@@ -31,11 +31,12 @@ module in round 9 when the media decode family needed it too.
 from __future__ import annotations
 
 import os
-import re
 from typing import Callable, Iterable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
+
+from distributed_computing_projects_spark.session import conf_bytes
 
 # Output rows per Arrow batch a row stage sends back to the JVM.
 BATCH_ROWS = 8192
@@ -50,18 +51,8 @@ def spread(df: DataFrame) -> DataFrame:
         return df
     if not files or len(files) >= target:
         return df
-    raw = str(spark.conf.get("spark.sql.files.maxPartitionBytes",
-                             "134217728")).strip().lower()
-    # Spark byte-strings: bare digits or k/m/g/t suffix (optional 'b');
-    # stripping non-digits would turn '128m' into 128 BYTES and
-    # silently disable the guard.
-    m = re.fullmatch(r"(\d+)([kmgt]?)b?", raw)
-    if m:
-        max_split = int(m.group(1)) * {
-            "": 1, "k": 1 << 10, "m": 1 << 20, "g": 1 << 30, "t": 1 << 40,
-        }[m.group(2)]
-    else:
-        max_split = 134217728
+    max_split = conf_bytes(spark.conf, "spark.sql.files.maxPartitionBytes",
+                           134217728)
     est_splits = 0
     for f in files:
         if f.startswith("file:"):

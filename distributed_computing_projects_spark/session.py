@@ -42,6 +42,7 @@ Spark's scheduler. Every knob here is chosen for the 100 TB target:
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import SparkSession
 
@@ -74,6 +75,21 @@ def hadoop_conf_from_env(env=None) -> dict[str, str]:
             prefix = "" if k.startswith("spark.") else "spark.hadoop."
             out[prefix + k] = v.strip()
     return out
+
+
+def conf_bytes(conf, key: str, default: int) -> int:
+    """The byte-size conf ``key`` of ``conf`` (``spark.conf``, or any
+    mapping with ``get``) in bytes, or ``default`` when it is unset or
+    does not parse. Spark byte strings are bare digits or a k/m/g/t
+    suffix with an optional 'b' (``'128m'``, ``'4194304b'``, ``'1g'``);
+    stripping the non-digits instead would read ``'128m'`` as 128
+    bytes."""
+    raw = str(conf.get(key, str(default))).strip().lower()
+    m = re.fullmatch(r"(\d+)([kmgt]?)b?", raw)
+    if m is None:
+        return default
+    shift = {"": 0, "k": 10, "m": 20, "g": 30, "t": 40}[m.group(2)]
+    return int(m.group(1)) << shift
 
 
 def byte_coalesced(spark: SparkSession) -> SparkSession:

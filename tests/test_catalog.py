@@ -1,3 +1,5 @@
+import pytest
+
 from distributed_computing_projects_spark.catalog import Catalog
 from distributed_computing_projects_spark.sources import load_table
 
@@ -114,3 +116,19 @@ def test_put_rejects_unknown_format(spark, sf_dir, tmp_path):
     except ValueError:
         raised = True
     assert raised
+
+
+def test_empty_name_is_rejected(spark, sf_dir, tmp_path):
+    """An empty name used to resolve to the catalog root, so
+    ``delete("")`` removed every dataset."""
+    import pytest
+
+    cat = Catalog(spark, str(tmp_path / "cat9"))
+    cat.put("nation", load_table(spark, sf_dir, "nation"))
+    for call in (cat.delete, cat.ls, cat.get):
+        with pytest.raises(ValueError):
+            call("")
+    with pytest.raises(ValueError):
+        cat.put("", load_table(spark, sf_dir, "region"), mode="overwrite")
+    assert cat.store() == ["nation"]
+    assert cat.get("nation").count() == 25

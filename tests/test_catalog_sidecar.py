@@ -1,7 +1,9 @@
-"""The catalog's ``_format`` sidecar records every dataset's schema:
-``get`` reads with it (no Spark job infers a schema, partition columns
-keep their written types), sidecars without a schema still read by
-inference, and ``ls`` lists the part files of partitioned datasets."""
+"""The catalog's ``_format`` sidecar records every dataset's schema and
+data bytes: ``get`` reads with the schema (no Spark job infers one,
+partition columns keep their written types) and reads a dataset no
+bigger than Spark's file open cost as one partition; sidecars without
+a schema still read by inference, sidecars without bytes as they were
+written, and ``ls`` lists the part files of partitioned datasets."""
 
 from __future__ import annotations
 
@@ -10,6 +12,8 @@ import gc
 import json
 import os
 import warnings
+
+from pyspark.sql import functions as F
 
 from distributed_computing_projects_spark.catalog import Catalog
 from distributed_computing_projects_spark.profile import job_group
@@ -29,6 +33,67 @@ def _put_all(cat, df):
     # threshold (32), above which listing them starts a job
     cat.put_partitioned("li_part", df, ["l_returnflag"])
     return [f"li_{fmt}" for fmt in Catalog.FORMATS] + ["li_part"]
+
+
+def _count(spark, df):
+    """Rows, jobs started, and whether the executed plan has an
+    Exchange, for the plan ``df.count()`` runs."""
+    counted = df.groupBy().count()
+    with job_group(spark) as jobs:
+        n = counted.collect()[0][0]
+    plan = counted._jdf.queryExecution().executedPlan().toString()
+    return n, len(jobs()), "Exchange" in plan
+
+
+def _results(df, cols):
+    """Sorted rows and a sorted filtered aggregate of ``df``."""
+    agg = (df.where(F.col("l_quantity") >= 10).groupBy("l_returnflag")
+           .agg(F.count("*"), F.sum("l_quantity")))
+    return (sorted(map(tuple, df.select(*cols).collect())),
+            sorted(map(tuple, agg.collect())))
+
+
+def test_small_dataset_reads_as_one_partition(spark, sf_dir, tmp_path):
+    """Forced-path equality: a dataset within the open cost counts in
+    one job with no Exchange; with the open cost set below its size it
+    takes Spark's own split path (two jobs, an Exchange), and both
+    paths return the same rows and aggregate."""
+    cat = Catalog(spark, str(tmp_path / "cat"))
+    li = _lineitem(spark, sf_dir)
+    names = _put_all(cat, li)
+    n = li.count()
+    small_path = {}
+    for name in names:
+        meta = cat._read_meta(os.path.join(cat.root, name))
+        assert meta["bytes"] == sum(f["bytes"] for f in cat.ls(name)), name
+        assert meta["bytes"] > 1024, name
+        got = cat.get(name)
+        assert _count(spark, got) == (n, 1, False), name
+        small_path[name] = _results(got, li.columns)
+    key = "spark.sql.files.openCostInBytes"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "1024")
+    try:
+        for name in names:
+            got = cat.get(name)
+            assert _count(spark, got) == (n, 2, True), name
+            assert _results(got, li.columns) == small_path[name], name
+    finally:
+        spark.conf.set(key, old)
+
+
+def test_sidecar_without_bytes_reads_as_written(spark, sf_dir, tmp_path):
+    cat = Catalog(spark, str(tmp_path / "cat"))
+    li = _lineitem(spark, sf_dir)
+    n = li.count()
+    for name in _put_all(cat, li):
+        sidecar = os.path.join(cat.root, name, Catalog.SIDECAR)
+        with open(sidecar) as f:
+            meta = json.load(f)
+        del meta["bytes"]
+        with open(sidecar, "w") as f:
+            json.dump(meta, f)
+        assert _count(spark, cat.get(name)) == (n, 2, True), name
 
 
 def test_get_starts_no_job(spark, sf_dir, tmp_path):

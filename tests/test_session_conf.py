@@ -9,8 +9,19 @@ from __future__ import annotations
 
 from distributed_computing_projects_spark.session import (
     byte_coalesced,
+    conf_bytes,
     get_spark,
 )
+
+
+def test_conf_bytes_parses_spark_byte_strings():
+    for raw, want in (("128m", 128 << 20), ("4194304b", 4194304),
+                      ("134217728", 134217728), ("1g", 1 << 30),
+                      ("4MB", 4 << 20), (" 2K ", 2048)):
+        assert conf_bytes({"k": raw}, "k", 7) == want, raw
+    # unset or unparseable: the caller's default, never a guess
+    assert conf_bytes({}, "k", 7) == 7
+    assert conf_bytes({"k": "1.5g"}, "k", 7) == 7
 
 
 def test_one_session_carries_byte_coalescing(spark, sf_dir):
